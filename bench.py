@@ -1,139 +1,15 @@
-"""Benchmark harness (driver contract): run the headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness and its stdout contract.
 
-Execution is forced with the no-op sink (full computation, no driver
-collect). The headline set spans the engine's surface: scans+joins+aggs,
-top-k, windows, event windows, dedup (MinHash-LSH), similarity search,
-text profiling, and the multimodal pandas hop. The TAIL set adds the
-expensive families — multi-join TPC-H heavies, FULL-corpus near-dup
-(d2/d3 with no doc_id slice), iterative connected components, k-means,
-PageRank, MERGE, and inline-vs-persisted-index ANN — at one rep each so
-their regressions are visible without doubling wall time.
+Runs every row of ``ROWS`` against $SPARK_GRAFT_SF_DIR on
+local[$SPARK_GRAFT_CPUS]. Each rep forces the plan through the no-op
+sink (full computation, no collect); a row's time is the best of
+its reps. Prints two JSON lines: the per-query detail, then a compact
+last line ``{"metric", "value", "unit", "n_queries", "sf"}`` that a
+consumer parses from a short tail capture. Every rep time lands in
+BENCH_DETAIL.json under "reps".
 
-ROUND-3→4 INFLATION ADJUDICATED (the uniform ~1.45x slowdown on
-unchanged queries in BENCH_r03): an A/B on the same host, run
-back-to-back in round 4, timed the 15-query common subset at 14.40s on
-HEAD and **14.42s on the round-2 tree itself** (git archive of the r2
-snapshot, its own bench.py) vs the 11.67s BENCH_r02 recorded. Identical
-code reproduces the inflated number, so the cause is host/session-level
-(co-tenant CPU), not any repo change — no plan regressed. Mitigation:
-HEADLINE is best-of-3 (was 2) so the min gets two chances at a quiet
-window; cross-round comparisons should use ratios within one bench run,
-not absolute seconds across rounds.
-
-ROUND-6 HOST-DRIFT NOTE (late in the round): the final r6 detail
-(220.4s/130 queries) reads ~1.25-1.3x the 02:11 UTC refresh on the
-IDENTICAL committed plans — two full re-runs agreed (225.0/220.4s),
-and an isolated warm-session probe of three untouched queries
-(h5 1.02->1.85s, a4 1.80->2.81s, dax 1.28->2.11s) reproduced the
-ratio with zero repo changes in between, so the drift is host-level
-(co-tenant CPU), not a plan regression. Read r6-vs-r5 trends as
-within-run ratios, not absolute seconds.
-
-ROUND-9 HOST-DRIFT NOTE (judge-adjudicated): the r9 driver run read
-177.5 s / 143 queries vs 162.6 s in r8 (+9.2%) on plans none of the
-round's commits touched; the builder's committed same-HEAD quiet-host
-record was 157.7 s (-3% vs r8) with every large driver-side
-"regression" reversing (q15 3.88→1.74, v5 3.23→1.89). Same broad
-uniform-inflation pattern as the adjudicated r3→r4 and r6 precedents
-below. The driver's 177.5 s detail is committed as the round-9
-BENCH_DETAIL.json record; the record guard (next note) exists so
-future driver runs carry this evidence themselves.
-
-ROUND-10 HOST NOTE: four full builder runs at the same HEAD read
-188.2 / 202.5 / 166.9 / 176.0 s with median per-row ratios
-1.18/1.32/1.07/1.11x vs the committed 157.7 s record — broad uniform
-inflation on plans this round did not touch (zero plan-code commits),
-the same host-phase signature as the r3/r6/r9 adjudications, present
-in every window the day offered. The 202.5 s run is the record guard's
-first live firing: 34 rows exceeded 1.5x their committed record and
-each carries its guard rep in that run's reps — details committed as
-BENCH_PROBES_r10.json for audit. The COMMITTED BENCH_DETAIL.json
-remains the 157.7 s quiet-host record, which is the per-row baseline
-the guard should compare against — the plans are unchanged since it
-was taken.
-
-ROUND-11 HOST NOTE: the four-probe series (186.2 / 179.3 / 168.5 /
-145.9 s, medians 1.20/1.14/1.06/0.90x vs the 157.7 s record) caught a
-co-tenant phase DECAYING end to end over ~3 h; the final probe landed
-in a genuinely quiet window and RATCHETED the committed record to
-145.9 s / 144 queries (p12_greedy_pack joined the tail this round at
-0.591 s). Series committed as BENCH_PROBES_r11.json. Round 11 also
-moved the record read to `git show HEAD:BENCH_DETAIL.json` (the
-on-disk file is overwritten by every run — a workspace benching
-repeatedly would otherwise silently ratchet the guard baseline to the
-latest, possibly inflated, run), made the retry-session Python-worker
-warmup unconditional, and excluded booleans from record values.
-
-ROUND-10 METHODOLOGY CHANGE (record guard): every row's best-of-n is
-checked against the COMMITTED BENCH_DETAIL.json per-row record for the
-same sf (read at bench start). A best-of-n > 1.5x the record (+0.5s
-absolute) earns ONE extra rep — in a final fresh session for
-self-contained rows, in-session for shared-state rows — and the row's
-name lands in BENCH_DETAIL.json "record_guard". Rationale (VERDICT r9
-"What's wrong #1"): the intra-run spread guard is blind to a co-tenant
-slow phase spanning all of a row's reps — the r9 driver read
-q15_pk_uniqueness at [3.881, 3.881] (spread 1.0) against a committed
-quiet-host 1.742s, and only the builder's counter-run separated drift
-from regression. With the record check, the driver's own artifact
-carries either quiet numbers or guard-rep evidence for every >1.5x row.
-
-ROUND-8 METHODOLOGY CHANGES: (1) the d3 md5-vs-xxhash64 pair shares ONE
-fresh session and ONE untimed shingle-table materialization; each
-variant is timed as the hasher-specific delta (signatures → bands →
-candidates → verification) — round 7 re-shingled the full corpus twice,
-~35s of 218s wall, for a comparison the shingle build contributes
-nothing to (VERDICT r7 "What's wrong #1"); path equivalence pinned by
-tests/test_dedup.py::test_d3_shared_shingles_equivalence. (2) Per-rep
-times for EVERY row now land in BENCH_DETAIL.json ("reps", plus a
-"noisy" list of rows whose spread exceeds 1.5x), and fresh-session
-tails get ONE extra rep when their best-of-3 spread exceeds 1.5x — the
-driver's r7 run doubled d3/ml1/ml2 on unchanged code (host noise on
-many-job iterative tails), and the per-rep record lets a judge tell
-drift from regression without a quiet-host rerun (VERDICT r7 item 3).
-
-ROUND-7 METHODOLOGY CHANGE: d6's connected-components labels are
-materialized ONCE per bench process (localCheckpoint, untimed — d6's
-own row prices that computation) and d15/p15 are timed as the DELTA
-over the shared labels, the way a production pipeline runs them
-(VERDICT r6 "What's wrong #1": the round-6 bench paid the same CC
-fixpoint three times, ~37s of 226s wall). Registry entries remain
-standalone (labels=None recomputes) — the driver's correctness rows
-still price the full dependency; equivalence of the two paths is
-pinned by tests/test_dedup.py::test_d6_dependents_shared_labels_equivalence.
-
-ROUND-6 METHODOLOGY CHANGES: (1) the LAST stdout line is now a compact
-JSON record without the per-query dict — round 5's 76-query detail line
-outgrew the driver's ~2KB tail capture and the round recorded no parsed
-bench at all; the detail still prints (line before last) and lands in
-BENCH_DETAIL.json. (2) ml3 moved to FRESH_SESSION_TAIL (slowest tail,
-compute-bound exact triangle count — the clean-session best-of-3
-methodology exists for exactly this profile; the plan itself is already
-the measured-optimal algorithm). (3) TAIL gains t3/q8 (previously
-missed) and the round-6 additions r11/q10/e13/p13; d15 joins the
-fresh-session cohort because it re-runs the full d6 cluster build.
-
-ROUND-5 METHODOLOGY CHANGES: (1) heavy iterative/full-corpus tails run
-in FRESH SparkContexts (see FRESH_SESSION_TAIL) — round 4's in-session
-d6 row (38.0s) was a session-state artifact, 3.5x the judge's direct
-10.7s measurement; (2) the d6 cold-vs-warm 3x gap itself was profiled
-to AQE byte-based coalescing collapsing compute-bound dedup shuffles to
-ONE task (tiny-bytes/huge-compute corpus) — fixed in session.py with a
-64KB coalescing floor (d6 cold 30.4s → ~15s, warm ~9s; measured
-best-of-2 fresh-session row this round: 9.7s). ml2's checkpoint
-cadence-2 (operators/graph.py) recorded 10.75s vs r4's 10.5s — on the
-quiet-host record the cadence change is a wash, not the ~25% the
-builder's contended A/B suggested; kept because fewer jobs per round
-is strictly less scheduler pressure at cluster scale and the fixpoint
-is cadence-invariant (pinned by test). (3) The gap-fill family
-(r5/r6), the SCD-2 as-of composition (r7), and the round-5 additions
-(x15-x18, a18/a19, r8, sc3/sc4, e8-e10, q6/q7, ml3-ml5) joined TAIL,
-as did every late round-5 addition (see the "late round-5 additions"
-block in TAIL) — all sub-5s at sf0.1; ml3's
-closing probe was rewritten to broadcast the edge list (26s → ~13s
-warm at sf0.1, see triangle_counts docstring).
+Performance verdicts come from ``perfbench/``; this harness keeps the
+144-row wall-time record comparable from one change to the next.
 """
 
 from __future__ import annotations
@@ -141,353 +17,201 @@ from __future__ import annotations
 import json
 import os
 import re
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from etl_power_bi_dashboard_spark.operators import similarity
 from etl_power_bi_dashboard_spark.plans import REGISTRY
+from etl_power_bi_dashboard_spark.plans.dedup_plans import (
+    d3_shingle_table,
+    q_d2_ngram_jaccard,
+    q_d3_minhash_lsh,
+)
+from etl_power_bi_dashboard_spark.plans.similarity_plans import ivf_parts
 from etl_power_bi_dashboard_spark.session import get_spark
 
-HEADLINE = [
-    "h1_pricing_summary",
-    "h5_region_volume",
-    "a1_sales_by_date",
-    "a2_sales_by_month",
-    "a3_sales_by_category",
-    "a4_sales_by_state",
-    "dax_measures",
-    "t1_topk",
-    "w2_running_total",
-    "e1_tumbling_hourly",
-    "e3_session_windows",
-    "d3_minhash_lsh",
-    "v1_cosine_topk",
-    "x2_quality",
-    "x12_unigram_score",
-    "p11_sequence_pack",
-    "m1_multimodal_features",
+# Where a row runs. SHARED rows run in order in the first session, after
+# the untimed warm-ups. A FRESH row gets its own SparkContext: state
+# accumulated over ~1,400 earlier stages (shuffle files, checkpoint
+# blocks) made the heavy iterative rows up to 3.5x slower in-session.
+# D3_SHINGLES rows share one fresh session and one untimed shingle
+# table, so each times only its hasher. D6_LABELS rows stay in the
+# session of the d6_dup_clusters row before them and consume its labels,
+# materialized once untimed, as a production pipeline would.
+SHARED, FRESH, D3_SHINGLES, D6_LABELS = (
+    "shared", "fresh", "d3-shingles", "d6-labels"
+)
+
+# (name, reps, session), run top to bottom. Three reps give the best-of
+# two chances at a quiet window; the cheaper shared tail rows take two.
+ROWS = [
+    ("h1_pricing_summary",             3, SHARED),
+    ("h5_region_volume",               3, SHARED),
+    ("a1_sales_by_date",               3, SHARED),
+    ("a2_sales_by_month",              3, SHARED),
+    ("a3_sales_by_category",           3, SHARED),
+    ("a4_sales_by_state",              3, SHARED),
+    ("dax_measures",                   3, SHARED),
+    ("t1_topk",                        3, SHARED),
+    ("w2_running_total",               3, SHARED),
+    ("e1_tumbling_hourly",             3, SHARED),
+    ("e3_session_windows",             3, SHARED),
+    ("d3_minhash_lsh",                 3, SHARED),
+    ("v1_cosine_topk",                 3, SHARED),
+    ("x2_quality",                     3, SHARED),
+    ("x12_unigram_score",              3, SHARED),
+    ("p11_sequence_pack",              3, SHARED),
+    ("m1_multimodal_features",         3, SHARED),
+    # expensive tails
+    ("h9_product_profit",              2, SHARED),
+    ("h21_waiting_supplier",           2, SHARED),
+    ("d8_chunk_dedup",                 2, SHARED),
+    ("d10_cross_source_contamination", 2, SHARED),
+    ("e6_retention_cohorts",           2, SHARED),
+    ("u1_scd1_merge",                  2, SHARED),
+    ("v2_ann_ivf",                     2, SHARED),
+    ("v2_ann_ivf_indexed",             2, SHARED),
+    ("x14_pmi_collocations",           2, SHARED),
+    ("d12_fuzzy_title_match",          2, SHARED),
+    ("a16_gini_concentration",         2, SHARED),
+    ("r5_gapfill_locf",                2, SHARED),
+    ("r6_gapfill_interpolate",         2, SHARED),
+    ("r7_asof_against_scd2",           2, SHARED),
+    ("x15_winnowing",                  2, SHARED),
+    ("x16_doc_entropy",                2, SHARED),
+    ("a18_corr_matrix",                2, SHARED),
+    ("r8_resample_ohlc",               2, SHARED),
+    ("sc3_bloom_prune_join",           2, SHARED),
+    ("x17_bm25",                       2, SHARED),
+    ("e9_rolling_zscore",              2, SHARED),
+    ("ml4_knn_classify",               2, SHARED),
+    ("ml5_linreg_trend",               2, SHARED),
+    ("x18_cooccurrence",               2, SHARED),
+    ("e8_transition_matrix",           2, SHARED),
+    ("e10_attribution",                2, SHARED),
+    ("sc4_skew_report",                2, SHARED),
+    ("q6_profile_summary",             2, SHARED),
+    ("q7_chi2_independence",           2, SHARED),
+    ("a19_percentiles_cont",           2, SHARED),
+    ("r9_asof_forward",                2, SHARED),
+    ("e11_rolling_active_users",       2, SHARED),
+    ("u5_incremental_rollup",          2, SHARED),
+    ("u6_apply_cdc",                   2, SHARED),
+    ("p14_weighted_reservoir",         2, SHARED),
+    ("p12_greedy_pack",                2, SHARED),
+    ("x19_lang_confusion",             2, SHARED),
+    ("ml6_ab_proportion_test",         2, SHARED),
+    ("x20_chunk_split",                2, SHARED),
+    ("ml7_naive_bayes",                2, SHARED),
+    ("sc5_distributed_row_number",     2, SHARED),
+    ("u7_snapshot_diff",               2, SHARED),
+    ("x21_bigram_score",               2, SHARED),
+    ("a20_mad",                        2, SHARED),
+    ("e12_time_to_convert",            2, SHARED),
+    ("m5_audio_frames",                2, SHARED),
+    ("d13_semantic_clusters",          2, SHARED),
+    ("r10_peak_concurrency",           2, SHARED),
+    ("q9_fk_audit",                    2, SHARED),
+    ("x23_zipf_fit",                   2, SHARED),
+    ("ml8_markov_eval",                2, SHARED),
+    ("x22_temperature_mix",            2, SHARED),
+    ("d14_minhash_calibration",        2, SHARED),
+    ("t3_keyset_page",                 2, SHARED),
+    ("q8_volume_anomaly",              2, SHARED),
+    ("r11_asof_nearest",               2, SHARED),
+    ("q10_table_fingerprint",          2, SHARED),
+    ("e13_interarrival",               2, SHARED),
+    ("p13_length_buckets",             2, SHARED),
+    ("a21_seasonality",                2, SHARED),
+    ("x25_ngram_novelty",              2, SHARED),
+    ("a22_trimmed_mean",               2, SHARED),
+    ("v5_label_coherence",             2, SHARED),
+    ("m6_frame_dedup",                 2, SHARED),
+    ("v6_int8_recall",                 2, SHARED),
+    ("q11_benford",                    2, SHARED),
+    ("sc6_range_partition_plan",       2, SHARED),
+    ("v7_pq_adc",                      2, SHARED),
+    ("r12_calendarize",                2, SHARED),
+    ("a23_rfm_segments",               2, SHARED),
+    ("a24_ewma",                       2, SHARED),
+    ("e14_top_paths",                  2, SHARED),
+    ("q12_expectations",               2, SHARED),
+    ("ml9_also_bought",                2, SHARED),
+    ("v8_ivf_probe_sweep",             2, SHARED),
+    ("x26_rake_keywords",              2, SHARED),
+    ("x27_burstiness",                 2, SHARED),
+    ("a25_yoy_growth",                 2, SHARED),
+    ("a26_cohort_ltv",                 2, SHARED),
+    ("a27_pareto_abc",                 2, SHARED),
+    ("ml10_decision_stump",            2, SHARED),
+    ("r13_business_days",              2, SHARED),
+    ("e15_bounce_matrix",              2, SHARED),
+    ("x28_kl_divergence",              2, SHARED),
+    ("x29_oov_rate",                   2, SHARED),
+    ("m7_scene_cuts",                  2, SHARED),
+    ("x30_heaps_fit",                  2, SHARED),
+    ("a28_price_volume_mix",           2, SHARED),
+    ("v9_mmr_rerank",                  2, SHARED),
+    ("e16_event_lateness",             2, SHARED),
+    ("q13_fanout_profile",             2, SHARED),
+    ("e17_survival_horizons",          2, SHARED),
+    ("d17_lsh_s_curve",                2, SHARED),
+    ("x31_tokenizer_fertility",        2, SHARED),
+    ("e18_growth_accounting",          2, SHARED),
+    ("ml11_oner",                      2, SHARED),
+    ("r14_peak_window_overlap",        2, SHARED),
+    ("u9_bitemporal_lookup",           2, SHARED),
+    ("q14_ks_test",                    2, SHARED),
+    ("a31_dow_hour_heatmap",           2, SHARED),
+    ("m8_vad_segments",                2, SHARED),
+    ("r15_interval_coalesce",          2, SHARED),
+    ("sc7_zone_map_skipping",          2, SHARED),
+    ("ml12_score_bias_auc",            2, SHARED),
+    ("p16_lang_cap_sample",            2, SHARED),
+    ("d16_containment_pairs",          2, SHARED),
+    ("ml13_gain_lift",                 2, SHARED),
+    ("ml14_pr_curve",                  2, SHARED),
+    ("a32_abc_xyz",                    2, SHARED),
+    ("e19_autocorrelation",            2, SHARED),
+    ("q15_pk_uniqueness",              2, SHARED),
+    ("ml15_ols2",                      2, SHARED),
+    ("q16_sequence_gaps",              2, SHARED),
+    ("u10_scd_compaction",             2, SHARED),
+    ("r16_pairwise_overlap",           2, SHARED),
+    ("v10_filtered_ann",               2, SHARED),
+    ("ml16_calibration",               2, SHARED),
+    ("u11_cdc_net_effect",             2, SHARED),
+    # heavy iterative and full-corpus rows
+    ("d2_ngram_jaccard_full",          3, FRESH),
+    ("d3_minhash_lsh_full",            3, D3_SHINGLES),
+    ("d3_minhash_lsh_fast",            3, D3_SHINGLES),
+    ("ml1_kmeans",                     3, FRESH),
+    ("ml2_pagerank",                   3, FRESH),
+    ("ml3_triangle_count",             3, FRESH),
+    ("d6_dup_clusters",                3, FRESH),
+    ("d15_keep_longest",               3, D6_LABELS),
+    ("p15_leakage_safe_split",         3, D6_LABELS),
 ]
 
-# Expensive tails: the genuinely costly families (multi-join TPC-H
-# heavies, FULL-corpus dedup — no doc_id slice — iterative components,
-# k-means) so a regression there is visible round-over-round. Best-of-2
-# each; the heavy iterative/full-corpus members run ISOLATED (see
-# FRESH_SESSION_TAIL).
-TAIL = [
-    "h9_product_profit",
-    "h21_waiting_supplier",
-    "d8_chunk_dedup",
-    "d10_cross_source_contamination",
-    "e6_retention_cohorts",
-    "u1_scd1_merge",
-    "v2_ann_ivf",
-    "v2_ann_ivf_indexed",
-    "x14_pmi_collocations",
-    "d12_fuzzy_title_match",
-    "a16_gini_concentration",
-    "r5_gapfill_locf",
-    "r6_gapfill_interpolate",
-    "r7_asof_against_scd2",
-    # round-5 additions
-    "x15_winnowing",
-    "x16_doc_entropy",
-    "a18_corr_matrix",
-    "r8_resample_ohlc",
-    "sc3_bloom_prune_join",
-    "x17_bm25",
-    "e9_rolling_zscore",
-    "ml4_knn_classify",
-    "ml5_linreg_trend",
-    "x18_cooccurrence",
-    "e8_transition_matrix",
-    "e10_attribution",
-    "sc4_skew_report",
-    "q6_profile_summary",
-    "q7_chi2_independence",
-    "a19_percentiles_cont",
-    "r9_asof_forward",
-    "e11_rolling_active_users",
-    "u5_incremental_rollup",
-    "u6_apply_cdc",
-    "p14_weighted_reservoir",
-    # round-11 addition: first-fit packing joined the oracle-backed set
-    # this round (recursive-CTE replay oracle) and is priced like its
-    # p11/p14 siblings; Python workers are warm by TAIL time (the m1
-    # headline row forked them), so the grouped-map pass measures the
-    # operator, not worker spin-up. No committed per-row record until
-    # the next quiet run establishes one (the record guard skips
-    # record-less rows).
-    "p12_greedy_pack",
-    "x19_lang_confusion",
-    "ml6_ab_proportion_test",
-    # late round-5 additions
-    "x20_chunk_split",
-    "ml7_naive_bayes",
-    "sc5_distributed_row_number",
-    "u7_snapshot_diff",
-    "x21_bigram_score",
-    "a20_mad",
-    "e12_time_to_convert",
-    "m5_audio_frames",
-    "d13_semantic_clusters",
-    "r10_peak_concurrency",
-    "q9_fk_audit",
-    "x23_zipf_fit",
-    "ml8_markov_eval",
-    "x22_temperature_mix",
-    "d14_minhash_calibration",
-    # round-6 additions: the two registry entries TAIL had missed, then
-    # the five queries built this round
-    "t3_keyset_page",
-    "q8_volume_anomaly",
-    "r11_asof_nearest",
-    "q10_table_fingerprint",
-    "e13_interarrival",
-    "p13_length_buckets",
-    # late round-6 additions (behind the round-6 window; front round 7)
-    "a21_seasonality",
-    "x25_ngram_novelty",
-    "a22_trimmed_mean",
-    "v5_label_coherence",
-    "m6_frame_dedup",
-    "v6_int8_recall",
-    "q11_benford",
-    "sc6_range_partition_plan",
-    "v7_pq_adc",
-    "r12_calendarize",
-    "a23_rfm_segments",
-    "a24_ewma",
-    "e14_top_paths",
-    "q12_expectations",
-    "ml9_also_bought",
-    "v8_ivf_probe_sweep",
-    "x26_rake_keywords",
-    "x27_burstiness",
-    "a25_yoy_growth",
-    "a26_cohort_ltv",
-    "a27_pareto_abc",
-    "ml10_decision_stump",
-    "r13_business_days",
-    "e15_bounce_matrix",
-    "x28_kl_divergence",
-    "x29_oov_rate",
-    "m7_scene_cuts",
-    "x30_heaps_fit",
-    "a28_price_volume_mix",
-    "v9_mmr_rerank",
-    "e16_event_lateness",
-    "q13_fanout_profile",
-    "e17_survival_horizons",
-    "d17_lsh_s_curve",
-    "x31_tokenizer_fertility",
-    "e18_growth_accounting",
-    "ml11_oner",
-    "r14_peak_window_overlap",
-    "u9_bitemporal_lookup",
-    "q14_ks_test",
-    "a31_dow_hour_heatmap",
-    "m8_vad_segments",
-    "r15_interval_coalesce",
-    "sc7_zone_map_skipping",
-    "ml12_score_bias_auc",
-    "p16_lang_cap_sample",
-    "d16_containment_pairs",
-    "ml13_gain_lift",
-    "ml14_pr_curve",
-    "a32_abc_xyz",
-    "e19_autocorrelation",
-    "q15_pk_uniqueness",
-    "ml15_ols2",
-    "q16_sequence_gaps",
-    "u10_scd_compaction",
-    "r16_pairwise_overlap",
-    # round-7 additions
-    "v10_filtered_ann",
-    "ml16_calibration",
-    "u11_cdc_net_effect",
-]
-
-# Round-5 fix for the d6=38s artifact: round 4's TAIL ran inside a
-# session that had already executed ~1,400 stages, and the accumulated
-# state (shuffle files, localCheckpoint blocks from HEADLINE + earlier
-# tails) inflated heavy iterative tails 3x — the judge measured the
-# identical d6 plan at 10.7s warm on a quiet host vs the 38.0s recorded
-# row. These queries therefore each run in a FRESH SparkContext
-# (spark.stop() + rebuild — empty block manager, empty shuffle tracker;
-# the restart itself is untimed), keeping best-of-2 WITHIN the clean
-# session so rep 1 absorbs that session's codegen/JIT and the min
-# reports the engine, not the bootstrap.
-FRESH_SESSION_TAIL = [
-    "d2_ngram_jaccard_full",
-    "d3_minhash_lsh_full",
-    "d3_minhash_lsh_fast",
-    "ml1_kmeans",
-    "ml2_pagerank",
-    # ml3 moved here in round 6: at ~12s it is the slowest tail and, as
-    # an exact full-graph triangle count (41M wedges at sf0.1), it is
-    # exactly the compute-bound heavy the fresh-session best-of-3
-    # methodology exists for. The plan already runs the optimal
-    # degree-ordered compact-forward algorithm (the array-adjacency
-    # alternative measured 1.7x slower — operators/graph.py docstring);
-    # the cost is the workload, so the methodology absorbs host noise
-    # rather than the plan being re-litigated each round.
-    "ml3_triangle_count",
-    # d6 + its dependents run LAST, in ONE fresh session (round-7
-    # methodology change, per the round-6 verdict): d6's row is the
-    # standalone connected-components cost as before, then the labels
-    # table is materialized ONCE (localCheckpoint, untimed — it is the
-    # stage d6's row just priced) and d15/p15 are timed as the DELTA
-    # over those labels (keep-policy rank window / split hash + join),
-    # exactly how a production pipeline runs them: the fixpoint is paid
-    # once, not three times. Round 6 timed d15/p15 standalone instead
-    # (11.3+12.3+13.4s ≈ 37s of 226s wall re-paying the same fixpoint);
-    # the registry entries stay standalone for the driver (labels=None
-    # default recomputes).
-    "d6_dup_clusters",
-    "d15_keep_longest",
-    "p15_leakage_safe_split",
-]
-
-# Members of FRESH_SESSION_TAIL that consume d6's materialized labels
-# instead of restarting the session: they run right after d6 in its
-# clean session, timed as delta-over-labels.
-_D6_DEPENDENTS = {"d15_keep_longest", "p15_leakage_safe_split"}
-
-# The md5-vs-xxhash64 portability pair shares ONE fresh session and ONE
-# untimed shingle-table materialization (round-8 methodology, per the
-# round-7 verdict: both variants re-shingled the full corpus from
-# scratch, ~35s of 218s wall for a hasher comparison the shingle build
-# contributes nothing to). Each variant is timed as the hasher-specific
-# delta: signatures → bands → candidates → exact verification. Path
-# equivalence is pinned by tests/test_dedup.py::
-# test_d3_shared_shingles_equivalence; the registry d3_minhash_lsh
-# entry stays standalone (shingles=None) for the driver.
+# the bench-only full-corpus d3 variants and their hashers
 _D3_HASHER = {"d3_minhash_lsh_full": "md5", "d3_minhash_lsh_fast": "xxhash64"}
 
-# Fresh-session reps whose best-of spread exceeds this ratio get ONE
-# extra rep (round-8 methodology, per the round-7 verdict: the driver's
-# r7 run doubled d3/ml1/ml2 on unchanged code — host noise concentrated
-# on the many-job iterative tails; per-rep times now land in
-# BENCH_DETAIL.json so a judge can tell drift from regression without a
-# quiet-host rerun).
-_NOISE_RATIO = 1.5
-# The "noisy" flag additionally requires this much ABSOLUTE spread:
-# sub-second rows routinely show >1.5x between a cold first rep
-# (codegen/JIT warm-up) and the rest — 25 of the 143 rows flagged on a
-# quiet host, burying the signal the list exists for (multi-second
-# iterative tails whose spread could read as a driver-visible
-# regression). A row can only be mistaken for a 2x regression if its
-# spread is material in seconds.
-_NOISE_ABS_FLOOR = 2.0
-
-# ROUND-10 RECORD GUARD (VERDICT r9 "What's wrong #1"): the intra-run
-# spread guard above is blind to a co-tenant slow phase that spans ALL
-# of a row's reps — the r9 driver read q15_pk_uniqueness at
-# [3.881, 3.881] (spread exactly 1.0, guard silent) against a committed
-# same-HEAD quiet-host 1.742s. So every row's best-of-n is ALSO checked
-# against the committed BENCH_DETAIL.json record for the same sf; a
-# best-of-n > _RECORD_RATIO x the record earns ONE extra rep — in a
-# final fresh session for self-contained rows (escaping a slow phase
-# that spanned the row's original position), in-session for rows whose
-# plan consumes shared materialized state (d6 labels / d3 shingles,
-# alive only in their own session). Triggered names land in
-# BENCH_DETAIL.json "record_guard" so the judge sees, per row, either
-# quiet numbers or the guard-rep evidence. The absolute floor is LOWER
-# than _NOISE_ABS_FLOOR: the r9 canary v5_label_coherence inflated
-# 1.89->3.23s (1.34s absolute) and must trigger; the extra rep costs
-# only the row's own runtime.
-_RECORD_RATIO = 1.5
-_RECORD_ABS_FLOOR = 0.5
-
-
-def _record_guard_triggers(best: float, rec) -> bool:
-    """True when a row's best-of-n exceeds the committed per-row record
-    enough to look like a regression (ratio AND absolute floor)."""
-    return (
-        rec is not None
-        and rec > 0
-        and best > _RECORD_RATIO * rec
-        and best - rec > _RECORD_ABS_FLOOR
-    )
-
-
-def _committed_record(sf, path: str | None = None) -> dict:
-    """Per-query best-of times from the committed BENCH_DETAIL.json.
-
-    Preferred source is `git show HEAD:BENCH_DETAIL.json` — the file
-    itself is overwritten at the END of every run, so on a workspace
-    that benches repeatedly without a git reset the on-disk copy is the
-    LATEST (possibly host-inflated) run, not the committed quiet-host
-    record the guard is supposed to compare against. Falls back to the
-    on-disk file when git is unavailable (no repo, detached tooling) or
-    an explicit ``path`` is given. Empty when absent, unparseable, or
-    from a different sf (no cross-sf comparisons)."""
-    rec = None
-    if path is None:
-        path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
-        try:
-            blob = subprocess.run(
-                ["git", "show", "HEAD:BENCH_DETAIL.json"],
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                capture_output=True,
-                text=True,
-                timeout=10,
-            )
-            if blob.returncode == 0:
-                rec = json.loads(blob.stdout)
-        except (OSError, ValueError, subprocess.SubprocessError):
-            rec = None
-    if rec is None:
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, ValueError):
-            return {}
-    # a record that parses to a non-dict (e.g. a JSON list) is
-    # unparseable for our purposes — same empty-dict contract
-    if not isinstance(rec, dict):
-        return {}
-    if rec.get("sf") != sf or not isinstance(rec.get("queries"), dict):
-        return {}
-    # bool is an int subclass — a corrupted true/false record value
-    # must not reach the ratio check as 1/0
-    return {
-        k: v
-        for k, v in rec["queries"].items()
-        if isinstance(v, (int, float)) and not isinstance(v, bool)
-    }
-
 _IVF_INDEX_PATH = "/tmp/spark_graft_bench_ivf_index"
-
-
-def _ivf_parts(spark, sf_dir: str):
-    # the ONE definition of the IVF workload conventions — the indexed
-    # bench row must measure exactly q_v2_ann_ivf's centroids/queries
-    from etl_power_bi_dashboard_spark.plans.similarity_plans import ivf_parts
-
-    return ivf_parts(spark, sf_dir)
 
 
 def _prepare_ivf_index(spark, sf_dir: str) -> None:
     """One-time index build (UNTIMED — it's the amortized cost the
     persisted-index probe exists to avoid; the v2_ann_ivf row measures
-    the no-index path for comparison)."""
-    from etl_power_bi_dashboard_spark.operators import similarity
-
-    emb, centroids, _ = _ivf_parts(spark, sf_dir)
+    the no-index path for comparison). ``ivf_parts`` is the one
+    definition of the IVF workload, so the indexed row measures exactly
+    q_v2_ann_ivf's centroids and queries."""
+    emb, centroids, _ = ivf_parts(spark, sf_dir)
     similarity.ivf_write_index(emb, centroids, _IVF_INDEX_PATH)
 
 
 def _tail_plan(name: str):
-    from etl_power_bi_dashboard_spark.plans.dedup_plans import (
-        q_d2_ngram_jaccard,
-        q_d3_minhash_lsh,
-    )
-
     if name == "d2_ngram_jaccard_full":
         return lambda spark, sf_dir: q_d2_ngram_jaccard(spark, sf_dir, max_doc=None)
     if name in _D3_HASHER:
@@ -504,15 +228,25 @@ def _tail_plan(name: str):
         # untimed in main) — proves the partition-pruned probe beats the
         # inline assign-then-probe v2 row end-to-end
         def indexed(spark, sf_dir):
-            from etl_power_bi_dashboard_spark.operators import similarity
-
-            _, centroids, queries = _ivf_parts(spark, sf_dir)
+            _, centroids, queries = ivf_parts(spark, sf_dir)
             return similarity.ivf_topk_indexed(
                 spark, _IVF_INDEX_PATH, centroids, queries, k=3, n_probe=2
             )
 
         return indexed
     return REGISTRY[name].spark
+
+
+def _force(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _new_session(spark, app_name: str):
+    if spark is not None:
+        spark.stop()
+    spark = get_spark(app_name=app_name)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def main() -> None:
@@ -524,172 +258,49 @@ def main() -> None:
         sf = float(m.group(1).rstrip(".")) if m else None
     except ValueError:
         sf = None
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _new_session(None, "bench")
 
     # Untimed warmup: spin up the Python worker pool (first mapInPandas
     # costs ~20s of process forking on local[32]) and prime parquet
     # footers/codegen, so timings measure the engine, not process bootstrap.
-    REGISTRY["m1_multimodal_features"].spark(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    REGISTRY["dax_measures"].spark(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    _force(REGISTRY["m1_multimodal_features"].spark(spark, sf_dir))
+    _force(REGISTRY["dax_measures"].spark(spark, sf_dir))
 
-    # best-of-3 per query: this host shows intermittent co-tenant CPU
-    # spikes (same plan varies 3s→200s), and round 3's record showed a
-    # uniform ~1.45x inflation across UNCHANGED single-stage plans —
-    # best-of-2 didn't filter a session-long slow phase; three reps give
-    # the min two chances to land in a quiet window. Every rep is
-    # recorded (BENCH_DETAIL.json "reps") so per-row spread is auditable.
-    timings: dict[str, float] = {}
     reps: dict[str, list[float]] = {}
-    committed = _committed_record(sf)
-    record_guard: list[str] = []  # triggered rows (evidence, committed)
-    record_retry: list[str] = []  # subset re-repped in the final fresh session
-
-    def _run(
-        run_once,
-        name: str,
-        n: int,
-        noise_guard: bool = False,
-        retry_fresh: bool = True,
-    ) -> None:
-        """best-of-n; with noise_guard, one EXTRA rep when the observed
-        spread exceeds _NOISE_RATIO (the round-7 driver run doubled
-        unchanged iterative tails — give the min one more quiet-window
-        chance and leave the spread on the record). Independently, a
-        best-of-n above the COMMITTED per-row record (the session-long
-        slow phase the intra-run spread can't see — round-10 record
-        guard) earns one extra rep: queued for the final fresh session
-        when the plan is self-contained, taken immediately when it
-        consumes shared state alive only in this session."""
-        times: list[float] = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            run_once().write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        if noise_guard and max(times) > _NOISE_RATIO * min(times) \
-                and max(times) - min(times) > _NOISE_ABS_FLOOR:
-            t0 = time.perf_counter()
-            run_once().write.format("noop").mode("overwrite").save()
-            times.append(round(time.perf_counter() - t0, 3))
-        if _record_guard_triggers(min(times), committed.get(name)):
-            record_guard.append(name)
-            if retry_fresh:
-                record_retry.append(name)
-            else:
-                t0 = time.perf_counter()
-                run_once().write.format("noop").mode("overwrite").save()
-                times.append(round(time.perf_counter() - t0, 3))
-        reps[name] = times
-        timings[name] = min(times)
-
-    for name in HEADLINE:
-        q = REGISTRY[name]
-        _run(lambda: q.spark(spark, sf_dir), name, 3)
-
-    _prepare_ivf_index(spark, sf_dir)
-    # TAIL best-of-2 (round 4): the co-tenant spike the HEADLINE min
-    # already filters can hit any one-shot tail row, and one spurious
-    # 2.5x reading costs more analysis than the extra rep costs wall
-    # time.
-    for name in TAIL:
+    d3_shingles = d6_labels = None
+    for name, n, session in ROWS:
         plan = _tail_plan(name)
-        _run(lambda: plan(spark, sf_dir), name, 2)
-
-    # Heavy iterative/full-corpus tails: fresh SparkContext each (see
-    # FRESH_SESSION_TAIL comment), best-of-3 within the clean session —
-    # two same-day round-5 runs read the identical d3/d6 plans at 8.1s
-    # and 17.0s under host co-tenancy — plus the noise-guard extra rep
-    # when the spread still exceeds _NOISE_RATIO.
-    d6_labels = None
-    d3_shingles = None
-    for name in FRESH_SESSION_TAIL:
-        if name in _D6_DEPENDENTS:
-            # stay in d6's clean session; time the delta over the
-            # labels materialized below. The labels MUST exist — a list
-            # reorder that put a dependent before d6_dup_clusters would
-            # otherwise silently re-pay the full CC fixpoint per rep,
-            # re-inflating exactly the ~37s this path exists to remove.
-            assert d6_labels is not None, (
-                f"{name} must follow d6_dup_clusters in FRESH_SESSION_TAIL"
-            )
-            plan = REGISTRY[name].spark
-            _run(
-                lambda: plan(spark, sf_dir, labels=d6_labels),
-                name, 3, noise_guard=True, retry_fresh=False,
-            )
-            continue
-        if name in _D3_HASHER:
-            # the hasher pair shares ONE fresh session and ONE untimed
-            # shingle materialization (see _D3_HASHER comment); each
-            # row times the hasher-specific pipeline over the shared
-            # shingle table
+        kwargs = {}
+        if session == FRESH:
+            spark = _new_session(spark, f"bench-{name}")
+        elif session == D3_SHINGLES:
             if d3_shingles is None:
-                spark.stop()
-                spark = get_spark(app_name="bench-d3_pair")
-                spark.sparkContext.setLogLevel("ERROR")
-                from etl_power_bi_dashboard_spark.plans.dedup_plans import (
-                    d3_shingle_table,
-                )
-
+                spark = _new_session(spark, "bench-d3_pair")
                 d3_shingles = d3_shingle_table(
                     spark, sf_dir, max_doc=None
                 ).localCheckpoint()
-            plan = _tail_plan(name)
-            _run(
-                lambda: plan(spark, sf_dir, shingles=d3_shingles),
-                name, 3, noise_guard=True, retry_fresh=False,
+            kwargs = {"shingles": d3_shingles}
+        elif session == D6_LABELS:
+            # without the labels every rep would silently re-pay d6's
+            # whole connected-components fixpoint
+            assert d6_labels is not None, (
+                f"{name} must follow d6_dup_clusters in ROWS"
             )
-            continue
-        spark.stop()
-        spark = get_spark(app_name=f"bench-{name}")
-        spark.sparkContext.setLogLevel("ERROR")
-        plan = _tail_plan(name)
-        _run(lambda: plan(spark, sf_dir), name, 3, noise_guard=True)
+            kwargs = {"labels": d6_labels}
+        if name == "v2_ann_ivf_indexed":
+            _prepare_ivf_index(spark, sf_dir)
+        times = []
+        for _ in range(n):
+            t0 = time.perf_counter()
+            _force(plan(spark, sf_dir, **kwargs))
+            times.append(round(time.perf_counter() - t0, 3))
+        reps[name] = times
         if name == "d6_dup_clusters":
-            # materialize the labels ONCE (untimed — d6's row just
-            # priced this computation) for the dependent rows
+            # untimed: d6's row just priced this computation
             d6_labels = plan(spark, sf_dir).localCheckpoint()
 
-    # Round-10 record guard, retry pass: rows whose best-of-n exceeded
-    # the committed per-row record get ONE rep in a final fresh session
-    # — a session-long co-tenant phase can inflate every in-place rep
-    # equally (the intra-run spread guard never fires), but it cannot
-    # follow the row to a session started minutes later. Shared-state
-    # rows (d6 dependents / d3 pair) already took their extra rep
-    # in-session, where their materialized inputs were alive.
-    if record_retry:
-        spark.stop()
-        spark = get_spark(app_name="bench-record-guard")
-        spark.sparkContext.setLogLevel("ERROR")
-        # same untimed warmups as the main session, so the retry rep
-        # measures the engine, not cold codegen / Python worker forking
-        # (an inflated retry rep is harmless to the min but wastes the
-        # one quiet-window chance the guard exists to provide)
-        REGISTRY["dax_measures"].spark(spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        # Python-worker warmup runs UNCONDITIONALLY: mapInPandas/UDF
-        # plans beyond the m* family (ml1_kmeans, v* vector rows, ...)
-        # also pay the ~20 s worker-fork cost on a fresh session, and
-        # an inflated retry rep wastes the one quiet-window chance the
-        # guard exists to provide. The warmup is untimed and cheap
-        # relative to that.
-        REGISTRY["m1_multimodal_features"].spark(spark, sf_dir).write \
-            .format("noop").mode("overwrite").save()
-        for name in record_retry:
-            plan = _tail_plan(name)
-            t0 = time.perf_counter()
-            plan(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            reps[name].append(round(time.perf_counter() - t0, 3))
-            timings[name] = min(reps[name])
-
-    for line in emit_records(
-        timings, sf, write_detail=True, reps=reps, record_guard=record_guard
-    ):
+    timings = {name: min(times) for name, times in reps.items()}
+    for line in emit_records(timings, sf, write_detail=True, reps=reps):
         print(line)
 
 
@@ -698,23 +309,17 @@ def emit_records(
     sf: float,
     write_detail: bool = False,
     reps: dict | None = None,
-    record_guard: list | None = None,
     detail_path: str | None = None,
 ) -> list[str]:
     """The two stdout records, LAST one driver-parseable by contract.
 
-    Per-query detail prints first (one line for humans + a committed
-    BENCH_DETAIL.json the judge can read in full). With 75+ queries the
-    detail line is ~3.4 KB, which outgrew the driver's ~2 KB tail
-    capture in round 5 and left the round with NO parsed bench record at
-    all — so the LAST line is a compact record without the per-query
-    dict, bounded well under 1 KB no matter how many queries the detail
-    grows (pinned by tests/test_registry.py::test_bench_last_line_fits_tail).
+    The per-query detail prints first and is also written to
+    BENCH_DETAIL.json. Consumers read only a ~2 KB stdout tail, so the
+    LAST line is a compact record without the per-query dict, bounded
+    no matter how many queries the detail grows (pinned by
+    tests/test_registry.py::test_bench_last_line_fits_tail).
 
-    ``reps`` (per-query rep times, round-8 methodology) lands ONLY in
-    BENCH_DETAIL.json — the spread evidence that separates host noise
-    from plan regression — plus a "noisy" list of names whose reps
-    differ by more than _NOISE_RATIO even after the extra rep.
+    ``reps`` (every rep time per query) lands ONLY in BENCH_DETAIL.json.
     """
     total = round(sum(timings.values()), 3)
     detail = {
@@ -727,15 +332,6 @@ def emit_records(
     file_detail = dict(detail)
     if reps:
         file_detail["reps"] = reps
-        file_detail["noisy"] = sorted(
-            n for n, ts in reps.items()
-            if max(ts) > _NOISE_RATIO * min(ts)
-            and max(ts) - min(ts) > _NOISE_ABS_FLOOR
-        )
-        # rows whose best-of-n exceeded the committed per-row record
-        # (round-10 record guard) — each has an extra rep in "reps";
-        # always present (possibly empty) so its absence is meaningful
-        file_detail["record_guard"] = sorted(record_guard or [])
     if write_detail:
         if detail_path is None:
             detail_path = os.path.join(

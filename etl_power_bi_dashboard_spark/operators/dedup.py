@@ -48,11 +48,6 @@ def ensure_parallelism(df: DataFrame, *part_cols: str) -> DataFrame:
     return df
 
 
-def token_hash32(c: Column) -> Column:
-    """Portable 32-bit integer hash: first 8 hex chars of md5."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
-
-
 def token_hash60(c: Column) -> Column:
     """Portable 60-bit integer hash: first 15 hex chars of md5.
 
@@ -227,27 +222,15 @@ def prefix_postings(sets_: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def verify_candidate_jaccard(
-    candidates: DataFrame, shingled: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for an explicit candidate-pair list ONLY.
-
-    Joins each (doc_a, doc_b) candidate to the two per-doc shingle sets
-    and intersects them — cost is linear in the number of candidates,
-    never touching non-candidate pairs. This is the verification stage a
-    bucketed dedup (LSH/SimHash) needs at scale: the expensive pairwise
-    work is restricted to what the bucketing surfaced.
-    """
-    sets_ = shingled.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh"))
-    return verify_candidate_jaccard_sets(candidates, sets_, threshold)
-
-
 def verify_candidate_jaccard_sets(
     candidates: DataFrame, sets_: DataFrame, threshold: float
 ) -> DataFrame:
-    """Exact-Jaccard verification against per-doc shingle ARRAYS
-    (doc_id, sh) — the zero-extra-shuffle form when the set
-    representation already exists (see :func:`shingle_sets`).
+    """Exact Jaccard for an explicit candidate-pair list ONLY, against
+    per-doc shingle ARRAYS (doc_id, sh) (see :func:`shingle_sets`).
+
+    Cost is linear in the number of candidates and never touches a
+    non-candidate pair: the verification stage a bucketed dedup
+    (LSH/SimHash) needs at scale.
 
     The jaccard projection is wrapped in a non-deterministic always-true
     conditional (round-12, guide §4.4 applied to a JVM expression): the

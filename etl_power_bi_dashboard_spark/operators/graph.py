@@ -38,7 +38,6 @@ def pagerank(
     node_col: str = "id",
     damping: float = 0.85,
     max_iter: int = 10,
-    checkpoint_every: int = 1,
     broadcast_ranks: bool | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list — the classic
@@ -57,41 +56,15 @@ def pagerank(
     aggregate job, and no scalar crosses to the driver during iteration
     (the 1-row dangling slice re-enters the plan as a broadcast).
 
-    ``checkpoint_every`` truncates the per-iteration AGGREGATE (≤ n+1
-    rows): ranks itself is a constant-depth lazy projection over the
-    latest checkpointed aggregate and never needs its own
-    materialization job, so cadence 1 — the default since round 13 —
-    costs exactly one aggregation job per iteration. At cadence c > 1
-    the intermediate iterations stack lazy aggregate plans (each
-    consumed twice — the dangling slice and the contribution slice — so
-    un-checkpointed depth re-executes ~2×/level; the knob exists for
-    the depth-vs-jobs sweep only). The fixpoint is cadence-independent
-    (pinned by test_pagerank_checkpoint_cadence_invariant).
-
-    Round-12 sweep, recorded for history (it measured the PRE-round-13
-    shape, where the checkpoint was on ranks): cadence 2/3/4
-    indistinguishable, cadence 8 blew up to ~22.6 s of lazy plan
-    growth; round 13's aggregate-side checkpoint at cadence 1 replaced
-    that trade — one job per iteration, constant plan depth.
+    Every iteration checkpoints its AGGREGATE (≤ n+1 rows): ranks itself
+    is a constant-depth lazy projection over the latest aggregate and
+    never needs its own materialization job, so the per-iteration cost
+    is exactly one aggregation job at constant plan depth.
 
     Returns (node, rank) with Σ rank = 1 up to float rounding.
     Deterministic given the graph: the fixpoint doesn't depend on
     partitioning (sums are doubles, so last-bit associativity wiggle
     exists run-to-run — callers needing bit-stable output should round).
-
-    Round-6 experiment, recorded: pre-partitioning ``ed`` by src and
-    ``base_nodes`` by node through ``repartition(P, key) +
-    localCheckpoint`` DOES let the planner elide the join exchanges
-    (verified: 1 data exchange/iteration instead of 3) — but only with
-    AQE disabled; AQE's re-planning does not trust a LogicalRDD's
-    output partitioning and re-inserts ENSURE_REQUIREMENTS exchanges,
-    and this session keeps AQE on for the rest of the engine. Measured
-    end-to-end at sf0.1 the difference was within host noise (~12% on a
-    contended box) because at bench scale the per-iteration cost is
-    checkpoint materialization + scheduling, not shuffle bytes — the
-    same conclusion as the round-5 cadence experiment. At cluster scale
-    the ranks side is the thing to co-partition, and the right tool is
-    a storage-partitioned/bucketed edge table, not in-plan repartition.
     """
     # checkpoint FIRST, count the checkpointed RDD: the count would
     # otherwise execute the (possibly join-built) nodes plan once more
@@ -176,7 +149,7 @@ def pagerank(
     )
     contribs = None
     dang = None
-    for i in range(max_iter):
+    for _ in range(max_iter):
         if contribs is None:
             joined = dedges
             rank_expr = F.lit(1.0 / n)
@@ -194,12 +167,10 @@ def pagerank(
             .groupBy("dang", "dst")
             .agg(F.sum("c").alias("s"))
         )
-        # ``checkpoint_every`` truncates the AGGREGATE (≤ n+1 rows):
-        # both the next iteration and the final projection read it, so
-        # one aggregation job per checkpointed iteration is the whole
-        # per-round materialization cost.
-        if (i + 1) % checkpoint_every == 0 or i == max_iter - 1:
-            agg = agg.localCheckpoint(eager=True)
+        # both the next iteration and the final projection read the
+        # aggregate, so this one job is the whole per-round
+        # materialization cost
+        agg = agg.localCheckpoint(eager=True)
         dang = agg.filter(F.col("dang") == 1).agg(
             F.coalesce(F.sum("s"), F.lit(0.0)).alias("dm")
         )

@@ -350,10 +350,7 @@ def q_ml2_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-    ranks = pagerank(
-        nodes, edges, node_col="id", damping=0.85, max_iter=8,
-        checkpoint_every=1,
-    )
+    ranks = pagerank(nodes, edges, node_col="id", damping=0.85, max_iter=8)
     return (
         ranks.select("node", F.round("rank", 12).alias("rank"))
         .orderBy(F.desc("rank"), "node")

@@ -4,9 +4,8 @@ Parquet export of the star schema, plus the BI-integration contract doc.
 Parquet is the scale path (columnar, predicate-pushdown-friendly; at
 100 TB you'd partition fact_sales by date_id and skip CSV entirely —
 `partition_fact=True` does exactly that). CSV export mirrors the
-reference's BI-import convenience; ``single_file=True`` coalesces to one
-part-file per table like pandas' single-file output (only sensible for
-dimension-sized tables).
+reference's BI-import convenience and is always coalesced to one
+part-file per table, like pandas' single-file output.
 """
 
 from __future__ import annotations
@@ -16,9 +15,8 @@ import os
 from pyspark.sql import DataFrame
 
 
-def _write_csv(df: DataFrame, path: str, single_file: bool) -> None:
-    w = (df.coalesce(1) if single_file else df).write.mode("overwrite")
-    w.option("header", True).csv(path)
+def _write_csv(df: DataFrame, path: str) -> None:
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def _write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -33,7 +31,6 @@ def export_star(
     fact: DataFrame,
     aggs: dict[str, DataFrame],
     output_path: str,
-    single_file_csv: bool = True,
     partition_fact: bool = False,
 ) -> list[str]:
     """S4+S5: write every table as both CSV and Parquet under
@@ -53,9 +50,7 @@ def export_star(
         # join/aggregate pipeline — executes once, not per-format
         df = df.persist()
         try:
-            _write_csv(
-                df, os.path.join(output_path, f"{name}_csv"), single_file_csv
-            )
+            _write_csv(df, os.path.join(output_path, f"{name}_csv"))
             _write_parquet(
                 df,
                 os.path.join(output_path, f"{name}_parquet"),

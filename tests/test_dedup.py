@@ -111,6 +111,50 @@ def test_d3_verification_is_candidate_restricted(spark):
     assert not re.search(r"shingle#\d+\)?\s*=\s*shingle#\d+", plan)
 
 
+def test_verify_jaccard_sets_length_prefilter_is_lossless(spark):
+    """verify_candidate_jaccard_sets drops pairs whose size ratio
+    min/max is below the threshold before intersecting; J(A,B) ≤
+    min/max makes that lossless. Pinned against a pure-Python Jaccard
+    over every pair of a corpus with empty sets, strongly size-skewed
+    pairs and pairs sitting exactly on the threshold (3 ⊂ 4 at 0.5,
+    6 ⊂ 7 at 0.75)."""
+    sets = {
+        0: [],
+        1: [],
+        2: ["a"],
+        3: ["a", "b"],
+        4: ["a", "b", "c", "d"],
+        5: [f"t{i}" for i in range(40)] + ["a"],
+        6: ["a", "b", "c"],
+        7: ["a", "b", "c", "e"],
+        8: [f"t{i}" for i in range(30)],
+        9: ["a", "b", "c", "x", "y"],
+    }
+    sets_ = spark.createDataFrame(
+        list(sets.items()), "doc_id long, sh array<string>"
+    )
+    pairs = [(a, b) for a in sets for b in sets if a < b]
+    candidates = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    for threshold in (0.5, 0.7, 0.75):
+        want = {}
+        pruned = 0
+        for a, b in pairs:
+            sa, sb = set(sets[a]), set(sets[b])
+            short, long_ = sorted((len(sa), len(sb)))
+            if short and short / long_ < threshold:
+                pruned += 1
+            if sa | sb and len(sa & sb) / len(sa | sb) >= threshold:
+                want[(a, b)] = len(sa & sb) / len(sa | sb)
+        assert pruned > 0 and want  # the pre-filter has work to do
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in dedup.verify_candidate_jaccard_sets(
+                candidates, sets_, threshold
+            ).collect()
+        }
+        assert got == want
+
+
 def test_jaccard_max_df_noop_when_under_cap(spark):
     """With the df cap above every shingle's document frequency, capped
     results are exactly the uncapped ones (the d2 registry query relies
