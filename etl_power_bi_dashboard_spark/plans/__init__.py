@@ -1,42 +1,21 @@
 """Query registry: name → (spark plan builder, DuckDB oracle SQL).
 
-Registry ORDER is a driver-facing contract: the correctness driver
-verifies a fixed-size window from the FRONT of the registry each round
-(round 1 covered exactly the first 50 entries). ``_PRIORITY`` therefore
-rotates not-yet-driver-verified queries to the front:
+Registry ORDER is an external contract: each round's correctness check
+verifies a fixed-size window (50 entries) from the FRONT of the registry.
+Ordering invariant:
 
-- round 1 verified the 50 entries of core/windows/windows_more/g1/g2
-  (all green in ``CORRECTNESS_r01.json``); those are pinned locally by
-  the golden-replication + DuckDB-parity suites and move to the BACK;
-- the 50 slots now hold the oracle-backed families with no driver row
-  yet (TPC-H h*, merge u*, events e*, temporal r*, text x*/m*, dedup
-  d*, similarity v*);
-- 14 low-risk oracle-backed queries (scalar expression wrappers,
-  variants sharing verified code paths) plus the 4 deliberately
-  oracle-less ones (ml1, ax1–ax3 — rows-only checks) sit just behind
-  the window and rotate in next round.
+- ``_PRIORITY`` is the window, and it is exactly ``tools/rotation.py``'s
+  output over the CORRECTNESS rounds its header names ("from
+  CORRECTNESS_r01-rNN"): every registry entry ranked by the LATEST round
+  with a CORRECTNESS row for it (no row = 0, FORCE_FRONT = 0), stable
+  module order within a rank, first 50 taken.
+  ``tests/test_rotation_tool.py`` pins this;
+- every other entry follows in module order, so a query added after the
+  rotation sits behind the window and, having no CORRECTNESS row, fronts
+  the next window.
 
-Round 11 rotation (current): recomputed from CORRECTNESS_r01-r10 at
-rotation time by ``tools/rotation.py`` — rank every registry entry by
-its LATEST driver round (no row = 0, FORCE_FRONT = 0), stable module
-order within a round, take the first 50. FORCE_FRONT is EMPTY this
-round (round-10 landed all its re-checks green), so the window is the
-oldest-evidence cohort: the 11 remaining r5 rows, then the r6 cohort
-in module order — including the §2 core flagships (s1_scan …
-dax_measures) whose last driver rows predate the r7+ plan-digest
-reworks. One exception to pure re-checks: ``p12_greedy_pack`` gained
-its recursive-CTE replay oracle this round (rows-only since r5) and is
-fronted for its first hash-checked row. Every registry entry has held
-a driver row since round 8. Historical rotation details for rounds
-1-10 live in COVERAGE.md.
-
-Queries added after the rotation sit BEHIND the window in module order
-and front the NEXT round's window per the standing no-row-first rule;
-do NOT maintain a hand-list of no-row entries across rounds (hand-lists
-went stale within single rounds, twice) — recompute with
-``tools/rotation.py`` at rotation time. The round-11 window was
-re-validated 50/50 green at the driver's sf0.01 via
-tools/driver_sim.py immediately after the rotation landed.
+Recompute the window with ``tools/rotation.py`` at rotation time rather
+than hand-editing it. Rotation history lives in COVERAGE.md.
 
 Every query keeps its local sf0.001 DuckDB parity test regardless of
 position (tests/test_oracle_parity.py covers the whole registry).

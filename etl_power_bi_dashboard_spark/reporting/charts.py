@@ -2,13 +2,11 @@
 cells 23/25 → `reports/dashboard/*.png`).
 
 The reference renders four seaborn/matplotlib figures plus a 2×2 dashboard
-composite. This container has neither matplotlib nor PIL, so the renderer
-is dependency-free: a small raster canvas (RGB byte buffer, 5×7 bitmap
-font) encoded with the stdlib-only PNG writer below. If matplotlib IS
-importable (a real deployment), :func:`render_bar_chart` delegates to it
-for anti-aliased output; the fallback draws the same charts — bars, axes,
-grid, tick labels, titles — deterministically, so figure artifacts can be
-committed and diffed.
+composite. The renderer here is dependency-free: a small raster canvas
+(RGB byte buffer, 5×7 bitmap font) encoded with the stdlib-only PNG
+writer below. It draws the same charts — bars, axes, grid, tick labels,
+titles — deterministically, so figure artifacts can be committed and
+diffed.
 
 Scale note: rendering is intentionally driver-side — every input is an
 already-aggregated query result (≤ a few dozen rows collected from
@@ -204,54 +202,9 @@ def render_bar_chart(
     width: int = 640,
     height: int = 400,
 ) -> "Canvas":
-    """Render a bar chart; writes a PNG when ``path`` is given.
-
-    Uses matplotlib when importable (never in this container); otherwise
-    the deterministic built-in raster described in the module docstring.
-    """
-    try:  # pragma: no cover - matplotlib absent in the build container
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-
-        fig, ax = plt.subplots(figsize=(width / 64, height / 64))
-        colors = [_viridis(i / max(len(values) - 1, 1)) for i in range(len(values))]
-        colors = [(r / 255, g / 255, b / 255) for r, g, b in colors]
-        if horizontal:
-            ax.barh(labels[::-1], values[::-1], color=colors[::-1])
-        else:
-            ax.bar(labels, values, color=colors)
-        ax.set_title(title)
-        ax.set_xlabel(xlabel)
-        ax.set_ylabel(ylabel)
-        ax.grid(True, alpha=0.3)
-        if path:
-            fig.savefig(path, dpi=100, bbox_inches="tight")
-        plt.close(fig)
-        if path:
-            return _raster_bar_chart(
-                labels, values, title, xlabel, ylabel, None, horizontal, width, height
-            )
-    except ImportError:
-        pass
-    c = _raster_bar_chart(
-        labels, values, title, xlabel, ylabel, path, horizontal, width, height
-    )
-    return c
-
-
-def _raster_bar_chart(
-    labels: list[str],
-    values: list[float],
-    title: str,
-    xlabel: str,
-    ylabel: str,
-    path: str | None,
-    horizontal: bool,
-    width: int,
-    height: int,
-) -> Canvas:
+    """Render a bar chart with the deterministic built-in raster
+    described in the module docstring; writes a PNG when ``path`` is
+    given."""
     c = Canvas(width, height)
     if not values:
         # empty aggregate (e.g. a filter matched nothing): emit a titled

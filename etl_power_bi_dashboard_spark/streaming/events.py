@@ -301,6 +301,36 @@ def enrich_stream(events: DataFrame, user_dim: DataFrame) -> DataFrame:
     ).select("event_id", "ts", "user_id", "event_type", "value", "user_tier")
 
 
+def _foreach_batch(
+    stream_df: DataFrame, fn, checkpoint: str, mode: str = "append"
+):
+    """Start ``fn`` as the ``foreachBatch`` body of a drain-everything
+    (``availableNow``) query — the trigger every sink here runs, which
+    is also the production backfill mode. Returns the started query;
+    the caller awaits termination."""
+    return (
+        stream_df.writeStream.foreachBatch(fn)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _enrich_epoch(
+    df: DataFrame, dim_path: str, target_path: str, epoch_id: int
+) -> None:
+    """The per-epoch body both enrich sinks share: join the batch
+    against the dim snapshot at ``dim_path`` (re-read now, so the join
+    sees the dim as of this micro-batch) and overwrite the epoch's own
+    output directory (the :func:`idempotent_parquet_sink` pattern — a
+    crash-replayed batch REWRITES its epoch directory instead of
+    appending duplicates)."""
+    enrich_stream(df, df.sparkSession.read.parquet(dim_path)).write.mode(
+        "overwrite"
+    ).parquet(f"{target_path}/epoch={epoch_id}")
+
+
 def enrich_refreshing_parquet_sink(
     stream_df: DataFrame,
     dim_path: str,
@@ -315,42 +345,22 @@ def enrich_refreshing_parquet_sink(
     file-backed dims (its file listing is pinned at DataFrame creation;
     see its docstring).
 
-    Each event is enriched against the dim AS OF its micro-batch.
-    Output is per-epoch overwrite directories (the
-    :func:`idempotent_parquet_sink` pattern — foreachBatch is
-    at-least-once, so a crash-replayed batch REWRITES its epoch
-    directory instead of appending duplicates; the replay re-joins
-    against the CURRENT dim, so callers who need bit-identical replay
-    should use :func:`enrich_versioned_parquet_sink`, which pins each
-    epoch to the dim version its first attempt resolved). Dim
-    overwrites should be atomic relative to batch boundaries
-    (stage-then-swap, as sinks.py does) — a swap racing a batch's read
-    can still fail that batch, which the checkpoint then retries
+    Each event is enriched against the dim AS OF its micro-batch, into
+    per-epoch overwrite directories. The replay of a crashed batch
+    re-joins against the CURRENT dim, so callers who need bit-identical
+    replay should use :func:`enrich_versioned_parquet_sink`, which pins
+    each epoch to the dim version its first attempt resolved. Dim
+    overwrites should be atomic relative to batch boundaries (write a
+    stage directory, then swap it in; ``sinks.export_star`` overwrites
+    in place, so it is not such a publisher) — a swap racing a batch's
+    read can still fail that batch, which the checkpoint then retries
     against the settled dim.
     """
 
     def _enrich(df: DataFrame, epoch_id: int) -> None:
-        dim = (
-            df.sparkSession.read.parquet(dim_path)
-            .select(F.col("user_id").alias("dim_user_id"), "user_tier")
-        )
-        (
-            df.join(dim, df["user_id"] == dim["dim_user_id"], "left")
-            .select(
-                "event_id", "ts", "user_id", "event_type", "value",
-                "user_tier",
-            )
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/epoch={epoch_id}")
-        )
+        _enrich_epoch(df, dim_path, target_path, epoch_id)
 
-    return (
-        stream_df.writeStream.foreachBatch(_enrich)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _enrich, checkpoint)
 
 
 def latest_dim_version(dim_root: str) -> int:
@@ -428,27 +438,11 @@ def enrich_versioned_parquet_sink(
             with open(tmp, "w") as f:
                 json.dump({"version": version}, f)
             os.replace(tmp, map_file)
-        dim = (
-            df.sparkSession.read.parquet(os.path.join(dim_root, f"v{version}"))
-            .select(F.col("user_id").alias("dim_user_id"), "user_tier")
-        )
-        (
-            df.join(dim, df["user_id"] == dim["dim_user_id"], "left")
-            .select(
-                "event_id", "ts", "user_id", "event_type", "value",
-                "user_tier",
-            )
-            .write.mode("overwrite")
-            .parquet(f"{target_path}/epoch={epoch_id}")
+        _enrich_epoch(
+            df, os.path.join(dim_root, f"v{version}"), target_path, epoch_id
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_enrich)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _enrich, checkpoint)
 
 
 def idempotent_parquet_sink(
@@ -466,9 +460,7 @@ def idempotent_parquet_sink(
     stream in update mode, the *latest* epoch per key wins (dedup on
     read or compact downstream).
 
-    Returns the started query; caller awaits termination. The trigger is
-    ``availableNow`` (drain-everything batch-style), which is also the
-    production backfill mode.
+    Returns the started query; caller awaits termination.
     """
 
     def _write(batch_df: DataFrame, epoch_id: int) -> None:
@@ -476,13 +468,7 @@ def idempotent_parquet_sink(
             f"{target_path}/epoch={epoch_id}"
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_write)
-        .outputMode(mode)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _write, checkpoint_path, mode)
 
 
 def upsert_parquet_sink(
@@ -553,13 +539,7 @@ def upsert_parquet_sink(
             merged = compact
         _republish(merged, target_path, stage)
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _merge, checkpoint_path, "update")
 
 
 def trending_topk_sink(
@@ -662,20 +642,7 @@ def trending_topk_sink(
         )
         merged.unpersist()  # drop the localCheckpoint blocks per batch
 
-    return (
-        counts.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
+    return _foreach_batch(counts, _apply, checkpoint_path, "update")
 
 
 def _pin_for_overwrite(df: DataFrame) -> DataFrame:
@@ -710,17 +677,16 @@ def _mark_complete(spark: SparkSession, path: str) -> None:
     FIRST batch means the replay rewrites the same partitions, and on
     later batches the earlier marker (never deleted) already tells the
     truth: the table exists and replay heals partition-by-partition."""
-    fs, _ = _fs_and_path(spark, path)
-    jvm = spark._jvm
-    fs.create(jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS"), True).close()
+    fs, marker = runbase.fs_path(spark, f"{path}/_SUCCESS")
+    fs.create(marker, True).close()
 
 
 def _is_complete(spark: SparkSession, path: str) -> bool:
     """A parquet directory is trustworthy only once the committer has
     dropped its _SUCCESS marker (overwrite deletes the dir first, so a
     partial write never carries one)."""
-    fs, hpath = _fs_and_path(spark, path)
-    return fs.exists(spark._jvm.org.apache.hadoop.fs.Path(hpath, "_SUCCESS"))
+    fs, marker = runbase.fs_path(spark, f"{path}/_SUCCESS")
+    return fs.exists(marker)
 
 
 def _read_current_or_recover(
@@ -750,8 +716,62 @@ def _republish(merged: DataFrame, target_path: str, stage: str) -> None:
     merged.write.mode("overwrite").parquet(stage)
     spark.read.parquet(stage).write.mode("overwrite").parquet(target_path)
     spark.catalog.refreshByPath(target_path)
-    fs, stage_path = _fs_and_path(spark, stage)
+    fs, stage_path = runbase.fs_path(spark, stage)
     fs.delete(stage_path, True)
+
+
+def _scd2_fold(
+    batch_df: DataFrame,
+    current: DataFrame | None,
+    key_col: str,
+    ts_col: str,
+    tiebreak_col: str,
+    carry_cols: tuple[str, ...],
+) -> DataFrame:
+    """The SCD-2 fold both SCD-2 sinks share: ``current`` (the stored
+    dimension, or the slice of it the batch can touch; None on the first
+    batch ever) with one micro-batch of changelog records folded in.
+
+    (1) the batch is deduplicated on the record identity ``(key,
+    tiebreak)`` — redelivered records are no-ops, which is what makes a
+    full replay idempotent; (2) only the AFFECTED keys' stored intervals
+    are re-opened into changelog form (``effective_from`` is the
+    original record timestamp, so the stored table IS a lossless
+    changelog of itself), unioned with the batch, and re-sectioned by
+    one ``scd2_history`` window pass — late-arriving records therefore
+    splice into the middle of a key's history correctly, not just
+    append; (3) untouched keys pass through byte-identical. Columns
+    outside ``scd2_history``'s output (the bucketed sink's ``bucket``)
+    are dropped; the caller re-derives them.
+    """
+    from ..plans.merge_plans import scd2_history
+
+    batch = batch_df.select(
+        key_col, tiebreak_col, ts_col, *carry_cols
+    ).dropDuplicates([key_col, tiebreak_col])
+    untouched = None
+    if current is not None:
+        affected = batch.select(key_col).distinct()
+        touched_log = current.join(affected, key_col, "left_semi").select(
+            key_col,
+            tiebreak_col,
+            F.col("effective_from").alias(ts_col),
+            *carry_cols,
+        )
+        untouched = current.join(affected, key_col, "left_anti")
+        batch = touched_log.unionByName(batch).dropDuplicates(
+            [key_col, tiebreak_col]
+        )
+    rebuilt = scd2_history(
+        batch,
+        key_col=key_col,
+        ts_col=ts_col,
+        tiebreak_col=tiebreak_col,
+        carry_cols=tuple(carry_cols),
+    )
+    if untouched is None:
+        return rebuilt
+    return untouched.select(*rebuilt.columns).unionByName(rebuilt)
 
 
 def scd2_parquet_sink(
@@ -765,76 +785,29 @@ def scd2_parquet_sink(
 ):
     """Streaming SCD-2 dimension maintenance via ``foreachBatch`` — the
     CDC-feed twin of the batch u4 plan: each micro-batch of changelog
-    records is folded into a versioned dimension whose validity
-    intervals always equal what :func:`plans.merge_plans.scd2_history`
-    would build over the full changelog seen so far.
+    records is folded (:func:`_scd2_fold`) into a versioned dimension
+    whose validity intervals always equal what
+    :func:`plans.merge_plans.scd2_history` would build over the full
+    changelog seen so far. The merge publishes through the same
+    _SUCCESS-gated stage-then-swap as :func:`upsert_parquet_sink`, with
+    the same crash-recovery contract.
 
-    Per batch: (1) the batch is deduplicated on the record identity
-    ``(key, tiebreak)`` — redelivered records are no-ops, which is what
-    makes a full replay idempotent; (2) only the AFFECTED keys' stored
-    intervals are re-opened into changelog form (``effective_from`` is
-    the original record timestamp, so the stored table IS a lossless
-    changelog of itself), unioned with the batch, and re-sectioned by
-    one window pass — late-arriving records therefore splice into the
-    middle of a key's history correctly, not just append; (3) untouched
-    keys pass through byte-identical. The merge publishes through the
-    same _SUCCESS-gated stage-then-swap as :func:`upsert_parquet_sink`,
-    with the same crash-recovery contract.
-
-    Scale shape: the per-batch cost is one shuffle of (batch ∪ affected
-    history), proportional to the keys that actually changed — never a
-    full-table rewrite of history for quiet keys (at 100 TB the target
-    would be key-bucketed so the left-semi/anti split is partition-
-    pruned; the republish then rewrites only affected buckets).
+    Scale shape: the per-batch fold is one shuffle of (batch ∪ affected
+    history), proportional to the keys that actually changed, but the
+    publish rewrites the whole dimension;
+    :func:`scd2_parquet_sink_bucketed` rewrites only touched buckets.
     """
-    from ..plans.merge_plans import scd2_history
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         stage = f"{target_path}_stage"
-        batch = batch_df.select(
-            key_col, tiebreak_col, ts_col, *carry_cols
-        ).dropDuplicates([key_col, tiebreak_col])
         current = _read_current_or_recover(spark, target_path, stage)
-        if current is None:
-            combined = batch
-            untouched = None
-        else:
-            affected = batch.select(key_col).distinct()
-            touched_log = (
-                current.join(affected, key_col, "left_semi")
-                .select(
-                    key_col,
-                    tiebreak_col,
-                    F.col("effective_from").alias(ts_col),
-                    *carry_cols,
-                )
-            )
-            untouched = current.join(affected, key_col, "left_anti")
-            combined = touched_log.unionByName(batch).dropDuplicates(
-                [key_col, tiebreak_col]
-            )
-        rebuilt = scd2_history(
-            combined,
-            key_col=key_col,
-            ts_col=ts_col,
-            tiebreak_col=tiebreak_col,
-            carry_cols=tuple(carry_cols),
-        )
-        merged = (
-            rebuilt
-            if untouched is None
-            else untouched.select(*rebuilt.columns).unionByName(rebuilt)
+        merged = _scd2_fold(
+            batch_df, current, key_col, ts_col, tiebreak_col, carry_cols
         )
         _republish(merged, target_path, stage)
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _merge, checkpoint_path, "update")
 
 
 def scd2_parquet_sink_bucketed(
@@ -866,57 +839,32 @@ def scd2_parquet_sink_bucketed(
       (the (key, tiebreak) dedup makes the fold idempotent) — the same
       heal-on-replay contract, now at bucket granularity.
 
-    Fold semantics are IDENTICAL to the plain sink (same
-    ``scd2_history`` over batch ∪ affected history — pinned by the
-    equivalence test); only the storage layout and the per-batch cost
-    model change.
+    Fold semantics are IDENTICAL to the plain sink (the same
+    :func:`_scd2_fold`, with ``bucket`` recomputed from the key after
+    it — pinned by the equivalence test); only the storage layout and
+    the per-batch cost model change.
     """
-    from ..plans.merge_plans import scd2_history
-
     bucket_of = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast(
         "int"
     )
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.select(
-            key_col, tiebreak_col, ts_col, *carry_cols
-        ).dropDuplicates([key_col, tiebreak_col])
         touched = [
-            r.b for r in batch.select(bucket_of.alias("b")).distinct().collect()
+            r.b
+            for r in batch_df.select(bucket_of.alias("b")).distinct().collect()
         ]
         if not touched:
             return
-        untouched_slice = None
-        combined = batch
+        current = None
         if _is_complete(spark, target_path):
             spark.catalog.refreshByPath(target_path)
-            slice_ = spark.read.parquet(target_path).filter(
+            current = spark.read.parquet(target_path).filter(
                 F.col("bucket").isin(touched)
             )
-            affected = batch.select(key_col).distinct()
-            touched_log = slice_.join(affected, key_col, "left_semi").select(
-                key_col,
-                tiebreak_col,
-                F.col("effective_from").alias(ts_col),
-                *carry_cols,
-            )
-            untouched_slice = slice_.join(affected, key_col, "left_anti")
-            combined = touched_log.unionByName(batch).dropDuplicates(
-                [key_col, tiebreak_col]
-            )
-        rebuilt = scd2_history(
-            combined,
-            key_col=key_col,
-            ts_col=ts_col,
-            tiebreak_col=tiebreak_col,
-            carry_cols=tuple(carry_cols),
+        merged = _scd2_fold(
+            batch_df, current, key_col, ts_col, tiebreak_col, carry_cols
         ).withColumn("bucket", bucket_of)
-        merged = (
-            rebuilt
-            if untouched_slice is None
-            else untouched_slice.select(*rebuilt.columns).unionByName(rebuilt)
-        )
         merged = _pin_for_overwrite(merged)  # read+overwrite target
         (
             merged.write.mode("overwrite")
@@ -927,13 +875,7 @@ def scd2_parquet_sink_bucketed(
         _mark_complete(spark, target_path)
         merged.unpersist()
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _merge, checkpoint_path, "update")
 
 
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete"):
@@ -946,11 +888,6 @@ def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete"):
         .trigger(availableNow=True)
         .start()
     )
-
-
-# Epoch-id stride between logical gap-monitor runs (mirrors
-# streaming/index._RUN_STRIDE): absolute epoch = run_base + batch_id.
-_GAP_RUN_STRIDE = runbase.RUN_STRIDE
 
 
 def _monitor_run_base(
@@ -975,13 +912,7 @@ def _monitor_run_base(
       inside it);
     - the existing base is discovered from the state table's max
       absolute epoch (watermark rows included — see
-      ``_gap_state_merge``);
-    - ``legacy_base=0``: a marker-less checkpoint WITH committed
-      progress was written by a build that folded raw epoch ids
-      (base 0); claiming a fresh stride would let the one batch Spark
-      legitimately replays after a crash re-fold under a larger
-      absolute epoch and double-count ``cnt``, so the legacy base is
-      pinned instead.
+      ``_gap_state_merge``).
 
     A fresh run re-reading input the state already folded will
     double-count — with additive cnt that is inherent; reset
@@ -993,18 +924,8 @@ def _monitor_run_base(
         if current is not None:
             seen = current.agg(F.max("last_epoch")).first()[0]
             if seen is not None:
-                return int(seen) // _GAP_RUN_STRIDE * _GAP_RUN_STRIDE
+                return int(seen) - int(seen) % runbase.RUN_STRIDE
         return -1
-
-    def _base0_owned_by_new_code() -> bool:
-        # a wm_base=0 watermark row can only come from a NEW-code run
-        # (legacy builds never wrote watermark rows), so its presence
-        # proves run base 0 is taken and this legacy resume must not
-        # share it — see runbase.claim_run_base
-        current = _read_current_or_recover(spark, state_path, stage_state)
-        if current is None or "wm_base" not in current.columns:
-            return False
-        return current.filter(F.col("wm_base") == 0).limit(1).count() > 0
 
     return runbase.claim_run_base(
         spark,
@@ -1012,8 +933,6 @@ def _monitor_run_base(
         marker_prefix="gap_run_base_",
         sentinel_dir=state_path + "__runs",
         existing_base_fn=_existing,
-        legacy_base=0,
-        legacy_base_owned_fn=_base0_owned_by_new_code,
     )
 
 
@@ -1044,44 +963,19 @@ def _gap_state_merge(
     double cnt — but still FALLS THROUGH to rebuild and republish the
     report from the already-published state: a crash between the state
     publish and the report publish would otherwise leave the report
-    stale forever (or missing entirely if the crash hit batch 0).
-
-    A state table written by a pre-watermark build has no ``wm_base``
-    column; its bucket rows were folded under raw epochs (run base 0 —
-    the same legacy contract ``_monitor_run_base`` pins). On the FIRST
-    new-code fold over such a table — whichever run performs it — the
-    legacy high-water mark (the legacy rows' own ``max(last_epoch)``)
-    is materialized as the run-0 watermark row, because a later merge
-    overwrites the bucket rows' epochs with the newer run's and the
-    legacy mark would otherwise be unrecoverable; until that row
-    exists, a ``run_base == 0`` guard reads the legacy rows directly
-    (the old guard's exact semantics). Both maxima come from one
-    aggregation — the guard costs a single job per batch either way.
+    stale forever (or missing entirely if the crash hit batch 0). The
+    guard costs a single aggregation job per batch.
     """
     spark = batch_df.sparkSession
     stage_state = state_path + "__stage"
     stage_report = report_path + "__stage"
     current = _read_current_or_recover(spark, state_path, stage_state)
-    legacy = current is not None and "wm_base" not in current.columns
-    if legacy:
-        current = current.withColumn("wm_base", F.lit(None).cast("long"))
     seen = None
-    legacy_max = None
     if current is not None:
-        marks = current.agg(
-            F.max(
-                F.when(F.col("wm_base") == run_base, F.col("last_epoch"))
-            ).alias("run_wm"),
-            F.max(
-                F.when(F.col("wm_base").isNull(), F.col("last_epoch"))
-            ).alias("bucket_max"),
-        ).first()
-        seen = marks["run_wm"]
-        if legacy:
-            legacy_max = marks["bucket_max"]
-            if seen is None and run_base == 0:
-                seen = legacy_max
-    if current is not None and seen is not None and abs_epoch <= seen:
+        seen = current.agg(
+            F.max(F.when(F.col("wm_base") == run_base, F.col("last_epoch")))
+        ).first()[0]
+    if seen is not None and abs_epoch <= seen:
         state = current  # replay: fold nothing, republish report below
     else:
         summary = (
@@ -1105,21 +999,6 @@ def _gap_state_merge(
             F.lit(run_base).cast("long").alias("wm_base"),
         )
         fold = summary.unionByName(watermark)
-        if legacy and legacy_max is not None:
-            # first new-code fold over a legacy table: pin the legacy
-            # run's high-water mark as the run-0 watermark NOW — the
-            # merge below overwrites bucket epochs with this fold's,
-            # after which the legacy mark cannot be reconstructed
-            fold = fold.unionByName(
-                spark.range(1).select(
-                    F.lit(None).cast("long").alias("_b"),
-                    F.lit(None).cast("long").alias("lo"),
-                    F.lit(None).cast("long").alias("hi"),
-                    F.lit(0).cast("long").alias("cnt"),
-                    F.lit(int(legacy_max)).cast("long").alias("last_epoch"),
-                    F.lit(0).cast("long").alias("wm_base"),
-                )
-            )
         if current is not None:
             # NULL groups fine here: bucket rows key as (_b, NULL),
             # watermark rows as (NULL, run_base) — one group per run.
@@ -1236,9 +1115,4 @@ def gap_monitor_sink(
             report_path, id_col, bucket_width,
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream_df, _merge, checkpoint_path)

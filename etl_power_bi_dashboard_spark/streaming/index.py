@@ -45,13 +45,30 @@ def read_embedding_stream(spark, path: str) -> DataFrame:
     return spark.readStream.schema(EMBEDDING_DDL).parquet(path)
 
 
-# Epoch-id stride between logical runs: epoch = run_base + batch_id.
-_RUN_STRIDE = runbase.RUN_STRIDE
-
 # Tests set this to surface violations of the bit-identical-replay
 # invariant on recency ties (see _latest_per_key); off in production —
 # the check is an eager extra aggregation per compaction.
 DEBUG_ASSERT_TIE_PAYLOADS = False
+
+
+def _scan_root(spark, index_path: str) -> tuple[list[int], int]:
+    """``(epoch ids, largest claimed stride base or -1)`` of the index
+    root. The base is taken from both ``_runbase_`` sentinels and
+    ``epoch=`` directories, so an index whose sentinels were lost still
+    never re-claims a stride its data already occupies."""
+    fs, root = runbase.fs_path(spark, index_path)
+    epochs: list[int] = []
+    existing = -1
+    if fs.exists(root):
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if name.startswith("_runbase_"):
+                existing = max(existing, int(name.rsplit("_", 1)[1]))
+            elif name.startswith("epoch="):
+                e = int(name.split("=", 1)[1])
+                epochs.append(e)
+                existing = max(existing, e - e % runbase.RUN_STRIDE)
+    return epochs, existing
 
 
 def _run_base(spark, index_path: str, checkpoint_path: str) -> int:
@@ -62,47 +79,15 @@ def _run_base(spark, index_path: str, checkpoint_path: str) -> int:
     and even without collision, latest-epoch ordering across runs would
     be meaningless (an old run's epoch 1 would beat a new run's epoch 0,
     resurrecting stale embeddings). The claim/resume protocol lives in
-    ``streaming/runbase.claim_run_base`` (shared with the gap monitor);
-    this wrapper supplies the index-specific pieces: sentinels live in
-    the index root itself (underscore-prefixed, so parquet readers skip
-    them), and the existing base is discovered from both sentinels and
-    ``epoch=`` partition dirs (an index whose sentinels were lost still
-    never re-claims a stride its data already occupies). No
-    ``legacy_base``: a checkpoint from a pre-marker build of this sink
-    would resume under a fresh stride, and the one crash-replayed batch
-    would then land at a new ``epoch=`` dir alongside its original copy
-    — but this sink writes whole per-epoch directories and reads
-    through latest-epoch compaction, so the duplicate is shadowed, not
-    double-counted; tolerable storage overhead, never a wrong answer.
-    (The gap monitor cannot make that trade — its fold is additive —
-    hence its ``legacy_base=0``.)
+    ``streaming/runbase.claim_run_base``; sentinels live in the index
+    root itself (underscore-prefixed, so parquet readers skip them).
     """
-    jvm = spark._jvm
-
-    def _p(path: str):
-        return jvm.org.apache.hadoop.fs.Path(path)
-
-    conf = spark._jsc.hadoopConfiguration()
-    ifs = _p(index_path).getFileSystem(conf)
-
-    def _existing() -> int:
-        existing = -1
-        if ifs.exists(_p(index_path)):
-            for st in ifs.listStatus(_p(index_path)):
-                name = st.getPath().getName()
-                if name.startswith("_runbase_"):
-                    existing = max(existing, int(name.rsplit("_", 1)[1]))
-                elif name.startswith("epoch="):
-                    base_of = int(name.split("=", 1)[1]) // _RUN_STRIDE
-                    existing = max(existing, base_of * _RUN_STRIDE)
-        return existing
-
     return runbase.claim_run_base(
         spark,
         checkpoint_path,
         marker_prefix="ivf_run_base_",
         sentinel_dir=index_path,
-        existing_base_fn=_existing,
+        existing_base_fn=lambda: _scan_root(spark, index_path)[1],
     )
 
 
@@ -258,49 +243,34 @@ def ivf_compact_index(spark, index_path: str) -> int | None:
     returns None (a legitimate just-bootstrapped index; nothing to
     fold).
     """
-    jvm = spark._jvm
-
-    def _p(path: str):
-        return jvm.org.apache.hadoop.fs.Path(path)
-
-    conf = spark._jsc.hadoopConfiguration()
-    fs = _p(index_path).getFileSystem(conf)
-
-    if not fs.exists(_p(index_path)):
+    fs, root = runbase.fs_path(spark, index_path)
+    if not fs.exists(root):
         raise ValueError(
             f"ivf_compact_index: no index at {index_path!r} — the root "
             "does not exist (nothing was ever ingested there)"
         )
-
-    old_epochs: list[int] = []
-    existing = -1
-    for st in fs.listStatus(_p(index_path)):
-        name = st.getPath().getName()
-        if name.startswith("epoch="):
-            e = int(name.split("=", 1)[1])
-            old_epochs.append(e)
-            existing = max(existing, (e // _RUN_STRIDE) * _RUN_STRIDE)
-        elif name.startswith("_runbase_"):
-            existing = max(existing, int(name.rsplit("_", 1)[1]))
-
+    old_epochs, existing = _scan_root(spark, index_path)
     if not old_epochs:
         return None  # epoch-less root: nothing to fold, no stride burned
 
-    # Mechanical mid-batch guard (the ingest half of the precondition):
-    # an epoch directory still being committed carries the Hadoop
-    # committer's _temporary marker — folding now would delete a batch
-    # whose checkpoint has not committed, losing it forever.
-    for e in old_epochs:
-        if fs.exists(_p(f"{index_path}/epoch={e}/_temporary")):
-            raise RuntimeError(
-                f"ivf_compact_index: epoch={e} has an in-progress write "
-                "(_temporary present) — an ingest run is mid-batch; "
-                "fold between drains"
-            )
+    def _mid_batch() -> list[int]:
+        # an epoch directory still being committed carries the Hadoop
+        # committer's _temporary marker
+        return [e for e in old_epochs if fs.exists(
+            runbase.fs_path(spark, f"{index_path}/epoch={e}/_temporary")[1]
+        )]
 
-    base = existing + _RUN_STRIDE if existing >= 0 else 0
-    while not fs.createNewFile(_p(f"{index_path}/_runbase_{base}")):
-        base += _RUN_STRIDE
+    # Mechanical mid-batch guard (the ingest half of the precondition):
+    # folding now would delete a batch whose checkpoint has not
+    # committed, losing it forever.
+    busy = _mid_batch()
+    if busy:
+        raise RuntimeError(
+            f"ivf_compact_index: epoch={busy[0]} has an in-progress write "
+            "(_temporary present) — an ingest run is mid-batch; "
+            "fold between drains"
+        )
+    base = runbase.claim_stride(spark, index_path, existing)
 
     # mergeSchema: pre-fold epoch dirs have no src_epoch column; a
     # prior fold's dir does — the union must see both
@@ -318,17 +288,17 @@ def ivf_compact_index(spark, index_path: str) -> int | None:
     # mid-commit. Still best-effort — the docstring's fold-between-
     # drains precondition remains the hard contract — but this narrows
     # the window from the whole fold to the delete loop itself.
+    busy = _mid_batch()
+    if busy:
+        raise RuntimeError(
+            f"ivf_compact_index: epoch={busy[0]} gained an in-progress "
+            "write (_temporary) during the fold — an ingest run "
+            "started mid-fold; its batch is preserved (nothing "
+            "deleted), but the fold epoch now shadows-by-recency "
+            "only what it read. Re-run the fold between drains."
+        )
     for e in old_epochs:
-        if fs.exists(_p(f"{index_path}/epoch={e}/_temporary")):
-            raise RuntimeError(
-                f"ivf_compact_index: epoch={e} gained an in-progress "
-                "write (_temporary) during the fold — an ingest run "
-                "started mid-fold; its batch is preserved (nothing "
-                "deleted), but the fold epoch now shadows-by-recency "
-                "only what it read. Re-run the fold between drains."
-            )
-    for e in old_epochs:
-        fs.delete(_p(f"{index_path}/epoch={e}"), True)
+        fs.delete(runbase.fs_path(spark, f"{index_path}/epoch={e}")[1], True)
     return base
 
 

@@ -1,14 +1,12 @@
 """Checkpoint-keyed run-base claim protocol, shared by every streaming
 sink that needs ABSOLUTE epoch ids (``abs_epoch = run_base + batch_id``):
-``streaming/index.ivf_append_sink`` and
-``streaming/events.gap_monitor_sink``.
+``streaming/index.ivf_append_sink``, ``streaming/index.ivf_compact_index``
+and ``streaming/events.gap_monitor_sink``.
 
 Why it exists: Spark's ``epoch_id`` is CHECKPOINT-LOCAL — every fresh
 checkpoint restarts at 0 — so raw epoch ids collide across logical runs
-against the same long-lived output (an index, a state table). Each
-consumer used to carry its own copy of the claim dance (marker scan,
-create-exclusive sentinel loop, stride constant); the copies had already
-begun to drift, so the crash/race-sensitive part now lives here once.
+against the same long-lived output (an index, a state table). The
+crash/race-sensitive part of the claim lives here once.
 
 Protocol (all traffic through the Hadoop FileSystem API, so it holds on
 whatever filesystem the URIs name — local, HDFS, or an object store with
@@ -17,29 +15,14 @@ an atomic-create primitive):
 - resume (same checkpoint): the ``<marker_prefix><base>`` marker file in
   the checkpoint dir is re-read, so replayed batches keep the absolute
   epochs they were first folded/written under;
-- legacy resume (checkpoint has COMMITTED PROGRESS but predates the
-  marker — created by a build before this protocol existed): its batches
-  were folded under RAW epoch ids, i.e. base ``legacy_base`` (0).
-  SUPPORTED CARDINALITY: at most ONE legacy checkpoint per state table.
-  Two distinct marker-less checkpoints resuming against the same state
-  are indistinguishable from the safe folded-nothing case below (both
-  leave a claimed sentinel + confirmed ownership), so the second would
-  be pushed to a fresh stride and its one crash-replayed batch could
-  re-fold and double-count; migrating a second legacy run requires a
-  state reset (or deleting its checkpoint so it starts fresh).
-  Claiming a fresh stride here would let the one batch Spark
-  legitimately replays after a crash re-fold under a new, larger
-  absolute epoch — exactly the double-count the guard exists to stop —
-  so the legacy base is pinned and the marker written retroactively.
-  Callers that cannot inherit raw-epoch semantics pass
-  ``legacy_base=None`` and legacy checkpoints take the fresh-claim path;
-- fresh checkpoint: claim the next free ``RUN_STRIDE`` multiple above
-  everything the output has seen by atomically creating a
-  ``_runbase_<base>`` sentinel in ``sentinel_dir`` (create-exclusive:
-  two racing fresh runs take different strides instead of silently
-  sharing one), then publish the base as a marker in the checkpoint dir.
-  A crash before the marker publish leaves only an unused sentinel and
-  the resume claims a fresh stride — wasteful, never wrong.
+- fresh checkpoint (no marker, whether or not it has committed offsets):
+  claim the next free ``RUN_STRIDE`` multiple above everything the
+  output has seen by atomically creating a ``_runbase_<base>`` sentinel
+  in ``sentinel_dir`` (create-exclusive: two racing fresh runs take
+  different strides instead of silently sharing one), then publish the
+  base as a marker in the checkpoint dir. A crash before the marker
+  publish leaves only an unused sentinel and the resume claims a fresh
+  stride — wasteful, never wrong.
 
 Both the sentinel and the marker are empty files whose NAME carries the
 value (underscore-separated, never ``=``: a root-level file whose name
@@ -63,89 +46,53 @@ from typing import Callable
 RUN_STRIDE = 1_000_000
 
 
+def fs_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` via the session's Hadoop
+    configuration — the one entry point every streaming sink uses for
+    marker, sentinel and directory traffic."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def claim_stride(spark, sentinel_dir: str, existing: int) -> int:
+    """Atomically claim the lowest free ``RUN_STRIDE`` multiple above
+    ``existing`` (-1 = output empty) by creating its ``_runbase_<base>``
+    sentinel in ``sentinel_dir``; returns the claimed base."""
+    fs, sdir = fs_path(spark, sentinel_dir)
+    fs.mkdirs(sdir)
+    base = existing + RUN_STRIDE if existing >= 0 else 0
+    while not fs.createNewFile(
+        fs_path(spark, f"{sentinel_dir}/_runbase_{base}")[1]
+    ):
+        base += RUN_STRIDE
+    return base
+
+
 def claim_run_base(
     spark,
     checkpoint_path: str,
     marker_prefix: str,
     sentinel_dir: str,
     existing_base_fn: Callable[[], int],
-    legacy_base: int | None = None,
-    legacy_base_owned_fn: Callable[[], bool] | None = None,
 ) -> int:
     """Return the absolute-epoch base for the logical run identified by
-    ``checkpoint_path``, claiming a fresh stride if the checkpoint is new.
+    ``checkpoint_path``, claiming a fresh stride if the checkpoint holds
+    no marker yet.
 
     ``existing_base_fn`` is only called on the fresh-claim path (it may
     cost a Spark job — e.g. scanning a state table for its max epoch);
     it returns the largest stride-aligned base already present in the
-    output, or -1 if the output is empty. ``legacy_base`` enables the
-    pre-marker-checkpoint fallback documented in the module docstring.
-
-    ``legacy_base_owned_fn`` disambiguates the one collision the legacy
-    pin can hit: if a NEW-code run already claimed ``legacy_base`` (its
-    sentinel exists) AND the callback confirms the output shows that
-    run's ownership (e.g. a watermark row at the base), the legacy
-    checkpoint had necessarily folded nothing when that claim happened
-    (a fresh claim of the lowest stride requires an empty output), so
-    the legacy resume safely falls through to a fresh claim instead of
-    sharing the base — sharing would misclassify its new batches as
-    the other run's replays and silently drop them. When the sentinel
-    exists but ownership is NOT confirmed, the pin proceeds: that is a
-    prior legacy-pin attempt that crashed between sentinel and marker,
-    and re-pinning is exactly right.
-
-    CONTRACT: at most one legacy (pre-marker) checkpoint may exist per
-    state table. A second one is filesystem-indistinguishable from the
-    confirmed-ownership fall-through above and would take a fresh
-    stride despite having folded under raw epochs (replay double-count)
-    — see the module docstring; reset state before migrating a second.
+    output, or -1 if the output is empty.
     """
-    jvm = spark._jvm
-
-    def _p(path: str):
-        return jvm.org.apache.hadoop.fs.Path(path)
-
-    conf = spark._jsc.hadoopConfiguration()
-    cfs = _p(checkpoint_path).getFileSystem(conf)
-    if cfs.exists(_p(checkpoint_path)):
-        for st in cfs.listStatus(_p(checkpoint_path)):
+    cfs, ckpt = fs_path(spark, checkpoint_path)
+    if cfs.exists(ckpt):
+        for st in cfs.listStatus(ckpt):
             name = st.getPath().getName()
             if name.startswith(marker_prefix):
                 return int(name.rsplit("_", 1)[1])
-        if legacy_base is not None and _has_progress(cfs, _p, checkpoint_path):
-            # Marker-less checkpoint WITH committed batches: a build
-            # predating the marker folded them under raw epoch ids.
-            # Pin the legacy base so a crash-replayed batch is still
-            # recognized as already-folded — unless the base is
-            # verifiably owned by a new-code run (see docstring), in
-            # which case this legacy run folded nothing and starts
-            # fresh below.
-            sfs = _p(sentinel_dir).getFileSystem(conf)
-            sfs.mkdirs(_p(sentinel_dir))
-            claimed = sfs.createNewFile(
-                _p(f"{sentinel_dir}/_runbase_{legacy_base}")
-            )
-            if claimed or not (
-                legacy_base_owned_fn is not None and legacy_base_owned_fn()
-            ):
-                cfs.createNewFile(
-                    _p(f"{checkpoint_path}/{marker_prefix}{legacy_base}")
-                )
-                return legacy_base
-    existing = existing_base_fn()
-    sfs = _p(sentinel_dir).getFileSystem(conf)
-    sfs.mkdirs(_p(sentinel_dir))
-    base = existing + RUN_STRIDE if existing >= 0 else 0
-    while not sfs.createNewFile(_p(f"{sentinel_dir}/_runbase_{base}")):
-        base += RUN_STRIDE
-    cfs.mkdirs(_p(checkpoint_path))
-    cfs.createNewFile(_p(f"{checkpoint_path}/{marker_prefix}{base}"))
+    base = claim_stride(spark, sentinel_dir, existing_base_fn())
+    cfs.mkdirs(ckpt)
+    cfs.createNewFile(
+        fs_path(spark, f"{checkpoint_path}/{marker_prefix}{base}")[1]
+    )
     return base
-
-
-def _has_progress(cfs, _p, checkpoint_path: str) -> bool:
-    """True when the checkpoint has ever committed an offsets entry —
-    the mark that distinguishes a legacy RUN from a merely pre-created
-    (empty) checkpoint directory."""
-    off = _p(checkpoint_path + "/offsets")
-    return cfs.exists(off) and len(cfs.listStatus(off)) > 0

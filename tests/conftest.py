@@ -42,6 +42,20 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def olist_raw(spark, tmp_path_factory):
+    """Raw Olist input dir written by ``create_sample_data`` at its
+    default sizes (100 customers, 200 orders, 300 items): deterministic,
+    one review per order, every table a Spark CSV directory."""
+    from etl_power_bi_dashboard_spark.sources.synthetic import (
+        create_sample_data,
+    )
+
+    d = tmp_path_factory.mktemp("olist_raw")
+    create_sample_data(spark, str(d))
+    return str(d)
+
+
+@pytest.fixture(scope="session")
 def oracle():
     """DuckDB connection with the same tables registered as views, mirroring
     the driver's oracle harness."""

@@ -4,6 +4,9 @@ round-trip."""
 
 from __future__ import annotations
 
+import collections
+import csv
+import glob
 import os
 import shutil
 
@@ -20,18 +23,41 @@ from etl_power_bi_dashboard_spark.operators.transform import (
     fill_missing,
 )
 from etl_power_bi_dashboard_spark.pipeline import run_pipeline
-from etl_power_bi_dashboard_spark.sources.olist import extract_data
-
-RAW = "/root/reference/data/raw/"
+from etl_power_bi_dashboard_spark.sources.olist import FILENAMES, extract_data
 
 
 @pytest.fixture(scope="module")
-def raw_no_translation(tmp_path_factory):
+def raw_no_translation(olist_raw, tmp_path_factory):
     d = tmp_path_factory.mktemp("raw_no_trans")
-    for f in os.listdir(RAW):
-        if f != "product_category_name_translation.csv":
-            shutil.copy(os.path.join(RAW, f), d / f)
+    for f in os.listdir(olist_raw):
+        if f != FILENAMES["category_translation"]:
+            shutil.copytree(os.path.join(olist_raw, f), d / f)
     return str(d)
+
+
+def _csv_rows(raw_dir: str, table: str) -> list[dict]:
+    rows: list[dict] = []
+    for part in sorted(
+        glob.glob(os.path.join(raw_dir, FILENAMES[table], "part-*.csv"))
+    ):
+        with open(part, newline="") as f:
+            rows += list(csv.DictReader(f))
+    return rows
+
+
+def _expected_fact_rows(raw_dir: str) -> int:
+    """fact_sales cardinality recounted from the raw CSVs in plain
+    Python: every item whose order exists (inner join), fanned out by
+    that order's reviews, or kept once when it has none (left join)."""
+    orders = {r["order_id"] for r in _csv_rows(raw_dir, "orders")}
+    reviews = collections.Counter(
+        r["order_id"] for r in _csv_rows(raw_dir, "reviews")
+    )
+    return sum(
+        max(1, reviews[r["order_id"]])
+        for r in _csv_rows(raw_dir, "order_items")
+        if r["order_id"] in orders
+    )
 
 
 def test_extract_missing_required(spark, tmp_path):
@@ -107,19 +133,19 @@ def test_median_fill_interpolates(spark):
     assert sorted(filled) == [1.0, 2.0, 3.0, 4.0, 8.0]
 
 
-def test_quality_gates(spark):
-    dims, fact, aggs = run_pipeline(spark, RAW)
+def test_quality_gates(spark, olist_raw):
+    dims, fact, aggs = run_pipeline(spark, olist_raw)
     violations = quality.fk_violations(fact, dims)
     assert set(violations.values()) == {0}
     nulls = quality.null_audit(fact)
     assert all(v == 0 for v in nulls.values())
     assert quality.reconcile_totals(fact, aggs["sales_by_date"]) < 1e-6
     shapes = quality.shape_report({"fact_sales": fact})
-    assert shapes["fact_sales"][0] == 300
+    assert shapes["fact_sales"][0] == _expected_fact_rows(olist_raw)
 
 
-def test_sink_roundtrip(spark, tmp_path):
-    dims, fact, aggs = run_pipeline(spark, RAW)
+def test_sink_roundtrip(spark, olist_raw, tmp_path):
+    dims, fact, aggs = run_pipeline(spark, olist_raw)
     written = sinks.export_star(dims, fact, aggs, str(tmp_path))
     assert "fact_sales" in written and "dim_date" in written
     back = spark.read.parquet(str(tmp_path / "fact_sales_parquet"))

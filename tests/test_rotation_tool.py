@@ -48,3 +48,25 @@ def test_live_window_fronts_every_no_row_entry():
     front = set(order[:50])
     missing = [n for n in no_row if n not in front]
     assert missing == []
+
+
+def test_priority_window_is_the_rotation_output():
+    """The first 50 registry entries equal the tool's ranking over the
+    evidence the ``_PRIORITY`` window was cut from: the rounds its
+    header names ("from CORRECTNESS_r01-rNN"), not every round file
+    present — the tool's live output moves as soon as a newer round
+    lands. Hand-paste drift between the tool and ``_PRIORITY`` is what
+    the generated-window discipline exists to prevent."""
+    import inspect
+    import re
+
+    from etl_power_bi_dashboard_spark import plans
+
+    src = inspect.getsource(plans)
+    header = src[src.index("_PRIORITY = ["):]
+    cutoff = re.search(r"from CORRECTNESS_r01-r(\d+)", header)
+    assert cutoff, "_PRIORITY header must name its evidence cutoff round"
+    latest = rotation._load_rows(max_round=int(cutoff.group(1)))
+    want = rotation.compute_window(rotation._module_order(), latest)
+    got = list(plans.all_queries())[: len(want)]
+    assert got == want and len(want) == 50

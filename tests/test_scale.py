@@ -104,7 +104,7 @@ def test_ivf_probe_is_partition_pruned(spark, tmp_path):
     assert probe.count() > 0
 
 
-def test_partitioned_fact_sink(spark, tmp_path):
+def test_partitioned_fact_sink(spark, olist_raw, tmp_path):
     """export_star(partition_fact=True) writes fact_sales hive-partitioned
     by date_id (the 100 TB layout: date-pruned scans for period slices)."""
     import os
@@ -112,7 +112,7 @@ def test_partitioned_fact_sink(spark, tmp_path):
     from etl_power_bi_dashboard_spark import sinks
     from etl_power_bi_dashboard_spark.pipeline import run_pipeline
 
-    dims, fact, aggs = run_pipeline(spark, "/root/reference/data/raw/")
+    dims, fact, aggs = run_pipeline(spark, olist_raw)
     sinks.export_star(dims, fact, {}, str(tmp_path), partition_fact=True)
     fact_dir = tmp_path / "fact_sales_parquet"
     parts = [d for d in os.listdir(fact_dir) if d.startswith("date_id=")]

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.plans.base import load_events
 from etl_power_bi_dashboard_spark.streaming import events as se
+from etl_power_bi_dashboard_spark.streaming import runbase
+from etl_power_bi_dashboard_spark.streaming.runbase import RUN_STRIDE
 
 from .conftest import SF_DIR
 
@@ -1047,7 +1049,7 @@ def test_gap_monitor_sink_matches_batch_audit_and_guards_replay(
 
     shutil.rmtree(report)
     batch = spark.read.schema("event_id long").parquet(src)
-    run0 = (int(seen) // se._GAP_RUN_STRIDE) * se._GAP_RUN_STRIDE
+    run0 = (int(seen) // RUN_STRIDE) * RUN_STRIDE
     se._gap_state_merge(batch, int(seen), run0, state, report,
                         id_col="event_id", bucket_width=256)
     after = spark.read.parquet(state)
@@ -1068,7 +1070,7 @@ def test_gap_monitor_sink_matches_batch_audit_and_guards_replay(
     _drain(q2)
     st2 = spark.read.parquet(state)
     assert st2.agg(F.sum("cnt")).first()[0] == 2 * len(ids)
-    assert st2.agg(F.max("last_epoch")).first()[0] >= se._GAP_RUN_STRIDE
+    assert st2.agg(F.max("last_epoch")).first()[0] >= RUN_STRIDE
     # resume of run 2 (same checkpoint) re-reads its marker: no refold
     q3 = se.gap_monitor_sink(
         spark.readStream.schema("event_id long").parquet(src),
@@ -1096,7 +1098,7 @@ def test_gap_monitor_resumed_old_run_still_folds_after_newer_run(
     b3 = spark.createDataFrame(
         [(i,) for i in range(200, 300)], "event_id long"
     )
-    stride = se._GAP_RUN_STRIDE
+    stride = RUN_STRIDE
     se._gap_state_merge(b1, 0, 0, state, report, "event_id", 64)
     se._gap_state_merge(b2, stride, stride, state, report, "event_id", 64)
     # resumed run 0, NEW batch at abs epoch 1 — must FOLD
@@ -1120,138 +1122,40 @@ def test_gap_monitor_resumed_old_run_still_folds_after_newer_run(
     assert rep.missing == 0
 
 
-def test_gap_monitor_legacy_state_and_checkpoint_upgrade(spark, tmp_path):
-    """A state table + checkpoint written by a pre-watermark build (no
-    wm_base column, no gap_run_base_ marker, raw epoch ids): the resume
-    must adopt run base 0 (raw-epoch semantics) and the guard must fall
-    back to the legacy rows' max(last_epoch), so the one batch Spark
-    replays after a crash does NOT re-fold — and the next genuinely-new
-    batch does."""
+def test_gap_monitor_markerless_checkpoint_claims_fresh_stride_and_folds(
+    spark, tmp_path
+):
+    """A checkpoint that committed offsets but carries no run-base
+    marker, resumed after another run claimed base 0 against the same
+    state path: it claims a FRESH stride, not base 0 — sharing would
+    misread its new batches as the other run's replays and silently
+    drop them — and its batches fold."""
     import os
 
     state = str(tmp_path / "st")
     report = str(tmp_path / "rp")
-    ckpt = str(tmp_path / "ck")
-    batch = spark.createDataFrame([(i,) for i in range(50)], "event_id long")
-    legacy = (
-        batch.select(F.col("event_id").alias("id"))
-        .withColumn("_b", F.expr("id DIV 64"))
-        .groupBy("_b")
-        .agg(
-            F.min("id").alias("lo"),
-            F.max("id").alias("hi"),
-            F.count("*").cast("long").alias("cnt"),
-        )
-        .withColumn("last_epoch", F.lit(3).cast("long"))
-    )
-    legacy.write.mode("overwrite").parquet(state)
-    se._mark_complete(spark, state)
-    # checkpoint with committed progress but no run-base marker
-    os.makedirs(os.path.join(ckpt, "offsets"), exist_ok=True)
-    with open(os.path.join(ckpt, "offsets", "0"), "w") as f:
+    bare_ckpt = str(tmp_path / "ck_bare")
+    os.makedirs(os.path.join(bare_ckpt, "offsets"), exist_ok=True)
+    with open(os.path.join(bare_ckpt, "offsets", "0"), "w") as f:
         f.write("v1")
-    base = se._monitor_run_base(spark, state, state + "__stage", ckpt)
-    assert base == 0
-    # crash-replayed legacy epoch 3: guard falls back to legacy max — skip
-    se._gap_state_merge(batch, 3, 0, state, report, "event_id", 64)
-    assert spark.read.parquet(state).agg(F.sum("cnt")).first()[0] == 50
-    # new batch at epoch 4 folds and writes the run-0 watermark row
-    se._gap_state_merge(batch, 4, 0, state, report, "event_id", 64)
-    st = spark.read.parquet(state)
-    assert st.agg(F.sum("cnt")).first()[0] == 100
-    assert (
-        st.filter(F.col("wm_base") == 0).agg(F.max("last_epoch")).first()[0]
-        == 4
-    )
-    # a later FRESH checkpoint claims a strictly higher stride, never 0
-    base2 = se._monitor_run_base(
-        spark, state, state + "__stage", str(tmp_path / "ck2")
-    )
-    assert base2 >= se._GAP_RUN_STRIDE
-
-
-def test_gap_monitor_legacy_mark_survives_newer_run_interleave(
-    spark, tmp_path
-):
-    """The legacy high-water mark must survive a NEWER run folding
-    first: the first new-code fold over a legacy table materializes the
-    run-0 watermark row from the legacy rows' max(last_epoch), so a
-    legacy checkpoint resuming AFTER that merge (which overwrites the
-    bucket rows' epochs) still skips its crash-replayed batch instead
-    of double-counting it."""
-    state = str(tmp_path / "st")
-    report = str(tmp_path / "rp")
-    batch = spark.createDataFrame([(i,) for i in range(50)], "event_id long")
-    legacy = (
-        batch.select(F.col("event_id").alias("id"))
-        .withColumn("_b", F.expr("id DIV 64"))
-        .groupBy("_b")
-        .agg(
-            F.min("id").alias("lo"),
-            F.max("id").alias("hi"),
-            F.count("*").cast("long").alias("cnt"),
-        )
-        .withColumn("last_epoch", F.lit(3).cast("long"))
-    )
-    legacy.write.mode("overwrite").parquet(state)
-    se._mark_complete(spark, state)
-    # a NEW run (fresh stride) folds first, over the same buckets —
-    # bucket last_epochs are now the new run's, but the legacy mark
-    # must have been pinned as the run-0 watermark row
-    stride = se._GAP_RUN_STRIDE
-    se._gap_state_merge(
-        batch, stride, stride, state, report, "event_id", 64
-    )
-    st = spark.read.parquet(state)
-    assert st.agg(F.sum("cnt")).first()[0] == 100
-    wm0 = (
-        st.filter(F.col("wm_base") == 0).agg(F.max("last_epoch")).first()[0]
-    )
-    assert wm0 == 3
-    # legacy checkpoint resumes (run base 0) and replays its epoch 3:
-    # must SKIP (guard reads the materialized run-0 watermark)
-    se._gap_state_merge(batch, 3, 0, state, report, "event_id", 64)
-    assert spark.read.parquet(state).agg(F.sum("cnt")).first()[0] == 100
-    # and its genuinely-new epoch 4 still folds
-    se._gap_state_merge(batch, 4, 0, state, report, "event_id", 64)
-    assert spark.read.parquet(state).agg(F.sum("cnt")).first()[0] == 150
-
-
-def test_gap_monitor_legacy_checkpoint_never_shares_a_claimed_base(
-    spark, tmp_path
-):
-    """A legacy checkpoint that committed offsets but never published
-    state, racing a NEW-code run that claimed base 0 against the same
-    state path: the legacy resume must take a FRESH stride (its
-    watermark row proves base 0 is owned; the legacy run folded
-    nothing), not share base 0 — sharing would misread its new batches
-    as the other run's replays and silently drop them."""
-    import os
-
-    state = str(tmp_path / "st")
-    report = str(tmp_path / "rp")
-    legacy_ckpt = str(tmp_path / "ck_legacy")
-    os.makedirs(os.path.join(legacy_ckpt, "offsets"), exist_ok=True)
-    with open(os.path.join(legacy_ckpt, "offsets", "0"), "w") as f:
-        f.write("v1")
-    # new-code run claims base 0 (state empty at claim time) and folds
+    # another run claims base 0 (state empty at claim time) and folds
     base_new = se._monitor_run_base(
         spark, state, state + "__stage", str(tmp_path / "ck_new")
     )
     assert base_new == 0
     batch = spark.createDataFrame([(i,) for i in range(30)], "event_id long")
     se._gap_state_merge(batch, 0, 0, state, report, "event_id", 64)
-    # legacy checkpoint resumes: must NOT share base 0
-    base_legacy = se._monitor_run_base(
-        spark, state, state + "__stage", legacy_ckpt
+    # the marker-less checkpoint resumes: must NOT share base 0
+    base_bare = se._monitor_run_base(
+        spark, state, state + "__stage", bare_ckpt
     )
-    assert base_legacy >= se._GAP_RUN_STRIDE
+    assert base_bare >= RUN_STRIDE
     # its batch folds under its own run, nothing dropped
     more = spark.createDataFrame(
         [(i,) for i in range(100, 130)], "event_id long"
     )
     se._gap_state_merge(
-        more, base_legacy, base_legacy, state, report, "event_id", 64
+        more, base_bare, base_bare, state, report, "event_id", 64
     )
     assert spark.read.parquet(state).agg(F.sum("cnt")).first()[0] == 60
 
@@ -1271,7 +1175,7 @@ def test_gap_monitor_randomized_interleaved_runs_match_simulator(
     rng = random.Random(7)
     state = str(tmp_path / "st")
     report = str(tmp_path / "rp")
-    stride = se._GAP_RUN_STRIDE
+    stride = RUN_STRIDE
     width = 32
     runs: dict[int, list[list[int]]] = {0: [], stride: []}
     for base, start in ((0, 0), (stride, 10_000)):
@@ -1340,8 +1244,6 @@ def test_claim_run_base_sequential_strides(spark, tmp_path):
     increasing stride multiples (0, S, 2S) even when the discovery
     callback reports nothing — the sentinel files alone must prevent a
     stride from being claimed twice."""
-    from etl_power_bi_dashboard_spark.streaming import runbase
-
     sent = str(tmp_path / "out__runs")
     bases = [
         runbase.claim_run_base(
@@ -1353,7 +1255,7 @@ def test_claim_run_base_sequential_strides(spark, tmp_path):
         )
         for i in range(3)
     ]
-    assert bases == [0, runbase.RUN_STRIDE, 2 * runbase.RUN_STRIDE]
+    assert bases == [0, RUN_STRIDE, 2 * RUN_STRIDE]
     # resume: the same checkpoint re-reads its marker, no new claim
     again = runbase.claim_run_base(
         spark,
@@ -1364,7 +1266,7 @@ def test_claim_run_base_sequential_strides(spark, tmp_path):
             AssertionError("resume must not re-scan")
         ),
     )
-    assert again == runbase.RUN_STRIDE
+    assert again == RUN_STRIDE
 
 
 def _seam_total(spark, state_path):

@@ -8,12 +8,10 @@ import pytest
 from etl_power_bi_dashboard_spark import views
 from etl_power_bi_dashboard_spark.pipeline import run_pipeline
 
-RAW = "/root/reference/data/raw/"
-
 
 @pytest.fixture(scope="module")
-def star(spark):
-    dims, fact, aggs = run_pipeline(spark, RAW)
+def star(spark, olist_raw):
+    dims, fact, aggs = run_pipeline(spark, olist_raw)
     views.register_star_views(spark, dims, fact)
     return dims, fact, aggs
 

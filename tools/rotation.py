@@ -43,14 +43,17 @@ WINDOW_SIZE = 50
 FORCE_FRONT: set[str] = set()
 
 
-def _load_rows() -> dict[str, tuple[int, dict]]:
-    """query -> (latest round with a driver row, that round's row)."""
+def _load_rows(max_round: int | None = None) -> dict[str, tuple[int, dict]]:
+    """query -> (latest round with a CORRECTNESS row, that round's row),
+    over the rounds up to ``max_round`` (all rounds when None)."""
     latest: dict[str, tuple[int, dict]] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
+        if max_round is not None and rnd > max_round:
+            continue
         for name, row in json.load(open(path)).items():
             if name not in latest or rnd >= latest[name][0]:
                 latest[name] = (rnd, row)
