@@ -6,24 +6,34 @@ Parquet is the scale path (columnar, predicate-pushdown-friendly; at
 `partition_fact=True` does exactly that). CSV export mirrors the
 reference's BI-import convenience and is always coalesced to one
 part-file per table, like pandas' single-file output.
+
+``export_star`` writes its tables concurrently, one pool thread per table,
+over one shared ``fact_sales`` cache: every table is persisted before the
+first write, so the aggregates read the cached fact instead of re-running
+the items ⨝ orders ⨝ reviews lineage. Every cache the export created is
+released only after the pool has joined, failed writes included; caches
+the caller made are left alone.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame
 
 
-def _write_csv(df: DataFrame, path: str) -> None:
-    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-
-
-def _write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def _write_pair(
+    df: DataFrame, output_path: str, name: str, partition_by: list[str] | None
+) -> None:
+    """One table as a one-part-file CSV, then as Parquet."""
+    base = os.path.join(output_path, name)
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(f"{base}_csv")
     w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    w.parquet(f"{base}_parquet")
 
 
 def export_star(
@@ -35,33 +45,47 @@ def export_star(
 ) -> list[str]:
     """S4+S5: write every table as both CSV and Parquet under
     ``output_path`` (dim_*/fact_sales/agg_* naming, ef:421-432).
-    Returns the list of table names written."""
-    written: list[str] = []
-    tables: dict[str, DataFrame] = {}
-    for name, df in dims.items():
-        tables[f"dim_{name}"] = df
+    Returns the list of table names written, dims then fact then aggs.
+    Raises the first failed table's error once every write has ended."""
+    tables: dict[str, DataFrame] = {f"dim_{n}": df for n, df in dims.items()}
     if fact is not None:
         tables["fact_sales"] = fact
-    for name, df in aggs.items():
-        tables[f"agg_{name}"] = df
-    for name, df in tables.items():
-        # each table is written twice (CSV + parquet); persist around
-        # the pair so the upstream lineage — for fact_sales, the whole
-        # join/aggregate pipeline — executes once, not per-format
-        df = df.persist()
-        try:
-            _write_csv(df, os.path.join(output_path, f"{name}_csv"))
-            _write_parquet(
-                df,
-                os.path.join(output_path, f"{name}_parquet"),
-                ["date_id"]
-                if (partition_fact and name == "fact_sales")
-                else None,
-            )
-        finally:
+    tables.update({f"agg_{n}": df for n, df in aggs.items()})
+    if not tables:
+        return []
+    # persist() on a cached frame returns the same object, so ownership
+    # is read from the storage level first. Input order puts fact_sales
+    # before the aggregates, whose cached plans then read the fact cache.
+    created: list[DataFrame] = []
+    for df in tables.values():
+        if df.storageLevel == StorageLevel.NONE:
+            created.append(df.persist())
+    session = next(iter(tables.values())).sparkSession
+    try:
+        with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+            # one copy of the caller's local properties (job group, tags,
+            # scheduler pool) per task: threads sharing one copy overwrite
+            # each other's call site, and writes lose their description
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(session)(_write_pair),
+                    df,
+                    output_path,
+                    name,
+                    ["date_id"]
+                    if (partition_fact and name == "fact_sales")
+                    else None,
+                )
+                for name, df in tables.items()
+            ]
+    finally:
+        # aggregates before the fact they read, so no uncache has to
+        # re-plan a dependent cache
+        for df in reversed(created):
             df.unpersist()
-        written.append(name)
-    return written
+    for f in futures:
+        f.result()
+    return list(tables)
 
 
 BI_CONTRACT = """# BI integration contract

@@ -1,6 +1,7 @@
 """Pipeline behavior tests beyond golden replication: optional-source
 fallback, error-tolerant extract, fan-out semantics, quality gates, sink
-round-trip."""
+round-trip, and the concurrent star export's outputs, caches, job
+properties and failure path."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import os
 import shutil
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -144,18 +146,6 @@ def test_quality_gates(spark, olist_raw):
     assert shapes["fact_sales"][0] == _expected_fact_rows(olist_raw)
 
 
-def test_sink_roundtrip(spark, olist_raw, tmp_path):
-    dims, fact, aggs = run_pipeline(spark, olist_raw)
-    written = sinks.export_star(dims, fact, aggs, str(tmp_path))
-    assert "fact_sales" in written and "dim_date" in written
-    back = spark.read.parquet(str(tmp_path / "fact_sales_parquet"))
-    assert back.count() == fact.count()
-    csv_back = spark.read.option("header", True).csv(str(tmp_path / "dim_seller_csv"))
-    assert csv_back.count() == dims["seller"].count()
-    contract = sinks.write_bi_contract(str(tmp_path))
-    assert os.path.exists(contract)
-
-
 def test_compact_parquet_reduces_files_preserving_rows(spark, tmp_path):
     from etl_power_bi_dashboard_spark.sinks import compact_parquet
 
@@ -214,3 +204,119 @@ def test_write_observed_collects_metrics_without_extra_scan(spark, tmp_path):
     metrics = write_observed(df, out)
     assert metrics == {"n_rows": 3, "null_k": 1}
     assert spark.read.parquet(out).count() == 3
+
+
+def _star(spark, raw_dir):
+    dims, fact, aggs = run_pipeline(spark, raw_dir)
+    names = [f"dim_{n}" for n in dims] + ["fact_sales"] + [f"agg_{n}" for n in aggs]
+    return dims, fact, aggs, names
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs. Compared as sets, not sizes: the
+    context cleaner may drop older tests' RDDs at any time."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _rounded(df, digits: int = 6):
+    """Doubles rounded: a re-run of a sum over another partition layout
+    may differ from the written value in the last bits."""
+    return df.select([
+        F.round(c.name, digits).alias(c.name)
+        if c.dataType.typeName() == "double" else F.col(c.name)
+        for c in df.schema
+    ])
+
+
+def test_sink_roundtrip(spark, olist_raw, tmp_path):
+    """Every table's CSV and Parquet read back hold the same row multiset,
+    exactly (both are written from one cached frame) and, doubles rounded,
+    the source frame's; ``written`` is dims, fact, aggs in input order;
+    the export leaves no persisted RDD behind; the BI contract is written
+    beside the star."""
+    dims, fact, aggs, names = _star(spark, olist_raw)
+    sources = dict(zip(names, [*dims.values(), fact, *aggs.values()]))
+    before = _persistent_rdds(spark)
+    written = sinks.export_star(dims, fact, aggs, str(tmp_path))
+    assert _persistent_rdds(spark) <= before
+    assert written == names
+    for name, src in sources.items():
+        csv_back = spark.read.schema(src.schema).option("header", True).csv(
+            str(tmp_path / f"{name}_csv"))
+        parquet_back = spark.read.parquet(str(tmp_path / f"{name}_parquet"))
+        assert csv_back.exceptAll(parquet_back).isEmpty(), name
+        assert parquet_back.exceptAll(csv_back).isEmpty(), name
+        assert _rounded(parquet_back).exceptAll(_rounded(src)).isEmpty(), name
+        assert _rounded(src).exceptAll(_rounded(parquet_back)).isEmpty(), name
+    assert os.path.exists(sinks.write_bi_contract(str(tmp_path)))
+
+
+def test_export_star_keeps_caller_caches(spark, olist_raw, tmp_path):
+    """persist() on a cached frame returns that frame, so the export must
+    release only the caches it created, never the caller's."""
+    dims, fact, aggs, _ = _star(spark, olist_raw)
+    dims["date"].cache()
+    fact.cache()
+    try:
+        sinks.export_star(dims, fact, aggs, str(tmp_path))
+        assert dims["date"].storageLevel != StorageLevel.NONE
+        assert fact.storageLevel != StorageLevel.NONE
+        assert dims["product"].storageLevel == StorageLevel.NONE
+    finally:
+        dims["date"].unpersist()
+        fact.unpersist()
+
+
+def test_export_star_jobs_carry_caller_properties(spark, olist_raw, tmp_path):
+    """Each pool task runs under its own copy of the caller's local
+    properties: every export job belongs to the caller's job group, and
+    every file write keeps its call site ("csv at ...", "parquet at ...")
+    as its SQL execution description."""
+    dims, fact, aggs, names = _star(spark, olist_raw)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    tracker = sc.statusTracker()
+
+    def newest_executions(width: int = 256) -> list:
+        bus.waitUntilEmpty()
+        n = sql_store.executionsCount()
+        seq = sql_store.executionsList(max(0, n - width), min(n, width))
+        return [seq.apply(k) for k in range(seq.size())]
+
+    last_id = max((e.executionId() for e in newest_executions(1)), default=-1)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "export-star-properties"
+    sc.setJobGroup(group, None)
+    try:
+        sinks.export_star(dims, fact, aggs, str(tmp_path))
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    # a subset, not equality: the status store evicts its oldest jobs
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) >= 2 * len(names)
+    writes = [
+        e for e in newest_executions()
+        if e.executionId() > last_id
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert len(writes) == 2 * len(names)
+    fmts = [str(e.description()).split(" ", 1)[0] for e in writes]
+    assert sorted(fmts) == ["csv"] * len(names) + ["parquet"] * len(names)
+
+
+def test_export_star_failed_write_releases_caches(spark, olist_raw, tmp_path):
+    """One table's failed write does not stop the others; the export
+    raises it only after every write has ended and every cache it
+    created is released."""
+    dims, fact, aggs, names = _star(spark, olist_raw)
+    aggs["broken"] = spark.range(4).where(F.assert_true(F.col("id") < 2).isNull())
+    before = _persistent_rdds(spark)
+    with pytest.raises(Exception, match="id < 2"):
+        sinks.export_star(dims, fact, aggs, str(tmp_path))
+    assert _persistent_rdds(spark) <= before
+    for name in names:
+        for fmt in ("csv", "parquet"):
+            assert (tmp_path / f"{name}_{fmt}" / "_SUCCESS").exists(), (name, fmt)
+    assert not (tmp_path / "agg_broken_parquet").exists()
