@@ -48,24 +48,18 @@ def sales_by_month(fact: DataFrame, dim_date: DataFrame) -> DataFrame:
 
 
 def sales_by_category(fact: DataFrame, dim_product: DataFrame) -> DataFrame:
-    """J5 + A3 (ef:292-313); groups by the english category when present."""
-    key = (
-        "product_category_name_english"
-        if "product_category_name_english" in dim_product.columns
-        else "product_category_name"
-    )
+    """J5 + A3 (ef:292-313) by the english category, which
+    `create_dimensional_model` always provides (translated, or the
+    Portuguese name when the translation table is absent)."""
+    key = F.col("product_category_name_english")
     joined = fact.join(
-        F.broadcast(
-            dim_product.select("id", "product_category_name", "product_category_name_english")
-            if "product_category_name_english" in dim_product.columns
-            else dim_product.select("id", "product_category_name")
-        ),
+        F.broadcast(dim_product.select("id", key)),
         fact["product_id"] == F.col("id"),
         "inner",
     )
     agg = (
-        joined.filter(F.col(key).isNotNull())  # pandas groupby drops NaN keys
-        .groupBy(F.col(key).alias("category_name"))
+        joined.filter(key.isNotNull())  # pandas groupby drops NaN keys
+        .groupBy(key.alias("category_name"))
         .agg(*_sales_aggs())
     )
     return _avg_order_value(agg)

@@ -97,11 +97,11 @@ def recompute_centroids(assigned: DataFrame, with_sse: bool = False) -> DataFram
     array re-assembly (sorted by position). All JVM-side.
 
     ``with_sse=True`` adds a ``_sse`` column (per-cluster Σ d2) computed
-    INSIDE the same aggregation (round 13, guide §1.2): each row's d2
+    INSIDE the same aggregation: each row's d2
     repeats once per exploded position, so the (cluster, pos) group sum
     of d2 at ANY single position is exactly the cluster's Σ d2 — the
-    pos=0 slice is taken. This folds the per-iteration SSE job into the
-    centroid-recompute job the loop already pays (2 actions/iter → 1)."""
+    pos=0 slice is taken. The per-iteration SSE thus costs no job of
+    its own beyond the centroid recompute (1 action per iteration)."""
     cols = ["cluster_id"] + (["d2"] if with_sse else [])
     ex = assigned.select(
         *cols, F.posexplode("cv").alias("pos", "x")
@@ -151,10 +151,10 @@ def kmeans(
     for _ in range(iters):
         # pure-map assignment: SSE against the CURRENT centroids is the
         # sum of the chosen d2 — no re-join needed.
-        # Round-12: materialize the assignment ONCE per iteration — it
+        # Materialize the assignment ONCE per iteration — it
         # feeds the SSE aggregate, the centroid recompute AND (for the
         # last round) the caller's final consumption, and each of those
-        # re-ran the full distance map on the lazy plan (2 corpus
+        # re-runs the full distance map on the lazy plan (2 corpus
         # passes per iteration + 1 at the end, measured). The
         # checkpoint holds (vec_id, cv, cluster_id, d2) — the same
         # corpus-sized working set MLlib's KMeans caches; storage is
@@ -165,7 +165,7 @@ def kmeans(
         ).localCheckpoint(eager=True)
         # collect K·dim doubles to the driver: truncates lineage so the
         # plan depth is constant in the iteration count. SSE rides in
-        # the SAME aggregation/collect (round 13): one action per
+        # the SAME aggregation/collect: one action per
         # iteration instead of a separate Σd2 scan job.
         rows = recompute_centroids(assigned, with_sse=True).collect()
         sse_history.append(

@@ -125,9 +125,9 @@ def jaccard_pairs(
             .select("shingle")
         )
         shingled = shingled.join(allowed, "shingle", "semi")
-    # Round-12 (guide §2.4): the (possibly df-capped) posting table
-    # feeds BOTH sides of the pair self-join AND the size aggregate —
-    # lazily the shingle explode (plus the df-cap semi-join) re-ran
+    # The (possibly df-capped) posting table feeds BOTH sides of the
+    # pair self-join AND the size aggregate — lazily the shingle
+    # explode (plus the df-cap semi-join) re-runs
     # once per consumer (~4×). One eager truncation, priced inside the
     # query; the posting table is (doc_id, shingle) rows, tiny next to
     # the candidate pairs downstream.
@@ -233,11 +233,10 @@ def verify_candidate_jaccard_sets(
     (LSH/SimHash) needs at scale.
 
     The jaccard projection is wrapped in a non-deterministic always-true
-    conditional (round-12, guide §4.4 applied to a JVM expression): the
-    optimizer otherwise pushes ``filter(jaccard >= t)`` INTO the join
+    conditional: the optimizer otherwise pushes ``filter(jaccard >= t)`` INTO the join
     condition and ALSO re-computes the expression in the output
     projection, so ``array_intersect`` — the dominant per-pair cost —
-    ran ~2.5× per candidate (codegen CSE does not span the join/filter/
+    would run ~2.5× per candidate (codegen CSE does not span the join/filter/
     project operator boundary). ``monotonically_increasing_id() >= 0``
     is true for every row by construction (non-negative 31-bit partition
     id ‖ 33-bit counter), but its non-determinism stops the optimizer
@@ -247,7 +246,7 @@ def verify_candidate_jaccard_sets(
     3.20 s (−28%); output proven identical (row counts + exceptAll in
     both directions empty).
 
-    INVARIANT the guard relies on (guide §4.4's trade): no OTHER filter
+    INVARIANT the guard relies on: no OTHER filter
     may need to push below this projection — the non-determinism blocks
     all predicate pushdown through it. Today the only predicates above
     are the jaccard threshold (must not push — that is the point) and
@@ -261,7 +260,7 @@ def verify_candidate_jaccard_sets(
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     jac = inter / (F.size("sh_a") + F.size("sh_b") - inter)
     jac_once = F.when(F.monotonically_increasing_id() >= 0, jac)
-    # Round-13 length pre-filter (lossless, guide §1.2): J(A,B) ≤
+    # Length pre-filter (lossless): J(A,B) ≤
     # min(|A|,|B|)/max(|A|,|B|), so any pair that could pass the
     # jaccard filter has size ratio ≥ threshold — checked with one
     # double division per candidate BEFORE the array_intersect (the
@@ -448,13 +447,13 @@ def minhash_lsh_dedup_pairs(
     equivalence of the two paths is pinned by
     tests/test_dedup.py::test_d3_shared_shingles_equivalence.
     """
-    # Round-12 (guide §2.4/§1.2): two lineage truncations, both priced
+    # Two lineage truncations, both priced
     # inside the query (localCheckpoint, no cross-run state):
     # - the shingle-set table feeds the signature build AND both sides
     #   of the verification join — lazily the corpus re-shingles 3×;
     # - the banded signature table feeds BOTH sides of the LSH
     #   candidate self-join, and the k·|sh| hash evaluations per doc
-    #   (the pipeline's dominant per-row cost) re-ran once per side.
+    #   (the pipeline's dominant per-row cost) re-run once per side.
     #   Banding first makes the checkpointed working set tiny
     #   (n_docs × n_bands short rows).
     sets_ = (

@@ -4,11 +4,10 @@ give you *edges*; deduplication needs the *components* so each duplicate
 group collapses to one representative).
 
 Algorithm: alternating large-star / small-star edge rewriting (Kiveris
-et al.) — O(log² n) alternations with a shrinking edge set, promoted to
-the default in round 12 after a measured A/B against the previous
-min-label propagation (rounds = graph diameter, full edge list
-reshuffled every round; kept as ``connected_components_minlabel``, the
-differential oracle). ``localCheckpoint`` truncates the lineage so the
+et al.) — O(log² n) alternations with a shrinking edge set, chosen
+over min-label propagation by a measured A/B (propagation takes graph-
+diameter rounds and reshuffles the full edge list every round; it is
+kept as ``connected_components_minlabel``, the differential oracle). ``localCheckpoint`` truncates the lineage so the
 plan doesn't grow with iterations.
 
 At 100 TB: candidate edges come from LSH buckets (operators/dedup.py),
@@ -48,8 +47,8 @@ def pagerank(
     static (edge, out-degree) table is built once and checkpointed), and
     the contributions aggregate on dst (one keyed shuffle — the same
     join+groupBy rendezvous as connected_components). Dangling-node mass
-    (no out-edges) redistributes uniformly, and since round 13 it rides
-    through the SAME aggregate: each dangling node carries one static
+    (no out-edges) redistributes uniformly, riding through the SAME
+    aggregate: each dangling node carries one static
     deg=1 pseudo-edge to a NULL dst tagged ``dang=1`` (rank/1 is
     bit-identical to rank), so the (dang=1, NULL) group of the one
     groupBy IS the dangling mass — no separate per-iteration dangling
@@ -68,8 +67,8 @@ def pagerank(
     """
     # checkpoint FIRST, count the checkpointed RDD: the count would
     # otherwise execute the (possibly join-built) nodes plan once more
-    # just to learn n (round-12 measurement: q_ml2's node plan is a
-    # union over a fact-join edge list — one full extra execution).
+    # just to learn n (measured: q_ml2's node plan is a union over a
+    # fact-join edge list — one full extra execution).
     base_nodes = nodes.select(F.col(node_col).alias("node")).localCheckpoint(
         eager=True
     )
@@ -78,7 +77,7 @@ def pagerank(
         return nodes.select(
             F.col(node_col).alias("node"), F.lit(0.0).alias("rank")
         )
-    # Rank-side broadcast (round-12, guide §3.1/§2.4): the per-iteration
+    # Rank-side broadcast: the per-iteration
     # join ``ed ⨝ ranks`` otherwise SHUFFLES the static edge table every
     # round to rendezvous with a node-sized ranks table. When the node
     # count fits a broadcast relation comfortably, ship ranks instead:
@@ -107,14 +106,14 @@ def pagerank(
         .select("src", "dst", "deg")
         .localCheckpoint(eager=True)
     )
-    # Round-13 (guide §2.4/§1.2, VERDICT r12 #2): fold the dangling-mass
-    # term into the SAME per-iteration aggregate as the contributions.
+    # The dangling-mass term rides the SAME per-iteration aggregate as
+    # the contributions.
     # Each dangling node (no out-edges) gets one static pseudo-edge with
     # deg=1 toward a NULL dst tagged dang=1: its whole rank then rides
     # through the one ``dedges ⨝ ranks → groupBy`` pass (rank/1 is
     # bit-identical to rank), and the (dang=1, NULL) group IS the
-    # dangling mass — the separate per-iteration dang_nodes⨝ranks
-    # aggregate job disappears. Grouping by (dang, dst) keeps pseudo-
+    # dangling mass — no separate per-iteration dang_nodes⨝ranks
+    # aggregate job. Grouping by (dang, dst) keeps pseudo-
     # rows out of every real node's aggregate even for a NULL node id.
     dst_t = ed.schema["dst"].dataType
     dang_edges = (
@@ -136,10 +135,9 @@ def pagerank(
     # (contribution sum s, dangling mass dm) — evaluated inline at the
     # edge join each iteration, so the join's build side is the
     # aggregate slices themselves and no intermediate "ranks" relation
-    # is ever materialized or broadcast (round-13 second pass: the
-    # ranks-broadcast build was itself nesting the contribs and dang
-    # broadcast builds — three broadcast jobs per iteration where two
-    # suffice). Every node appears as a dedges src (non-dangling nodes
+    # is ever materialized or broadcast (a broadcast ranks relation
+    # would nest the contribs and dang broadcast builds — three
+    # broadcast jobs per iteration where two suffice). Every node appears as a dedges src (non-dangling nodes
     # via their real edges, dangling ones via their pseudo-edge), so
     # evaluating rank at the join covers the whole node set.
     rank_of = (
@@ -248,13 +246,12 @@ def connected_components(
     components (chains from transitive near-dup edges), log² n is not.
 
     Each alternation is two keyed shuffles (groupBy min + rewrite
-    join) plus a distinct; convergence (round 13) is detected
-    STRUCTURALLY on the current edge set — the composite's fixpoints
-    are exactly the symmetric star forests centered at component
-    minima, and "star forest" is one predicate over the per-node
-    (min-neighbor, degree) aggregate the large-star step already
-    computes — so the old set-equality test's trailing no-op
-    alternation and its exceptAll pass are gone. A non-converged exit
+    join) plus a distinct; convergence is detected STRUCTURALLY on the
+    current edge set — the composite's fixpoints are exactly the
+    symmetric star forests centered at component minima, and "star
+    forest" is one predicate over the per-node (min-neighbor, degree)
+    aggregate the large-star step already computes — so no trailing
+    no-op alternation or exceptAll pass is needed. A non-converged exit
     raises rather than returning wrong star centers — propagation's
     partial labels degrade soft, a partial star forest does not.
     """
@@ -265,8 +262,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Round-13 convergence test (VERDICT r12 #2, guide §1.2): the
-    # fixpoints of the large-star/small-star composite are exactly the
+    # Convergence test: the fixpoints of the large-star/small-star composite are exactly the
     # symmetric star forests centered at component minima (Kiveris et
     # al.), and "e is a star forest" is checkable STRUCTURALLY on the
     # current edge set: every node either has all-larger neighbors (a
@@ -276,12 +272,10 @@ def connected_components(
     # ≥ 2 or a smaller second neighbor violates the criterion.] The
     # per-node (min(dst), count) aggregate the test needs is the SAME
     # aggregate the large-star step consumes, so one checkpointed
-    # groupBy serves both — versus the old bottom-of-loop set-equality
-    # test (count + exceptAll), which could only detect the fixpoint by
-    # paying one full extra NO-OP alternation to reproduce e, plus an
-    # exceptAll pass over both sets. Detecting on e directly saves that
-    # whole trailing alternation (d6 at sf0.1: 4 → 3) and the
-    # exceptAll; soundness both ways: a star forest is provably
+    # groupBy serves both — whereas a bottom-of-loop set-equality test
+    # (count + exceptAll) can only detect the fixpoint by paying one
+    # full extra NO-OP alternation to reproduce e, plus an exceptAll
+    # pass over both sets (d6 at sf0.1: 3 alternations instead of 4); soundness both ways: a star forest is provably
     # invariant under both rewrites (see the check in
     # tests/test_graph_ops.py pinning star-vs-minlabel agreement), and
     # a non-star-forest is changed by the composite, so the loop can
@@ -292,7 +286,7 @@ def connected_components(
         # large-star: min over the full neighborhood, larger neighbors
         # rewired to it; symmetry of `e` makes one groupBy see Γ(u).
         # Checkpointed: it feeds the convergence test AND the rewrite
-        # join (two consumers — guide §2.4), and it is node-sized.
+        # join (two consumers), and it is node-sized.
         mins = (
             e.groupBy("src")
             .agg(F.min("dst").alias("mn"), F.count("*").alias("_d"))
@@ -349,7 +343,7 @@ def connected_components(
     # the converged mins aggregate (checkpointed above) already holds
     # the star structure: satellites are exactly its mn < src rows and
     # their label IS mn — no need to re-aggregate the edge set (one
-    # groupBy shuffle saved; round-13 review finding)
+    # groupBy shuffle saved)
     ptr = mins.filter(F.col("mn") < F.col("src")).select(
         "src", F.col("mn").alias("label")
     )
@@ -458,9 +452,9 @@ def triangle_counts(
         .unionAll(und.select(F.col("hi").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
-        # round-12 batch 10 (guide §2.4): d_lo and d_hi are two separate
-        # broadcast builds — serial jobs — and each re-ran this
-        # union+groupBy over the full edge list; node-count-sized rows
+        # d_lo and d_hi are two separate broadcast builds — serial
+        # jobs — and each would re-run this union+groupBy over the full
+        # edge list; node-count-sized rows
         .localCheckpoint(eager=True)
     )
     d_lo = maybe_b(
@@ -470,10 +464,10 @@ def triangle_counts(
         deg.select(F.col("node").alias("hi"), F.col("deg").alias("deg_hi"))
     )
     # orient u→v iff (deg(u), u) < (deg(v), v)
-    # Round-12 (guide §2.4): the oriented edge list feeds the wedge
-    # stream side AND the broadcast wedge side below — two separate
-    # executions (the broadcast build is its own job), each re-running
-    # the two degree joins over the full edge list. One eager
+    # The oriented edge list feeds the wedge stream side AND the
+    # broadcast wedge side below — two separate executions (the
+    # broadcast build is its own job), each re-running the two degree
+    # joins over the full edge list. One eager
     # truncation (edge-sized, same working set as `und`) halves that.
     oriented = (
         und.join(d_lo, "lo").join(d_hi, "hi")

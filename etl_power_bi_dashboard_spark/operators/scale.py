@@ -218,7 +218,7 @@ def distributed_row_number(
 
     pc = list(partition_cols)
     keyed = df.withColumn("_drn_b", bucket)
-    # Round-12 measured NON-change: checkpointing this counts table (it
+    # Measured NON-change: checkpointing this counts table (it
     # feeds both the offsets and totals broadcasts, so the lazy form
     # executes the input 3×) LOST on the bench — at local[32] the
     # duplicate subplans run concurrently inside one job and the eager

@@ -139,12 +139,12 @@ def assign_clusters(
     """IVF assignment: nearest centroid per vector (rounded L2², centroid-id
     tie-break → deterministic).
 
-    Round-12 (guide §2.3 "aggregate before you shuffle"): the argmin is
+    Aggregate before you shuffle: the argmin is
     a ``min(struct(d2, centroid_id, cv))`` aggregation, not a
     ``row_number() == 1`` window — struct field-order comparison gives
     the identical (distance, centroid-id) tie-break, but the aggregate
     partial-combines MAP-SIDE, so only one row per vector reaches the
-    exchange and nothing is sorted; the window form shuffled and sorted
+    exchange and nothing is sorted; the window form shuffles and sorts
     all |corpus|·K scored rows. (d2, centroid_id) is unique per vector,
     so the trailing cv field never participates in the comparison.
     """
@@ -187,12 +187,12 @@ def lsh_bucket(vec: Column, n_planes: int = 8, dim: int = 64, tag: str = "") -> 
     expected bucket occupancy stays O(1); ``tag`` derives independent
     hash tables for the multi-table recall boost.
 
-    Round-12 (guide §1.2 per-task work): the plane sign matrix is
+    Per-task work: the plane sign matrix is
     DATA-INDEPENDENT — md5 of the constant string f"{tag}{p}|{j}" —
     but Catalyst cannot constant-fold it through the transform lambda,
-    so the old expression recomputed n_planes·dim = 512 md5 digests
+    so an in-plan expression recomputes n_planes·dim = 512 md5 digests
     PER ROW (the dominant bucket cost, measured ~3× on v3/d13). The
-    signs are now derived once driver-side with hashlib.md5 (bit-equal
+    signs are derived once driver-side with hashlib.md5 (bit-equal
     to Spark's md5 over the same UTF-8 bytes; pinned against the
     brute-force law test's independent derivation) and embedded as a
     literal array the row-side expression merely indexes. Summation
@@ -302,7 +302,7 @@ def lsh_neardup_pairs(
         cands = pairs_t if cands is None else cands.unionByName(pairs_t)
     if n_tables > 1:
         cands = cands.distinct()
-    # Round-12 (guide §1.2, §2.3): verification cost is per-CANDIDATE, so
+    # Verification cost is per-CANDIDATE, so
     # per-VECTOR work must not ride along. (1) Each side's L2 norm is
     # projected on the vector table BEFORE the candidate join — n norm
     # folds per side instead of one per candidate pair (the projection
@@ -314,8 +314,8 @@ def lsh_neardup_pairs(
     # fold ran ~2.5× per candidate. dot/(na·nb) with na = norm(v)
     # evaluated upstream is the same expression tree per value as
     # cosine(va, vb) = dot/(norm(va)·norm(vb)) — bit-identical doubles.
-    # INVARIANT (guide §4.4's trade): the guard blocks ALL predicate
-    # pushdown below the cosine projection; callers must pre-filter the
+    # INVARIANT: the guard blocks ALL predicate pushdown below the
+    # cosine projection; callers must pre-filter the
     # vector table BEFORE this join if they need scan pruning — only the
     # cosine threshold and zero-selectivity isnotnull sit above today.
     va = vecs.select(

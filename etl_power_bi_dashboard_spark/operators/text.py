@@ -197,24 +197,24 @@ def winnow(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     no full window and are dropped (both engines see the same row set —
     the q_x15 oracle applies the same length predicate).
 
-    Shuffle shape (round-7 rework): the ONE exchange is the DOC table,
+    Shuffle shape: the ONE exchange is the DOC table,
     repartitioned by id BEFORE the gram explode. Generate preserves its
     child's hash partitioning, so the per-doc window needs only a local
     sort (no exchange of the ~|text| gram rows per doc), and the final
     (id, fp) distinct is clustering-satisfied by the same partitioning
-    (id is a subset of the grouping key) — the previous shape shuffled
-    the full exploded+hashed gram table (~30 bytes × Σ|text| rows) for
-    the window; this one moves each document exactly once. See
+    (id is a subset of the grouping key) — rather than shuffling the
+    full exploded+hashed gram table (~30 bytes × Σ|text| rows) for the
+    window, this moves each document exactly once. See
     gram_hash for why this is rows, not arrays.
     """
     n = F.length(text_col)
     win = Window.partitionBy(id_col).orderBy("i").rowsBetween(0, w - 1)
-    # Round-12 (guide §2.2): a bare repartition(id) is advisory under AQE,
+    # A bare repartition(id) is advisory under AQE,
     # which sizes partitions by BYTES — a small one-file doc table
     # coalesces to ~1 partition and the (expensive, per-gram) hash fold
     # serializes on one core. Pin the width only when the scan is below
     # the default parallelism; at real scale the keyed repartition stays
-    # advisory and AQE sizes it by input bytes as before.
+    # advisory and AQE sizes it by input bytes.
     sc = df.sparkSession.sparkContext
     kept = df.filter(n >= k + w - 1)
     if df.rdd.getNumPartitions() < sc.defaultParallelism:

@@ -137,10 +137,10 @@ def fact_sales(spark: SparkSession, sf_dir: str, parallel: bool = False) -> Data
     handles skew. ``date_id`` is the reference's yyyyMMdd surrogate key
     (reference `src/etl_functions.py:170, 223`).
 
-    ``parallel=True`` (round 12, guide §2.2) routes the lineitem side
+    ``parallel=True`` routes the lineitem side
     through ``ensure_parallelism`` keyed on ``l_orderkey``: a one-file
     scan yields ONE task, so the join probe + partial (count-distinct)
-    aggregation of every downstream rollup serialized on one core. The
+    aggregation of every downstream rollup would serialize on one core. The
     repartition is a no-op at real scale (scan partitions >= cores) and
     hash-partitions on the join key, so a sort-merge plan reuses it.
     Opt-in — only ORDER-INSENSITIVE consumers (the a1–a7/dax rollups)

@@ -987,10 +987,10 @@ def _fk_audit_rel(
 ) -> DataFrame:
     """One FK relationship's audit row — see q_q9_fk_audit. Module-level
     so the empty-input contract (all-zero row, not NULLs) is pinned
-    directly by tests/test_round9.py.
+    directly by the tests' TestFkAuditEmptyInputs class.
 
-    Round-12 measured NON-change: routing the child side through
-    ensure_parallelism (the batch-6/7 single-task-scan fix) was NEUTRAL
+    Measured NON-change: routing the child side through
+    ensure_parallelism (the single-task-scan fix) was NEUTRAL
     interleaved-probed (before 1.50–1.81 s, after 1.58 s) — the child
     partial agg is a plain count-by-long-key whose map-side hashmap is
     already cheap, so the extra raw-key exchange buys nothing locally
@@ -1005,9 +1005,9 @@ def _fk_audit_rel(
     )
     # coalesce(0): SUM over an EMPTY join output is NULL, but when
     # both child and parent are empty the report must say 0 parents
-    # / 0 referenced / 0 orphans, like the pre-rework count(*)
-    # shape did (ADVICE r8 — unreachable on TPC-H loads, but the
-    # helper's contract shouldn't change silently with the plan)
+    # / 0 referenced / 0 orphans, as a count(*) shape would
+    # (unreachable on TPC-H loads, but the helper's contract must not
+    # depend on the plan shape)
     stats = ca.join(par, "k", "full_outer").agg(
         F.coalesce(
             F.sum(F.when(F.col("_p").isNotNull(), 1).otherwise(0)),
@@ -1066,10 +1066,9 @@ def q_q9_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra exchange under AQE), and the 7 one-row results union
     driver-side-free. Coverage divides two exact BIGINTs.
 
-    (Round-8 rework, surfaced by the PLANS.md digest: the previous
-    semi-join + anti-join + re-count shape scanned the child twice and
-    the parent three times per edge — 35 scans / 49 shuffles for the
-    report; this form is 14 scans and one keyed join per edge with
+    (A semi-join + anti-join + re-count shape would scan the child
+    twice and the parent three times per edge — 35 scans / 49 shuffles
+    for the report; this form is 14 scans and one keyed join per edge with
     identical semantics, the difference between 2 and 5 passes over a
     100 TB fact per audited relationship.)
     """

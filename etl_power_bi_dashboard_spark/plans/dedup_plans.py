@@ -475,11 +475,11 @@ def q_d6_dup_clusters(
     from ..operators.graph import connected_components
 
     docs = load(spark, sf_dir, "documents")
-    # Round-12 (guide §2.4): two lineage truncations, priced inside the
+    # Two lineage truncations, priced inside the
     # timed query. The shingle-set table feeds the posting builder AND
     # both verification sides (3 corpus re-shingles → 1); the prefix
     # postings (a df-join + per-doc window pipeline, ~2 rows/doc out)
-    # feed BOTH sides of the candidate self-join, which lazily re-ran
+    # feed BOTH sides of the candidate self-join, which lazily re-runs
     # the whole df/window pipeline once per side.
     sets_ = dedup.shingle_sets(
         dedup.ensure_parallelism(docs, "doc_id"), n=1
@@ -607,11 +607,10 @@ def q_d8_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the chunks covering the span. No self-join — cost is linear
     in corpus chunks, the 100 TB-safe form.
 
-    Shape (round-12, guide §1.2/§2.3): ONE chunk expansion. The original
-    freq-join form (ch → groupBy(chunk_h) countDistinct, then
-    ch ⨝ freq back on chunk_h) executed the md5 chunk table TWICE — once
-    per join side — and shuffled every raw chunk OCCURRENCE for the
-    join. Aggregating first to (chunk_h, doc_id, c) makes nd a plain
+    Shape: ONE chunk expansion. A freq-join form (ch → groupBy(chunk_h)
+    countDistinct, then ch ⨝ freq back on chunk_h) executes the md5
+    chunk table TWICE — once per join side — and shuffles every raw
+    chunk OCCURRENCE for the join. Aggregating first to (chunk_h, doc_id, c) makes nd a plain
     count(*) window over chunk_h (rows per chunk = distinct docs, the
     exact countDistinct), and the per-doc stats re-weight by c:
     n_chunks = Σc, dup_chunks = Σc·[nd≥2]. One md5 pass, and only the
@@ -846,13 +845,12 @@ def q_d12_fuzzy_title_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     practice; exact-recall variants use q-gram prefix blocks).
     """
     docs = load(spark, sf_dir, "documents")
-    # Round-13 (guide §2.2, VERDICT r12 #5): the planner broadcast-hash-
-    # joins this blocked self-join (titles estimate far under the
-    # auto-broadcast threshold), so the candidate-pair levenshtein
-    # stage — the whole cost of this query — ran at the STREAM side's
-    # parallelism: the documents scan is one small parquet file = ONE
-    # task while 31 cores idled (the §2.2 single-task-map-stage pattern,
-    # not a shuffle problem — there is no shuffle on the stream side of
+    # The planner broadcast-hash-joins this blocked self-join (titles
+    # estimate far under the auto-broadcast threshold), so the
+    # candidate-pair levenshtein stage — the whole cost of this query —
+    # runs at the STREAM side's parallelism: the documents scan is one
+    # small parquet file = ONE task while the other cores idle (the
+    # single-task-map-stage pattern, not a shuffle problem — there is no shuffle on the stream side of
     # a BHJ). ensure_parallelism on the stream side only, ROUND-ROBIN
     # (unkeyed): under the BHJ the stream side's partitioning is
     # irrelevant to the join, and hashing by the block token would
@@ -1014,7 +1012,7 @@ def q_d16_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ch = dedup.chunk_table(
         dedup.ensure_parallelism(docs, "doc_id"), n=8, stride=4
     ).distinct()
-    # round-12 (guide §2.4, the d6 shingle-set pattern): the chunk-set
+    # The d6 shingle-set pattern: the chunk-set
     # table feeds FOUR consumers (prefix postings, the full posting
     # side, and both verify sides) — without truncation each re-runs
     # the chunk explode + md5 + collect_set. Doc-count-sized rows.

@@ -27,12 +27,11 @@ def _delta(cust: DataFrame) -> DataFrame:
     strictly negative for every key ≥ 0, so an insert key can never
     collide with a real customer (a fixed "+1,000,000" offset would
     collide once SF reaches ~7 and 150k·SF keys pass the offset,
-    silently turning the inserts into overwrites). The round-8 semantic
-    audit caught the original bare negation here: this fixture's keys
-    START AT ZERO and −0 == 0, so customer 0's "insert" silently became
-    a second source row for key 0 and the u1 MERGE emitted a
-    duplicate-key dimension — identically on both engines, invisible to
-    the hash gate."""
+    silently turning the inserts into overwrites). A bare negation is
+    wrong too: this fixture's keys START AT ZERO and −0 == 0, so
+    customer 0's "insert" would become a second source row for key 0
+    and the u1 MERGE would emit a duplicate-key dimension — identically
+    on both engines, invisible to the hash gate."""
     updates = cust.filter(F.col("c_custkey") % 10 == 0).select(
         "c_custkey",
         "c_name",

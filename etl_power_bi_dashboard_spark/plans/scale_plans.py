@@ -163,7 +163,7 @@ WITH per_key AS (
 SELECT COUNT(*) AS n_keys,
        -- CAST: DuckDB's SUM(BIGINT) is HUGEINT (int128), which fetchdf()
        -- materializes as float64 (60000.0) while Spark's LongType sum is
-       -- int64 (60000) — the round-5 driver hash mismatch. Every other
+       -- int64 (60000), and the driver hashes differ. Every other
        -- integer SUM in the registry already casts; this one must too.
        CAST(SUM(n) AS BIGINT) AS n_rows,
        MAX(n) AS max_rows,

@@ -205,8 +205,8 @@ def q_d13_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: bucket equi-join (never all-pairs) → exact verify on
     candidates → min-label CC with lineage truncation (one shuffle per
-    round, rounds ≤ component diameter). CC algorithm choice (round 12,
-    measured): this graph's components are LSH-bucket near-dup
+    round, rounds ≤ component diameter). CC algorithm choice
+    (measured): this graph's components are LSH-bucket near-dup
     clusters — near-cliques whose diameter is structurally tiny (a
     cluster's members collide in a shared bucket and cosine-verify
     pairwise), so min-label propagation converges in 2-3 one-shuffle
@@ -331,10 +331,10 @@ def q_ml2_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .base import fact_sales
 
     fact = fact_sales(spark, sf_dir)
-    # Round-12: materialize the edge list ONCE — ``edges`` is a
+    # Materialize the edge list ONCE — ``edges`` is a
     # lineitem⨝orders join + distinct, and it feeds nodes (2 union
     # arms), the node count, and pagerank's own edge/degree tables;
-    # Catalyst shares no subplans, so the lazy form re-ran that join
+    # Catalyst shares no subplans, so the lazy form re-runs that join
     # ~5× before the first iteration. The distinct edge list is small
     # (customer×supplier pairs), so the checkpoint is cheap.
     edges = (
@@ -496,17 +496,17 @@ def q_v5_label_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     v = similarity.as_double(F.col("embedding"))
     nrm = similarity.norm(v)
-    # Round-12 (guide §1.2): the norm used to sit INSIDE the transform
-    # lambda, where Catalyst re-evaluates it per element (no CSE inside
-    # higher-order lambda bodies) — an O(dim) fold × dim elements =
-    # O(dim²) per row. It is now projected once per row below; the
+    # Inside the transform lambda the norm would be re-evaluated per
+    # element (no CSE inside higher-order lambda bodies) — an O(dim)
+    # fold × dim elements = O(dim²) per row. It is projected once per
+    # row below; the
     # non-deterministic always-true guard stops CollapseProject from
     # inlining it back into the lambda (same value — the guard is
     # identity on non-null input), and ensure_parallelism spreads the
     # compute-bound normalize+posexplode stage across cores instead of
     # the single task a one-file scan yields (no-op at real scale).
-    # INVARIANT (guide §4.4's trade): the guard blocks ALL predicate
-    # pushdown below this projection — fine here because no selective
+    # INVARIANT: the guard blocks ALL predicate pushdown below this
+    # projection — fine here because no selective
     # filter exists above it on this table; a future filter on emb must
     # be applied before this select or the scan stops pruning silently.
     pre = ensure_parallelism(
@@ -688,7 +688,7 @@ def q_v7_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     M, D = 8, 8
     emb = load(spark, sf_dir, "embeddings")
     v = similarity.as_double(F.col("embedding"))
-    # Round-12 (guide §2.2): the subvector explode + the per-(row,
+    # The subvector explode + the per-(row,
     # codeword) sq_dist folds below run BEFORE any exchange, i.e. in
     # the single task a one-file scan yields — repartition first so the
     # assignment scoring uses every core (no-op at real scale).
@@ -705,7 +705,7 @@ def q_v7_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     dcol = F.round(
         similarity.sq_dist(F.col("sv"), F.col("cv")), 6
     ).cast("decimal(12,6)")
-    # Round-12 measured NON-change: rewriting this argmin as
+    # Measured NON-change: rewriting this argmin as
     # groupBy(vec_id, s).agg(min(struct(_d, code_id))) LOST on the
     # bench (1.60 → 1.79 s A/B'd in one host phase): a struct is not a
     # hash-aggregation buffer type, so the aggregate falls back to
@@ -883,10 +883,9 @@ def q_v8_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same centroid/query conventions as v2; recall is exact-integer
     matches over n_queries·3 with one IEEE division.
 
-    Scale shape (round-8 rework, surfaced by the PLANS.md digest): the
-    per-setting branches previously each re-assigned the corpus and
-    re-scored their candidates — 3 full assignment passes for one
-    sweep. Now the assignment runs ONCE and candidates are scored ONCE
+    Scale shape: per-setting branches would each re-assign the corpus
+    and re-score their candidates — 3 full assignment passes for one
+    sweep. Instead the assignment runs ONCE and candidates are scored ONCE
     at the LARGEST n_probe (every smaller setting is exactly the
     ``pr <= n`` subset with unchanged cosines —
     ``similarity.ivf_probe_candidates``); the scored candidate table
@@ -1025,7 +1024,7 @@ def q_v9_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.as_double(F.col("embedding")).alias("qv"),
     )
     # the per-row 5-query cosine fold below is compute-bound; a one-file
-    # corpus scan would run it in a single task (guide §2.2) — no-op at
+    # corpus scan would run it in a single task — no-op at
     # real scale, same guard as cosine_topk
     c = ensure_parallelism(emb).select(
         "vec_id", similarity.as_double(F.col("embedding")).alias("cv")
@@ -1276,7 +1275,7 @@ def q_v10_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label's posting lists) — the equi-join shape is what makes that
     pruning expressible. Per-query top-k is a keyed window over ≤
     |label bucket| candidates; cosine is the v1 convention (DOUBLE
-    arrays, round 6, vec_id tie-break) so the driver hash gate applies.
+    arrays, rounded to 6 places, vec_id tie-break) so the driver hash gate applies.
     """
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(

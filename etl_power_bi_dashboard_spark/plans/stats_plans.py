@@ -74,9 +74,8 @@ def q_a14_percentiles_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     way interpolating percentile implementations do. One window sort per
     event_type partition, parallel across types.
 
-    Ranks are assigned with the sc5 range-partitioned pattern (round 5;
-    previously each event_type's rank window serialized that type's rows
-    into one task): unit-width value buckets within each type, per-
+    Ranks are assigned with the sc5 range-partitioned pattern (a per-
+    type rank window would serialize that type's rows into one task): unit-width value buckets within each type, per-
     (type, bucket) counts running-summed into broadcast offsets, then
     row_number within (type, bucket) + offset — identical rn to the
     per-type global window, with every per-row window partitioned. For
@@ -136,8 +135,8 @@ def q_ax2_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output is three SCALAR double columns (p50/p90/p99), not one
     array<double> — driver/BI canonicalizers sort on column values and
-    cannot hash or order list cells (round-3 driver row errored on
-    exactly that), and scalar columns are what a dashboard binds to.
+    cannot hash or order list cells (a driver row errors on exactly
+    that), and scalar columns are what a dashboard binds to.
     """
     ev = load_events(spark, sf_dir)
     pcts = F.percentile_approx("value", [0.5, 0.9, 0.99], 10000)
@@ -517,8 +516,8 @@ def q_a18_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest possible shape (map-side combine does all the work; nothing
     shuffles but 14 decimals per partition).
     """
-    # Round-12 (guide §2.2): the 15 decimal-moment partials ran inside
-    # the single task a one-file scan yields; project the four measure
+    # The 15 decimal-moment partials would run inside the single task
+    # a one-file scan yields; project the four measure
     # columns (all the agg needs) and repartition so the 128-bit decimal
     # arithmetic uses every core (no-op at real scale)
     li = ensure_parallelism(
@@ -868,12 +867,11 @@ def q_ml6_ab_proportion_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The contrast is DATA-DERIVED — the two supplier nations with the
     most line items (tie-break on the smaller nationkey), i.e. the two
-    largest samples: the round-8 semantic audit caught the original
-    FRANCE-vs-GERMANY name filter matching ZERO rows of the synthetic
-    fixture (NATION_0…24), so the z arithmetic had never executed and
-    the driver's r5 row was a degenerate 0-row agreement; fixed keys
-    were no better (the sf0.001 fixture has suppliers in only 10 of 25
-    nations). Counts (n, returns) come from one pass over lineitem
+    largest samples: a fixed FRANCE-vs-GERMANY name filter matches ZERO
+    rows of the synthetic fixture (NATION_0…24), leaving the z
+    arithmetic unexecuted behind a degenerate 0-row agreement, and fixed
+    keys are no better (the sf0.001 fixture has suppliers in only 10 of
+    25 nations). Counts (n, returns) come from one pass over lineitem
     joined to its supplier (broadcast dim); the top-2 pick is a window
     over the ≤|nations| post-aggregation rows (calendar-bounded class);
     the pooled-proportion z statistic is then a fixed IEEE expression
@@ -1027,9 +1025,9 @@ def q_a20_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scale import distributed_row_number
 
     ranked = _ranked_by_value_per_type(load_events(spark, sf_dir))
-    # Round-12: materialize the per-type medians (a handful of rows) —
-    # ``med`` is broadcast into ``dev``, whose plan the second rank
-    # pass executes twice; lazily each of those executions re-ran the
+    # Materialize the per-type medians (a handful of rows) — ``med``
+    # is broadcast into ``dev``, whose plan the second rank pass
+    # executes twice; lazily each of those executions re-runs the
     # ENTIRE first rank pass underneath the broadcast (12 event scans
     # for this query in PLANS.md; 4 after the checkpoints).
     med = (
@@ -1225,8 +1223,8 @@ def q_q10_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fp(df: DataFrame, cols: list, table: str) -> DataFrame:
         from ..operators.dedup import ensure_parallelism
 
-        # Round-12 (guide §2.2): the md5-per-row map used to run inside
-        # the single task a one-file scan yields. Project the canonical
+        # The md5-per-row map would run inside the single task a
+        # one-file scan yields. Project the canonical
         # string FIRST (the cheap concat — and the only column that
         # crosses the wire), repartition on it, and hash above the
         # exchange so the digest work uses every core. No-op at real
@@ -1519,7 +1517,7 @@ def q_a23_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "mon",
         )
-        # Round-12 (guide §2.4): the customer aggregate feeds the three
+        # The customer aggregate feeds the three
         # quintile rank passes (each consuming it 3× through
         # distributed_row_number's counts/offsets/rank paths) plus the
         # final join — ~10 executions of the orders scan + groupBy
@@ -1680,7 +1678,7 @@ def q_a26_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-order table on custkey), two grouped aggregations, and a
     window partitioned by cohort — no global windows, no fan-out.
     """
-    # Round-12 measured NON-change: ensure_parallelism here was neutral
+    # Measured NON-change: ensure_parallelism here was neutral
     # interleaved-probed (0.94–0.99 s both ways) — the per-row work is
     # integer month math, cheap enough that the single-task scan is not
     # the bottleneck; the extra exchange was not kept.
@@ -1989,8 +1987,7 @@ def _abc_classed(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary compare stops being exact."""
     from ..operators.scale import distributed_running_sum
 
-    # Round-12 (guide §2.2): the per-part revenue partials ran in the
-    # one task a single-file scan yields (shared by a27 and a32);
+    # The per-part revenue partials would run in the one task a single-file scan yields (shared by a27 and a32);
     # project the three needed columns and repartition on the group key
     # so the partial agg parallelizes AND the exchange satisfies the
     # groupBy distribution (no-op at real scale)
@@ -2208,8 +2205,7 @@ def q_a28_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     year·12+month ids so a missing month yields NULL effects rather
     than a silently mislabeled comparison.
     """
-    # Round-12 (guide §2.2): date-parse + decimal partial sums ran in
-    # the one task a single-file scan yields; project the needed columns
+    # Date-parse + decimal partial sums would run in the one task a single-file scan yields; project the needed columns
     # and repartition first (no-op at real scale)
     li = ensure_parallelism(
         load(spark, sf_dir, "lineitem").select(
@@ -2962,9 +2958,8 @@ def q_a32_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     abc = _abc_classed(spark, sf_dir).select(
         "l_partkey", "rev", "abc_class"
     )
-    # Round-12 (guide §2.2): both consumers below (monthly quantities,
-    # month horizon) re-execute this scan; each partial agg ran in the
-    # one task a single-file scan yields — repartition the projected
+    # Both consumers below (monthly quantities, month horizon)
+    # re-execute this scan; each partial agg would run in the one task a single-file scan yields — repartition the projected
     # columns first (no-op at real scale)
     li = ensure_parallelism(
         load(spark, sf_dir, "lineitem").select(
@@ -3100,7 +3095,7 @@ def q_q15_pk_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_rows == n_keys predicate.
     """
     parts = []
-    # Round-12 measured NON-change: ensure_parallelism on the fact-sized
+    # Measured NON-change: ensure_parallelism on the fact-sized
     # arms was neutral interleaved-probed (1.53–1.61 s both ways) — the
     # key-group partials are plain count-by-key hashmaps, so the raw-key
     # exchange buys nothing locally; the 10-arm plan keeps its minimal

@@ -514,7 +514,7 @@ def peak_concurrency_from_sessions(sess: DataFrame) -> DataFrame:
             )
         )
         .withColumn("day", F.col("ts").cast("date").cast("timestamp"))
-        # round-12 (guide §2.4): the boundary stream feeds THREE
+        # The boundary stream feeds THREE
         # consumers — day_max, the per-day nets (a broadcast build, its
         # own serial job) and the spine extent agg — and each union arm
         # re-runs the full sessionize (events scan + per-user window)

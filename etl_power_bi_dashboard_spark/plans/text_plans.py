@@ -798,12 +798,12 @@ def q_x14_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram joins rendezvous on single-token keys — broadcastable when
     the unigram table is small; AQE decides.
 
-    Round-12 measured NON-change: materializing uni/bg_counts once
+    Measured NON-change: materializing uni/bg_counts once
     (they are re-tokenized per consumer — 5 corpus passes) LOST on the
     bench (2.62 → 2.80 s): at local[32] the duplicate subplans run
     concurrently inside one job, and two eager checkpoints serialize
-    them — TWO checkpoints still tokenized the corpus twice, serially.
-    Round-12 batch 10 restructures instead (guide §1.2): ONE positional
+    them — TWO checkpoints still tokenize the corpus twice, serially.
+    The plan is restructured instead: ONE positional
     expansion (x = tk[i], y = try_element_at(tk, i+2) — NULL at the last
     position, ANSI-safe) counted once into the vocabulary-sized ``xy``
     table, checkpointed; unigram counts are Σ_y xy (every token is the
@@ -811,7 +811,7 @@ def q_x14_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Five corpus tokenizations → one, and the one checkpoint is of the
     Zipf-light count table, not the corpus.
     """
-    # Round-12 (guide §2.2): tokenize/explode/partial-count all run
+    # Tokenize/explode/partial-count all run
     # below the first exchange — in the single task a one-file scan
     # yields — so repartition the doc table first (no-op at real scale)
     docs = ensure_parallelism(load(spark, sf_dir, "documents"), "doc_id")
@@ -1236,7 +1236,7 @@ def q_x21_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     count tables — vocabulary-sized, so both broadcast; at an open-vocab
     100 TB corpus the bigram join flips to a keyed shuffle, same shape.
     """
-    # Round-12 (guide §2.2): train-side tokenize+counts and the
+    # Train-side tokenize+counts and the
     # held-out scoring joins (vs broadcast tables) otherwise run in the
     # one task a single-file scan yields — repartition the doc table
     # first (no-op at real scale)
@@ -1260,15 +1260,14 @@ def q_x21_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     train = docs.filter(F.col("doc_id") % 5 != 0)
     slots = bigram_slots(docs.filter(F.col("doc_id") % 5 == 0))
-    # Round-12 batch 10 (guide §1.2, generalizing the batch-1 uni
-    # checkpoint): ONE positional expansion of the train corpus
+    # ONE positional expansion of the train corpus
     # (x = tk[i], y = try_element_at(tk, i+2), NULL at the last
     # position, ANSI-safe) counted into the vocabulary-sized ``xy``
     # table, checkpointed. Unigram counts are Σ_y xy — every token is
     # the x of exactly one position — and bigram counts are the
-    # y-non-null rows, so the train side is tokenized ONCE where the
-    # batch-1 form still tokenized it twice (uni job + bg_counts
-    # broadcast build, both serial jobs).
+    # y-non-null rows, so the train side is tokenized ONCE rather than
+    # twice (a uni job + a bg_counts broadcast build, both serial
+    # jobs).
     xy = (
         train.select(F.split(F.col("text"), " ").alias("tk"))
         .select(
@@ -1637,19 +1636,18 @@ def q_x25_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: per-doc distinct 5-gram arrays stay a PURE MAP (transform over
     split positions + array_distinct — no explode until the grams leave
     the row). The exploded (gram, doc) pairs reduce BOTH ways without
-    ever joining on gram (round-7 rework — the previous shape joined
-    the full posting table back on gram and re-shuffled the join output
-    by doc): first_doc = min(doc_id) per gram, then n_novel per doc is
+    ever joining on gram (joining the full posting table back on gram
+    would re-shuffle the join output by doc): first_doc = min(doc_id) per gram, then n_novel per doc is
     just COUNT(*) of `first` grouped by first_doc (a gram is novel for
     exactly the doc that introduced it), and n_grams per doc is a
     direct count of the posting rows. Two doc-level row sets (~n_docs
     rows each) left-join at the end — AQE broadcasts. Shuffles: posting
-    table by gram, posting table by doc, 8-byte first_doc keys — the
-    posting-sized join-output shuffle is gone. Documents shorter than 5
+    table by gram, posting table by doc, 8-byte first_doc keys — no
+    posting-sized join-output shuffle. Documents shorter than 5
     words have no grams and drop on both engines (same predicate);
     zero-novel docs surface via coalesce(n_novel, 0).
     """
-    # Round-12 (guide §2.2): the 5-gram transform + explode runs below
+    # The 5-gram transform + explode runs below
     # the first exchange — single task on a one-file scan — in BOTH
     # concurrent duplicate subplans; repartition the doc table first
     # (no-op at real scale)
@@ -1661,7 +1659,7 @@ def q_x25_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat_ws(" ", F.slice(words, i + 1, 5)),
         )
     )
-    # Round-12 measured NON-change: checkpointing this posting table
+    # Measured NON-change: checkpointing this posting table
     # (it feeds both the novelty and the count aggregates) LOST on the
     # bench (2.45 → 2.53 s A/B'd in one host phase) — the x14 pattern:
     # both consumers sit inside ONE job at local[32], run their copies

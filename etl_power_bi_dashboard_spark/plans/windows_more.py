@@ -419,8 +419,7 @@ def q_p12_greedy_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     in DuckDB with a recursive CTE whose accumulator is the per-bucket
     bin-fill LIST (one recursion step per document in (md5, doc_id)
     order; "first bin with room" = list_position over a list_transform
-    predicate — round 11, closing the verdict's last closeable
-    oracle-less gap). The pure-Python first-fit law
+    predicate). The pure-Python first-fit law
     (tests/test_oracle_less_laws.py) and the capacity/determinism laws
     (tests/test_packing.py) remain as independent checks.
     """

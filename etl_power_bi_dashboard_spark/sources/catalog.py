@@ -76,8 +76,8 @@ def load_table(
     name: str,
     schema=None,
 ) -> DataFrame:
-    """Catalog read with schema evolution ON by default (round-12
-    verdict item 4 — the reference's F13 lesson, `src/etl_functions.py:
+    """Catalog read with schema evolution ON by default (the
+    reference's F13 lesson, `src/etl_functions.py:
     186-187`, generalized: a missing or narrowed column must never
     crash, nor silently null, a pipeline that declared its schema):
 

@@ -149,8 +149,8 @@ def conform_to_schema(df: DataFrame, schema: StructType | str) -> DataFrame:
             # multiple EXACT duplicates (legal post-join Spark output)
             # deterministically resolve to the first occurrence —
             # pinned by test_conform_exact_duplicate_names_picks_first_
-            # occurrence; erroring here was considered and rejected
-            # (round 9): the resolver's ambiguity error is exactly what
+            # occurrence; it does not error, because the resolver's
+            # ambiguity error is exactly what
             # this positional path exists to improve on
             idx = exact[0][0]
         elif len(hits) == 1:
@@ -189,7 +189,7 @@ def _widen_pair(a, b, case_sensitive: bool = False):
     """The narrower-to-wider join of two Spark DataTypes, or None when
     they are incomparable (no safe widening exists).
 
-    Recurses into nested types (round 12): structs join field-wise
+    Recurses into nested types: structs join field-wise
     (fields present on one side only are kept — the nested analogue of
     the column union; common fields widen recursively, resolved per
     ``case_sensitive``), arrays widen their element type, maps their

@@ -3,10 +3,9 @@
 The reference declares openpyxl (`requirements.txt:10`) but its code
 never imports it; neither container installs it. The reader therefore
 gates on a real import probe and raises a clear capability error, the
-same contract as ``sinks.write_transactional``'s Delta gate.
-
-Moved out of ``sources/jdbc.py`` in round 6 (advice: a driver-side
-pandas Excel parse has nothing to do with JDBC; module cohesion).
+same contract as ``sinks.write_transactional``'s Delta gate. It lives
+apart from ``sources/jdbc.py`` because a driver-side pandas Excel parse
+has nothing to do with JDBC.
 """
 
 from __future__ import annotations

@@ -116,10 +116,6 @@ def write_jdbc(
     writer.save()
 
 
-# The Excel reader moved to sources/excel.py (round 6, advice: a
-# driver-side pandas parse has nothing to do with JDBC).
-
-
 def _driver_connection(spark: SparkSession, url: str):
     """Driver-side java.sql connection via the JVM gateway — the
     transaction coordinator for the exactly-once sink (executors write

@@ -111,7 +111,7 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     the whole stream — the only formulation that survives an unbounded
     100 TB/day feed.
 
-    Round-11 audit vs the DAU bug class ("dropDuplicatesWithinWatermark
+    Checked against the DAU bug class ("dropDuplicatesWithinWatermark
     re-emits a key whose duplicates arrive in a later micro-batch when
     the event-time column is a window struct"): this site's event-time
     is the plain ``ts`` timestamp — the documented, contract-covered
@@ -147,9 +147,9 @@ def daily_active_users(
     its contract ("no duplicates whose event times are within the
     delay of each other") keys eviction off the FIRST-seen event time
     per key, and with a window struct as the event-time column it
-    re-emitted a user-day whose duplicates arrived in a later
-    micro-batch (double-counted DAU; found by the round-10 cross-batch
-    fuzz, pinned in tests/test_streaming_fuzz_builtin.py). Plain
+    re-emits a user-day whose duplicates arrive in a later
+    micro-batch (double-counted DAU; the cross-batch fuzz in
+    tests/test_streaming_fuzz_builtin.py pins it). Plain
     ``dropDuplicates`` on a key that includes the watermarked window
     is the textbook exact formulation for this shape.
     """
@@ -285,7 +285,7 @@ def enrich_stream(events: DataFrame, user_dim: DataFrame) -> DataFrame:
     file-backed dim the FILE LISTING is snapshotted when the DataFrame
     is created — overwriting the dim's parquet mid-query fails the next
     batch with FILE_NOT_EXIST rather than picking up the new rows
-    (probed empirically, round 11; transactional formats like Delta
+    (probed empirically; transactional formats like Delta
     re-resolve, plain parquet does not). For a dim that must be
     swappable while the query runs, use
     :func:`enrich_refreshing_parquet_sink`, which re-reads the dim path
@@ -560,7 +560,7 @@ def trending_topk_sink(
     replace-by-key, idempotent under replay — and (2) republishes the
     derived top-k per window from the merged state.
 
-    Scale shape (round 6; advice closed): state AND target are
+    Scale shape: state AND target are
     partitioned by ``ws`` (epoch seconds of window_start — a LONG, so
     partition dir names round-trip without timestamp-encoding hazards)
     and every batch touches ONLY the partitions whose windows appear in

@@ -1,15 +1,57 @@
 from __future__ import annotations
 
+import functools
 import os
 import sys
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
+import pandas as pd
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+# The stopword list the text laws recompute against, written out here so
+# the laws stay independent of the package's own constant.
+STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
+
+
+@functools.lru_cache(maxsize=None)
+def sf_table(name: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
+    """A fixture table as pandas, read once per session and shared by
+    every law that asks for it — callers must not modify it in place."""
+    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
+
+
+def doc_texts() -> dict[int, str]:
+    return {int(r["doc_id"]): r["text"] for _, r in sf_table("documents").iterrows()}
+
+
+def events_sorted() -> list[tuple]:
+    """(user_id, ts_us, event_id, event_type, value, ts) per event,
+    ordered by (user, ts, event_id)."""
+    recs = [
+        (
+            int(r["user_id"]),
+            int(pd.Timestamp(r["ts"]).value // 1000),
+            int(r["event_id"]),
+            r["event_type"],
+            float(r["value"]),
+            pd.Timestamp(r["ts"]),
+        )
+        for _, r in sf_table("events").iterrows()
+    ]
+    recs.sort(key=lambda t: (t[0], t[1], t[2]))
+    return recs
+
+
+def spark_decimal(x, places: str) -> Decimal:
+    """Replicate Spark's CAST(double AS DECIMAL(p,s)): HALF_UP at s."""
+    return Decimal(repr(float(x))).quantize(Decimal(places), ROUND_HALF_UP)
+
 
 TABLES = (
     "region",

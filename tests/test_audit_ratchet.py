@@ -1,23 +1,19 @@
 """Audit-coverage ratchet: every registry query must be pinned by a
-brute-force/property LAW test (the semantic-audit program, batches
-1-26) or carry a justified entry in the allowlist below.
+brute-force/property LAW test or carry a justified entry in the
+allowlist below.
 
 The driver's differential hash gate proves Spark == DuckDB, but not
-that the shared formula is RIGHT — round 7/8 audits found seven
-both-engines-wrong bugs the gate called green. This meta-test makes
-the law-test discipline structural: a new registry entry fails here
-until someone writes its law test or consciously allowlists it with a
-reason.
+that the shared formula is RIGHT: a definition misread identically by
+both engines passes the gate. This meta-test makes the law-test
+discipline structural: a new registry entry fails here until someone
+writes its law test or consciously allowlists it with a reason.
 
-Matching rule (tightened round 9 per ADVICE r8): a query counts as
-covered ONLY if its FULL name appears in a law-test file, or it has an
-explicit entry in OPERATOR_LAWS naming the law file + the operator
-symbol the law exercises (validated to exist). The old fallback —
-accepting the name's first underscore-token anywhere in the law text —
-was satisfiable by incidental variable names (`a12`, `r2`, `x1` are
-regression-math locals) and was in fact masking entries with no direct
-law; those are now either explicitly mapped or allowlisted with the
-evidence that replaces a law.
+Matching rule: a query counts as covered ONLY if its FULL name appears
+in a law-test file, or it has an explicit entry in OPERATOR_LAWS naming
+the law file + the operator symbol the law exercises (validated to
+exist). A looser match (the name's first underscore-token anywhere in
+the law text) would be satisfied by incidental variable names (`a12`,
+`r2`, `x1` are regression-math locals), so it is not accepted.
 """
 
 from __future__ import annotations
@@ -83,7 +79,7 @@ OPERATOR_LAWS = {
     "r2_range_join": ("test_properties.py", "range_join_buckets"),
     # composition: backward as-of law (brute-force, hypothesis) applied
     # against u4's SCD2 intervals, whose no-overlap/no-gap invariant is
-    # law-tested in test_round8_semantics.py (scd2 batch)
+    # law-tested in test_round8_semantics.py (u4)
     "r7_asof_against_scd2": ("test_properties.py",
                              "test_asof_join_matches_bruteforce"),
     # sweep-line peak vs brute-force per-instant maximum

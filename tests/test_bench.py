@@ -40,14 +40,19 @@ def test_shared_state_rows_follow_their_producer():
 
 
 def test_detail_file_holds_reps(tmp_path):
-    """Rep times go to BENCH_DETAIL.json only; the last stdout line keeps
-    exactly the compact keys a tail parser reads."""
+    """Rep times go to BENCH_DETAIL.json only: neither stdout line
+    carries them, and the last one keeps exactly the compact keys a tail
+    parser reads."""
     timings = {"q1": 1.0, "q2": 2.0}
     reps = {"q1": [1.0, 1.1, 1.0], "q2": [2.0, 2.5]}
     out = tmp_path / "BENCH_DETAIL.json"
     lines = bench.emit_records(
         timings, sf=0.1, reps=reps, write_detail=True, detail_path=str(out)
     )
+    assert len(lines) == 2
+    assert set(json.loads(lines[0])) == {
+        "metric", "value", "unit", "queries", "sf"
+    }
     assert set(json.loads(lines[-1])) == {
         "metric", "value", "unit", "n_queries", "sf"
     }

@@ -1,9 +1,9 @@
-"""Round-12 verdict item 4: the catalog path reads with schema
-evolution by DEFAULT — added columns surface (footer merge), type
-drift widens (v1/v2/... snapshot lakes), and a declared schema is
-enforced at the boundary (missing -> typed NULL, extra -> dropped),
-generalizing the reference's F13 backfill (`src/etl_functions.py:
-186-187`) from one hardcoded column to any table."""
+"""The catalog path reads with schema evolution by DEFAULT — added
+columns surface (footer merge), type drift widens (v1/v2/... snapshot
+lakes), and a declared schema is enforced at the boundary (missing ->
+typed NULL, extra -> dropped), generalizing the reference's F13 backfill
+(`src/etl_functions.py:186-187`) from one hardcoded column to any
+table."""
 
 from __future__ import annotations
 

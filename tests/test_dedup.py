@@ -85,8 +85,6 @@ def test_minhash_fast_hasher_same_recall_contract(spark):
     recall = len(set(fast) & truth) / len(truth)
     assert recall >= 0.95, f"fast-path LSH recall too low: {recall}"
 
-    import pytest
-
     with pytest.raises(ValueError, match="hasher"):
         dedup.minhash_signatures(shingled, hasher="sha1")
 
@@ -254,8 +252,6 @@ def test_prefix_postings_bound_and_coverage(spark):
     identical prefixes (so true duplicates always collide)."""
     import math
 
-    from etl_power_bi_dashboard_spark.operators import dedup
-
     texts = [
         (0, "a b c d e f g h i j k l m n o p q r s t"),  # n=20 -> p=2
         (1, "a b c d e f g h i j k l m n o p q r s t"),  # dup of 0
@@ -328,10 +324,7 @@ def test_lsh_bands_rejects_mismatched_rows_per_band(spark):
     """A signature length that is not a multiple of rows_per_band must
     raise in-plan, not silently drop the trailing rows (lower recall
     than the k the caller paid for) or slice a phantom band."""
-    import pytest
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.operators import dedup
     from etl_power_bi_dashboard_spark.operators.text import word_shingles
 
     docs = spark.createDataFrame(

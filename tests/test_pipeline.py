@@ -8,6 +8,7 @@ from __future__ import annotations
 import collections
 import csv
 import glob
+import math
 import os
 import shutil
 
@@ -66,15 +67,60 @@ def test_extract_missing_required(spark, tmp_path):
     assert extract_data(spark, str(tmp_path)) is None
 
 
-def test_pipeline_without_translation(spark, raw_no_translation):
+def _expected_sales_by_category(raw_dir: str) -> dict:
+    """sales_by_category recounted from the raw CSVs in plain Python:
+    fact rows (items of existing orders, fanned out by reviews) grouped
+    by the product's english category — translated when the translation
+    CSV is present (untranslated names drop out), else the Portuguese
+    name; a missing category is 'unknown' after fill_missing."""
+    orders = {r["order_id"] for r in _csv_rows(raw_dir, "orders")}
+    reviews = collections.Counter(
+        r["order_id"] for r in _csv_rows(raw_dir, "reviews")
+    )
+    cat = {
+        r["product_id"]: r["product_category_name"] or "unknown"
+        for r in _csv_rows(raw_dir, "products")
+    }
+    if os.path.isdir(os.path.join(raw_dir, FILENAMES["category_translation"])):
+        english = {
+            r["product_category_name"]: r["product_category_name_english"]
+            for r in _csv_rows(raw_dir, "category_translation")
+        }
+        cat = {p: english.get(c) for p, c in cat.items()}
+    acc: dict = {}
+    for r in _csv_rows(raw_dir, "order_items"):
+        c = cat.get(r["product_id"])
+        if r["order_id"] not in orders or c is None:
+            continue
+        n = max(1, reviews[r["order_id"]])
+        ids, sales, freight = acc.setdefault(c, (set(), [], []))
+        ids.add(r["order_id"])
+        sales += [float(r["price"])] * n
+        freight += [float(r["freight_value"])] * n
+    return {c: (len(i), math.fsum(s), math.fsum(f)) for c, (i, s, f) in acc.items()}
+
+
+def test_pipeline_without_translation(spark, olist_raw, raw_no_translation):
     """S2/F13: without the optional translation table, english category is
-    backfilled from the Portuguese name (ef:186-187) and the category
-    rollup still works."""
+    backfilled from the Portuguese name (ef:186-187), and the category
+    rollup equals a plain-Python recount from the CSVs with the
+    translation table and without it."""
     dims, fact, aggs = run_pipeline(spark, raw_no_translation)
     prod = dims["product"].toPandas()
     assert (prod["product_category_name_english"] == prod["product_category_name"]).all()
-    cats = aggs["sales_by_category"].toPandas()
-    assert len(cats) > 0 and "category_name" in cats.columns
+    for raw_dir, cats in (
+        (raw_no_translation, aggs["sales_by_category"]),
+        (olist_raw, run_pipeline(spark, olist_raw)[2]["sales_by_category"]),
+    ):
+        got = {r.category_name: r for r in cats.collect()}
+        want = _expected_sales_by_category(raw_dir)
+        assert want and set(got) == set(want)
+        for c, (n_orders, sales, freight) in want.items():
+            r = got[c]
+            assert r.order_count == n_orders
+            assert math.isclose(r.total_sales, sales, rel_tol=1e-12)
+            assert math.isclose(r.total_freight, freight, rel_tol=1e-12)
+            assert math.isclose(r.avg_order_value, sales / n_orders, rel_tol=1e-12)
 
 
 def test_review_fanout_and_zero_fill(spark):
@@ -153,7 +199,6 @@ def test_compact_parquet_reduces_files_preserving_rows(spark, tmp_path):
     dest = str(tmp_path / "compacted")
     df = spark.range(0, 10_000).withColumnRenamed("id", "k")
     df.repartition(64).write.parquet(src)  # 64 tiny files
-    import glob
     assert len(glob.glob(src + "/*.parquet")) == 64
     n = compact_parquet(spark, src, dest)
     assert n == 1  # tiny dataset → single right-sized file

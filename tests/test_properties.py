@@ -106,7 +106,6 @@ def test_asof_join_matches_bruteforce(spark, left, right):
     """asof_join law: for every left row, the carried value equals the
     right row with the greatest right.ts <= left.ts for that key (right
     timestamps unique per key, merge_asof's precondition)."""
-    import datetime as dt
 
     from etl_power_bi_dashboard_spark.operators.temporal import asof_join
 
@@ -146,7 +145,6 @@ def test_asof_forward_matches_bruteforce(spark, left, right):
     """asof_join_forward law (the r9 mirror): for every left row, the
     carried value equals the right row with the SMALLEST right.ts >=
     left.ts for that key (right timestamps unique per key)."""
-    import datetime as dt
 
     from etl_power_bi_dashboard_spark.operators.temporal import (
         asof_join_forward,
@@ -192,7 +190,6 @@ def test_asof_nearest_matches_bruteforce(spark, left, right, tol):
     row minimizing |right.ts − left.ts| for that key within tolerance,
     |Δ| ties resolving to the EARLIER candidate; no candidate within
     tolerance ⇒ NULL columns."""
-    import datetime as dt
 
     from etl_power_bi_dashboard_spark.operators.temporal import (
         asof_join_nearest,
@@ -335,7 +332,6 @@ def test_scd2_intervals_partition_timeline(spark, changelog):
     the next effective_from — no overlaps, no gaps), exactly one row per
     key is current (open-ended), and every changelog row appears exactly
     once."""
-    import datetime as dt
 
     from etl_power_bi_dashboard_spark.plans.merge_plans import scd2_history
 

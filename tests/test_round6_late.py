@@ -4,7 +4,13 @@ faithfulness, conservation, balance, statistical sanity."""
 
 from __future__ import annotations
 
-import pytest
+from collections import Counter
+
+from pyspark.sql import functions as F
+
+from etl_power_bi_dashboard_spark.operators import dedup, similarity
+from etl_power_bi_dashboard_spark.plans import REGISTRY
+from etl_power_bi_dashboard_spark.plans.base import load
 
 from .conftest import SF_DIR
 
@@ -13,9 +19,6 @@ def test_quantize_int8_codes_bounded_and_faithful(spark):
     """Codes must lie in [-127, 127] and dequantize back to within
     half a quantization step per element."""
     import numpy as np
-    from pyspark.sql import functions as F
-
-    from etl_power_bi_dashboard_spark.operators import similarity
 
     rng = np.random.RandomState(11)
     rows = [(i, [float(x) for x in rng.randn(16) * (10.0 ** (i % 5))])
@@ -39,7 +42,6 @@ def test_v7_pq_codes_compact_and_ranks_valid(spark):
     """The registry PQ-ADC query must emit ≤5 ranked rows per query with
     ADC distance non-decreasing in rank (the contract a serving layer
     relies on), and the corpus-side code table must be 8 codes/vector."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["v7_pq_adc"].spark(spark, SF_DIR).collect()
     per: dict[int, list] = {}
@@ -59,10 +61,7 @@ def test_r12_conserves_revenue(spark):
     value: Σ monthly allocations == Σ o_totalprice of orders that have
     lineitems, up to the documented µ-rounding (≤0.5e-6 per order-month
     row)."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     out = REGISTRY["r12_calendarize"].spark(spark, SF_DIR)
     got = out.agg(F.sum("revenue_alloc")).collect()[0][0]
@@ -80,10 +79,7 @@ def test_r12_conserves_revenue(spark):
 def test_sc6_buckets_balanced_and_covering(spark):
     """32 buckets; per-bucket counts differ by ≤1 (the whole point of a
     range-partition planner); counts sum to N; key ranges ordered."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     rows = sorted(
         REGISTRY["sc6_range_partition_plan"].spark(spark, SF_DIR).collect(),
@@ -100,25 +96,11 @@ def test_sc6_buckets_balanced_and_covering(spark):
         assert a.lo_key <= a.hi_key <= b.lo_key <= b.hi_key
 
 
-def test_q11_benford_shape(spark):
-    """Digits ⊆ 1..9, observed shares sum to 1, chi² terms ≥ 0, expected
-    shares are the Benford distribution (sums to 1)."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-
-    rows = REGISTRY["q11_benford"].spark(spark, SF_DIR).collect()
-    assert {r.digit for r in rows} <= set(range(1, 10))
-    assert abs(sum(r.observed_frac for r in rows) - 1.0) < 1e-4
-    assert all(r.chi2_term >= 0 for r in rows)
-    if len(rows) == 9:
-        assert abs(sum(r.expected_frac for r in rows) - 1.0) < 1e-4
-
-
 def test_v6_recall_bounds_and_self_consistency(spark):
     """Recall@5 ∈ [0,1] in exact fifths, and quantizing with int8 must
     keep recall above the degenerate floor (0 everywhere would mean the
     quantized space shares nothing with the float space — impossible for
     faithful int8 on these corpora)."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["v6_int8_recall"].spark(spark, SF_DIR).collect()
     assert rows
@@ -132,12 +114,10 @@ def test_distributed_running_sum_matches_naive_window(spark):
     """The range-partitioned running sum must equal the naive global
     window bit-for-bit (DECIMAL, so equality is exact)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators.scale import (
         distributed_running_sum,
     )
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     li = load(spark, SF_DIR, "lineitem")
     rev = (
@@ -171,9 +151,7 @@ def test_r13_business_days_matches_bruteforce(spark):
     generator emits ship dates on BOTH sides of the order date, so the
     signed semantics (negative business days for early ships, matching
     cal_days' sign) is exercised for real."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     out = REGISTRY["r13_business_days"].spark(spark, SF_DIR)
     checked = out.selectExpr(
@@ -201,10 +179,7 @@ def test_r13_business_days_matches_bruteforce(spark):
 def test_ml10_stump_is_globally_optimal(spark):
     """Brute-force every threshold in Python and confirm the query's
     (err, threshold) is the lexicographic minimum."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     per = (
         load(spark, SF_DIR, "documents")
@@ -235,28 +210,9 @@ def test_ml10_stump_is_globally_optimal(spark):
     assert row.err <= row.baseline_err
 
 
-def test_a27_classes_partition_the_dimension(spark):
-    """A/B/C must partition all parts and their shares must sum to
-    100% of revenue."""
-    from pyspark.sql import functions as F
-
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
-
-    out = REGISTRY["a27_pareto_abc"].spark(spark, SF_DIR).collect()
-    n_parts = (
-        load(spark, SF_DIR, "lineitem").select("l_partkey").distinct().count()
-    )
-    assert sum(r.n_parts for r in out) == n_parts
-    assert abs(sum(r.share_pct for r in out) - 100.0) < 1e-9
-    by_class = {r.abc_class: r for r in out}
-    assert set(by_class) <= {"A", "B", "C"}
-
-
 def test_x28_kl_nonnegative_and_x29_bounds(spark):
     """KL ≥ 0 (up to nano-quantization slack); OOV counts bounded by
     token counts."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     for r in REGISTRY["x28_kl_divergence"].spark(spark, SF_DIR).collect():
         assert r.kl_nats > -1e-6, r
@@ -269,7 +225,6 @@ def test_a28_effects_telescope_to_delta(spark):
     """volume_effect + price_effect must reconstruct delta_revenue up to
     the float rounding of the two price quotients (exact decomposition
     identity: (Δq)·p_prev + (Δp)·q_t = Δ(p·q))."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["a28_price_volume_mix"].spark(spark, SF_DIR).collect()
     checked = 0
@@ -286,7 +241,6 @@ def test_a28_effects_telescope_to_delta(spark):
 def test_x30_curves_are_monotone_and_beta_sane(spark):
     """The Heaps fit must come from genuinely monotone cumulative
     curves; on natural-ish synthetic text β ∈ (0, 1)."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     row = REGISTRY["x30_heaps_fit"].spark(spark, SF_DIR).collect()[0]
     assert row.n_points > 0
@@ -298,10 +252,8 @@ def test_m7_cut_bounds_and_static_payload(spark):
     """Cut counts are bounded by n_frames−1, and a payload of one
     repeated frame (all-identical 16-byte slices) must report density
     0 while any two distinct adjacent frames report > 0."""
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators import multimodal
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     for r in REGISTRY["m7_scene_cuts"].spark(spark, SF_DIR).collect():
         assert 0 <= r.n_cuts <= max(r.n_frames - 1, 0)
@@ -339,7 +291,6 @@ def test_e16_detects_injected_disorder(spark):
     import datetime as dt
 
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     base = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
@@ -380,7 +331,6 @@ def test_v9_mmr_picks_are_distinct_and_diversity_binds(spark):
     top-relevance candidate (no penalty yet); and scores are the true
     greedy objective (spot-checked by recomputing pick-2's score from
     v1-style cosines)."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["v9_mmr_rerank"].spark(spark, SF_DIR).collect()
     per: dict[int, list] = {}
@@ -398,8 +348,6 @@ def test_v9_mmr_picks_are_distinct_and_diversity_binds(spark):
 def test_q13_fanout_totals_and_zero_bucket(spark):
     """Histogram masses must equal the parent-dim cardinalities, and
     Σ fanout·n_keys must equal the child row counts."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     rows = REGISTRY["q13_fanout_profile"].spark(spark, SF_DIR).collect()
     opc = [r for r in rows if r.relation == "orders_per_customer"]
@@ -416,7 +364,6 @@ def test_q13_fanout_totals_and_zero_bucket(spark):
 def test_p15_clusters_never_straddle_and_singletons_match_p8(spark):
     """Every member of a duplicate cluster lands in the SAME split, and
     singleton docs (their own cluster) get exactly p8's assignment."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["p15_leakage_safe_split"].spark(spark, SF_DIR).collect()
     by_cluster: dict[int, set] = {}
@@ -433,7 +380,6 @@ def test_p15_clusters_never_straddle_and_singletons_match_p8(spark):
     for r in singles:
         assert r.split == p8[r.doc_id]
     # and the fixture must actually contain a multi-member cluster
-    from collections import Counter
 
     sizes = Counter(r.cluster for r in rows)
     assert max(sizes.values()) >= 2
@@ -443,7 +389,6 @@ def test_d17_theory_matches_formula_and_rates_bounded(spark):
     """The injected theory column must equal 1−(1−s³)⁴ at each decile
     midpoint (to nano precision) and empirical rates must be valid
     probabilities with the S-curve's endpoints behaving."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = sorted(
         REGISTRY["d17_lsh_s_curve"].spark(spark, SF_DIR).collect(),
@@ -467,7 +412,6 @@ def test_d17_theory_matches_formula_and_rates_bounded(spark):
 def test_e17_matches_pure_python_recomputation(spark):
     """Recompute the censoring-aware horizon rates in pure Python from
     the collected event stream and require exact integer agreement."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
     from etl_power_bi_dashboard_spark.plans.base import load_events
 
     ev = load_events(spark, SF_DIR).select(
@@ -505,7 +449,6 @@ def test_e17_matches_pure_python_recomputation(spark):
 def test_e18_growth_identities(spark):
     """active = new + retained + resurrected every week; on contiguous
     weeks churned = prev_active − retained; first week is all new."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = sorted(
         REGISTRY["e18_growth_accounting"].spark(spark, SF_DIR).collect(),
@@ -532,8 +475,6 @@ def test_ml11_oner_matches_bruteforce(spark):
     counts and require exact agreement."""
     from collections import Counter, defaultdict
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     docs = load(spark, SF_DIR, "documents").select(
         "source", "n_chars", "lang"
@@ -559,7 +500,6 @@ def test_ml11_oner_matches_bruteforce(spark):
 def test_r14_overlap_bounded_and_shares_valid(spark):
     """Peak-window overlap can never exceed session time (and never the
     2-hour window itself per session); shares are valid fractions."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["r14_peak_window_overlap"].spark(spark, SF_DIR).collect()
     assert rows
@@ -574,9 +514,7 @@ def test_u9_bitemporal_axes_behave(spark):
     """Tall_Vnow reproduces the plain latest-per-user pick, and
     shrinking either axis can only move a user's visible state to an
     earlier (ts, event_id) — never a later one."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
     from etl_power_bi_dashboard_spark.plans.base import load_events
 
     rows = REGISTRY["u9_bitemporal_lookup"].spark(spark, SF_DIR).collect()
@@ -611,7 +549,6 @@ def test_u9_bitemporal_axes_behave(spark):
 def test_q14_ks_matches_pure_python(spark):
     """Recompute the two-sample KS statistic in pure Python from the
     collected samples and require agreement to float precision."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
     from etl_power_bi_dashboard_spark.plans.base import load_events
 
     ev = load_events(spark, SF_DIR).select("event_type", "value").collect()
@@ -636,10 +573,8 @@ def test_m8_vad_finds_constructed_speech_segments(spark):
     bytes vs loud 0x7f bytes) must yield exactly two speech segments of
     the constructed lengths, and the registry output must satisfy the
     segment-accounting identities on the real corpus."""
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators import multimodal
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     # 64-byte frames on a 32 hop: quiet*8 frames, loud*4, quiet*8,
     # loud*2, quiet*4 (in hops of 32 bytes)
@@ -677,10 +612,8 @@ def test_r15_coalesce_merges_touching_not_adjacent(spark):
     same-day touch (s == prev_e) coalesce, adjacency (s == prev_e + 1)
     does not, and a contained interval never extends its period. Then
     the registry output must satisfy the coverage identities."""
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators import temporal
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     iv = spark.createDataFrame(
         [
@@ -730,7 +663,6 @@ def test_sc7_skip_decisions_sound_and_clustering_pays(spark):
     clustered layout skips files (every pre-cutoff month) while the
     uncorrelated order-month layout skips none — and both layouts cover
     the same row total (a layout change must not lose rows)."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rows = REGISTRY["sc7_zone_map_skipping"].spark(spark, SF_DIR).collect()
     by_layout: dict[str, list] = {}
@@ -760,13 +692,9 @@ def test_ml12_auc_matches_bruteforce_pair_counting(spark):
     pos x neg pairs, on the same integer-quantized scores. Exact
     equality — both sides are integer arithmetic until the final
     division."""
-    from collections import Counter
 
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators import text as text_ops
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     docs = load(spark, SF_DIR, "documents").filter(F.length("text") > 0)
     t = F.split(F.col("text"), " ")
@@ -809,10 +737,7 @@ def test_p16_cap_keeps_exactly_the_lowest_hash_docs(spark):
     documents per language — recomputed by brute force — and the
     fixture must exercise both branches (the majority language capped,
     at least one language untouched)."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     docs = load(spark, SF_DIR, "documents").select(
         "doc_id",
@@ -850,8 +775,6 @@ def test_d16_containment_identities_and_constructed_subset(spark):
     containment algebra (inter <= n_small <= n_large, threshold met,
     direction ordering), and the corpus's exact duplicates must surface
     as containment-1.0 pairs."""
-    from etl_power_bi_dashboard_spark.operators import dedup
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     words = [f"w{i}" for i in range(40)]
     text_a = " ".join(words)
@@ -883,11 +806,8 @@ def test_ml13_gain_lift_matches_bruteforce(spark):
     columns are running sums; the last row's gain and lift are exactly
     1.0; and every cell must equal the brute-force recomputation from
     the same quantized ranking in pure Python."""
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators import text as text_ops
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     docs = load(spark, SF_DIR, "documents").filter(F.length("text") > 0)
     t = F.split(F.col("text"), " ")
@@ -931,11 +851,8 @@ def test_ml14_pr_curve_matches_bruteforce_and_is_monotone(spark):
     same quantized scores; recall must be non-increasing in the
     threshold (raising a cutoff can only lose positives); tp+fn and
     the grand total must be threshold-invariant."""
-    from pyspark.sql import functions as F
 
     from etl_power_bi_dashboard_spark.operators import text as text_ops
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     docs = load(spark, SF_DIR, "documents").filter(F.length("text") > 0)
     t = F.split(F.col("text"), " ")
@@ -974,13 +891,9 @@ def test_a32_matrix_covers_all_parts_with_bruteforce_xyz(spark):
     domains, and the per-class part counts must equal a brute-force
     Python recomputation of both the ABC cumulative boundaries and the
     integer cv² XYZ cutoffs."""
-    from collections import Counter
     from decimal import Decimal
 
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     li = load(spark, SF_DIR, "lineitem")
     rev_rows = (
@@ -1036,9 +949,7 @@ def test_e19_acf_matches_pure_python_and_is_bounded(spark):
     recomputed in pure Python from the same daily counts (to 1e-12),
     lag-0 normalization must make |acf| <= 1 for every reported lag,
     and pair counts must be exactly n_days - lag."""
-    from pyspark.sql import functions as F
 
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
     from etl_power_bi_dashboard_spark.plans.base import load_events
 
     ev = load_events(spark, SF_DIR)
@@ -1079,8 +990,6 @@ def test_q15_pk_audit_identities_and_direct_counts(spark):
     generator draws l_linenumber at random, so lineitem's textbook
     composite key (l_orderkey, l_linenumber) is genuinely VIOLATED —
     the audit must report that, and every dimension key must hold."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     rows = {
         r.table_name: r
@@ -1114,10 +1023,6 @@ def test_ml15_ols_matches_numpy_lstsq(spark):
     minimizer) to high relative precision, and R^2 must lie in [0, 1]
     and equal 1 - SSE/SST recomputed directly."""
     import numpy as np
-    from pyspark.sql import functions as F
-
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
-    from etl_power_bi_dashboard_spark.plans.base import load
 
     li = load(spark, SF_DIR, "lineitem").groupBy("l_orderkey").agg(
         F.count("*").alias("x1"), F.sum("l_quantity").alias("x2")
@@ -1152,7 +1057,6 @@ def test_q16_gap_report_on_constructed_gapped_sequence(spark):
     the real corpus, and the corpus event_id sequence itself must be
     contiguous (the generator emits a dense sequence)."""
     from etl_power_bi_dashboard_spark.operators import quality
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     # ids 0..9, 13, 40..42: gaps (10..12, len 3) and (14..39, len 26,
     # spanning buckets 1..4 at width 8)
@@ -1180,7 +1084,6 @@ def test_u10_compaction_conserves_events_and_never_adjacent_equal(spark):
     the same event_type (else compaction is incomplete); periods chain
     ([from, to) with to == next from, final to NULL); and the corpus
     must actually compact (some run with n_collapsed > 1)."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
     from etl_power_bi_dashboard_spark.plans.base import load_events
 
     rows = REGISTRY["u10_scd_compaction"].spark(spark, SF_DIR).collect()
@@ -1205,9 +1108,6 @@ def test_r16_sweep_equals_bruteforce_pairs_with_tie_semantics(spark):
     sweep against literal pair enumeration; then corpus identities:
     pairs <= C(n,2), overlap seconds positive iff pairs exist, and peak
     consistent with pair existence."""
-    from pyspark.sql import functions as F
-
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     # day 0: A[0,10] B[10,20] (touch, no pair), C[0,10] (simultaneous
     # start with A -> one pair), D[5,5] zero-length (excluded),
@@ -1274,7 +1174,7 @@ def test_r16_sweep_equals_bruteforce_pairs_with_tie_semantics(spark):
 
 
 def test_expectation_report_empty_input_and_quoted_rule_names(spark):
-    """Round-7 hardening (ADVICE r6): over an EMPTY DataFrame the report
+    """Over an EMPTY DataFrame the report
     must come back concrete — n_violations 0, violation_rate 0.0,
     passed TRUE (vacuously satisfied contract), never NULLs a
     ``passed = false`` dashboard filter would hide — and rule names

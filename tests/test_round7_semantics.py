@@ -13,27 +13,23 @@ from __future__ import annotations
 import math
 from collections import Counter, defaultdict
 from datetime import timedelta
+from decimal import Decimal
 
 import pandas as pd
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 
-from .conftest import SF_DIR
-
-
-def _docs() -> pd.DataFrame:
-    return pd.read_parquet(f"{SF_DIR}/documents.parquet")
+from .conftest import SF_DIR, sf_table
 
 
 def test_q7_chi2_includes_zero_cells(spark):
-    docs = _docs()
+    docs = sf_table("documents")
     obs = Counter(zip(docs["source"], docs["lang"]))
     sources = sorted(set(docs["source"]))
     langs = sorted(set(docs["lang"]))
     n = len(docs)
     r_tot = Counter(docs["source"])
     c_tot = Counter(docs["lang"])
-    from decimal import Decimal
 
     chi2 = Decimal(0)
     for s in sources:
@@ -68,7 +64,7 @@ def test_q8_scores_every_spine_day(spark):
         for r in REGISTRY["q8_volume_anomaly"].spark(spark, SF_DIR).collect()
     }
     # every spine day with >=3 predecessors is scored — including any
-    # zero-event day, which the old observed-days grouping never emitted
+    # zero-event day, which an observed-days grouping would never emit
     for i, d in enumerate(days):
         k = min(i, 7)
         if k < 3:
@@ -84,8 +80,6 @@ def test_a24_ewma_weights_attach_to_calendar_days(spark):
     o = pd.read_parquet(f"{SF_DIR}/orders.parquet")
     cents = defaultdict(int)
     for d, p in zip(pd.to_datetime(o["o_orderdate"]).dt.date, o["o_totalprice"]):
-        from decimal import Decimal
-
         cents[d] += int(Decimal(repr(p)).quantize(Decimal("0.01")) * 100)
     lo, hi = min(cents), max(cents)
     days, d = [], lo
@@ -137,7 +131,7 @@ def test_a21_trend_is_seven_calendar_days(spark):
 def test_x27_and_x14_ignore_empty_tokens(spark):
     """Fano factors and PMI denominators recomputed brute force with the
     empty token excluded — the convention every unigram pass shares."""
-    docs = _docs()
+    docs = sf_table("documents")
     per = defaultdict(Counter)
     for doc_id, text in zip(docs["doc_id"], docs["text"]):
         for t in (text or "").split(" "):

@@ -5,11 +5,10 @@ fall-through path stays pinned by tests/test_streaming_index.py)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
-# --- ADVICE: lsh_bands must reject empty signatures (0 % r == 0 slips
-# --- past a bare multiple-of check into the phantom sequence(0, -1)).
+# lsh_bands must reject empty signatures (0 % r == 0 slips past a bare
+# multiple-of check into the phantom sequence(0, -1)).
 def test_lsh_bands_rejects_empty_signature(spark):
     from etl_power_bi_dashboard_spark.operators.dedup import lsh_bands
 
@@ -30,9 +29,8 @@ def test_lsh_bands_still_accepts_exact_multiple(spark):
     assert [(r.band_no, r.band_sig) for r in rows] == [(0, "ab"), (1, "cd")]
 
 
-# --- ADVICE: conform_to_schema with duplicate-modulo-case source
-# --- columns must prefer the exact-case match, not hit Spark's
-# --- ambiguous-reference error.
+# conform_to_schema with duplicate-modulo-case source columns must
+# prefer the exact-case match, not hit Spark's ambiguous-reference error.
 def test_conform_prefers_exact_case_among_duplicates(spark):
     from etl_power_bi_dashboard_spark.sources.evolve import conform_to_schema
 
@@ -56,8 +54,8 @@ def test_conform_single_inexact_match_still_resolves(spark):
     assert conform_to_schema(df, "lang string").collect() == [("EN",)]
 
 
-# --- ADVICE: register_star_views compares underlying JVM sessions, not
-# --- Python wrapper identity.
+# register_star_views compares underlying JVM sessions, not Python
+# wrapper identity.
 def test_register_star_views_accepts_rewrapped_session(spark):
     from pyspark.sql import SparkSession
 
@@ -80,10 +78,10 @@ def test_register_star_views_still_rejects_other_session(spark):
         register_star_views(spark, {}, fact)
 
 
-# --- ADVICE: the streaming state-merge pin is master-gated — reliable
-# --- checkpoint() on a non-local master, loud failure without a
-# --- checkpoint dir. The non-local branch can't run under local[*];
-# --- pin the local branch and the gate's master inspection instead.
+# The streaming state-merge pin is master-gated — reliable checkpoint()
+# on a non-local master, loud failure without a checkpoint dir. The
+# non-local branch can't run under local[*]; pin the local branch and
+# the gate's master inspection instead.
 def test_pin_for_overwrite_local_master_uses_local_checkpoint(spark):
     from etl_power_bi_dashboard_spark.streaming.events import _pin_for_overwrite
 
@@ -94,25 +92,6 @@ def test_pin_for_overwrite_local_master_uses_local_checkpoint(spark):
     plan = pinned._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan or "ExistingRDD" in plan
     pinned.unpersist()
-
-
-# --- round-8 bench methodology: per-rep times are file-only evidence —
-# --- the stdout records must stay rep-free (the detail line is already
-# --- near the driver tail-capture limit; reps would triple it).
-def test_bench_reps_stay_out_of_stdout():
-    import json
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    import bench
-
-    timings = {"q1": 1.0, "q2": 2.0}
-    reps = {"q1": [1.0, 1.2], "q2": [2.0, 9.9]}
-    lines = bench.emit_records(timings, sf=0.1, reps=reps)
-    for line in lines:
-        rec = json.loads(line)
-        assert "reps" not in rec and "noisy" not in rec
 
 
 def test_conform_exact_duplicate_names_picks_first_occurrence(spark):
@@ -145,7 +124,6 @@ def test_pin_for_overwrite_cluster_master_requires_checkpoint_dir():
     """The non-local branch can't run under local[*]; drive the gate
     with duck-typed stubs: cluster master without a checkpoint dir must
     fail loudly; with one it must take reliable checkpoint()."""
-    import pytest
 
     from etl_power_bi_dashboard_spark.streaming.events import _pin_for_overwrite
 

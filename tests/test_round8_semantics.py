@@ -19,18 +19,14 @@ import pandas as pd
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 
-from .conftest import SF_DIR
-
-
-def _tbl(name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{SF_DIR}/{name}.parquet")
+from .conftest import SF_DIR, STOPWORDS, events_sorted, sf_table
 
 
 def _fact_rows():
     """(date_id, year, month, price_decimal) per lineitem, per the shared
     fact definition: price = l_extendedprice as DECIMAL(18,2)."""
-    li = _tbl("lineitem")[["l_orderkey", "l_extendedprice"]]
-    o = _tbl("orders")[["o_orderkey", "o_orderdate"]]
+    li = sf_table("lineitem")[["l_orderkey", "l_extendedprice"]]
+    o = sf_table("orders")[["o_orderkey", "o_orderdate"]]
     j = li.merge(o, left_on="l_orderkey", right_on="o_orderkey")
     for _, r in j.iterrows():
         d = pd.Timestamp(r["o_orderdate"])
@@ -46,7 +42,7 @@ def _fact_rows():
 
 
 def test_w1_top3_per_segment_law(spark):
-    cust = _tbl("customer")
+    cust = sf_table("customer")
     expect = set()
     for seg, grp in cust.groupby("c_mktsegment"):
         ordered = grp.sort_values(
@@ -95,7 +91,7 @@ def test_w3_lag_delta_is_consecutive_month_difference(spark):
 
 
 def test_w4_moving_avg_is_trailing_3_row_mean(spark):
-    ev = _tbl("events").sort_values(["user_id", "ts", "event_id"])
+    ev = sf_table("events").sort_values(["user_id", "ts", "event_id"])
     expect = {}
     for _, grp in ev.groupby("user_id"):
         vals = [Decimal(repr(round(v, 6))) for v in grp["value"]]
@@ -112,7 +108,7 @@ def test_w5_distribution_laws(spark):
     """ntile front-loads the n % k remainder one row each onto the first
     buckets; percent_rank = (rank-1)/(n-1); cume_dist = (#rows ≤ peer
     group)/n — with a unique total order, position/n."""
-    cust = _tbl("customer").sort_values(["c_acctbal", "c_custkey"])
+    cust = sf_table("customer").sort_values(["c_acctbal", "c_custkey"])
     n = len(cust)
     base, rem = divmod(n, 4)
     expect = {}
@@ -129,7 +125,7 @@ def test_w5_distribution_laws(spark):
 
 
 def test_w6_value_picks_full_frame_law(spark):
-    cust = _tbl("customer")
+    cust = sf_table("customer")
     expect = {}
     for seg, grp in cust.groupby("c_mktsegment"):
         ordered = grp.sort_values(
@@ -153,7 +149,7 @@ def test_w7_range_frame_includes_all_same_day_peers(spark):
     """RANGE 6 PRECEDING bounds by day VALUE: every order of the same
     customer within [day-6, day] is in-frame — including same-day peers
     that a ROWS frame would split on row order."""
-    o = _tbl("orders")[["o_custkey", "o_orderkey", "o_totalprice", "o_orderdate"]]
+    o = sf_table("orders")[["o_custkey", "o_orderkey", "o_totalprice", "o_orderdate"]]
     epoch = date(1970, 1, 1)
     recs = [
         (
@@ -188,7 +184,7 @@ def _md5_bucket(text: str, digits: int = 4, mod: int = 100) -> int:
 
 
 def test_p7_exact_key_modulus_sample(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     kept = o[o["o_orderkey"] % 20 == 0]
     total = sum(Decimal(repr(round(float(v), 2))) for v in kept["o_totalprice"])
     row = REGISTRY["p7_sample_mod"].spark(spark, SF_DIR).collect()[0]
@@ -197,7 +193,7 @@ def test_p7_exact_key_modulus_sample(spark):
 
 
 def test_p8_hash_split_assignment_law(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["p8_hash_split"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.bucket, r.split) for r in rows}
     assert len(got) == len(docs)
@@ -208,7 +204,7 @@ def test_p8_hash_split_assignment_law(spark):
 
 
 def test_p9_stratified_exact_rate_and_selection(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     expect = set()
     for lang, grp in docs.groupby("lang"):
         n = len(grp)
@@ -230,7 +226,7 @@ def test_p9_stratified_exact_rate_and_selection(spark):
 
 
 def test_p10_tiered_acceptance_law(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["p10_quality_weighted_sample"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.tier, r.bucket, r.keep) for r in rows}
     for _, r in docs.iterrows():
@@ -244,7 +240,7 @@ def test_p10_tiered_acceptance_law(spark):
 def test_p14_efraimidis_spirakis_selection_law(spark):
     """key = round(u^(1/w), 9) with u = (md5-prefix + 1)/2^32; the
     sample is exactly the top-10 by (key desc, doc_id asc)."""
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     keyed = []
     for _, r in docs.iterrows():
         u = (int(hashlib.md5(r["text"].encode()).hexdigest()[:8], 16) + 1) / 4294967296.0
@@ -268,7 +264,7 @@ def _monday_week(d: date) -> date:
 
 
 def test_e6_weekly_cohort_retention_law(spark):
-    ev = _tbl("events")[["user_id", "ts"]]
+    ev = sf_table("events")[["user_id", "ts"]]
     first = ev.groupby("user_id")["ts"].min()
     cohort = {int(u): _monday_week(pd.Timestamp(t).date()) for u, t in first.items()}
     cells = defaultdict(set)
@@ -289,7 +285,7 @@ def test_e6_weekly_cohort_retention_law(spark):
 
 
 def test_e17_censored_horizon_conversion_law(spark):
-    ev = _tbl("events")[["user_id", "event_type", "ts"]]
+    ev = sf_table("events")[["user_id", "event_type", "ts"]]
     us = {
         int(u): int(pd.Timestamp(t).value // 1000)
         for u, t in ev[ev["event_type"] == "signup"]
@@ -325,20 +321,11 @@ def test_e17_censored_horizon_conversion_law(spark):
     assert all(got[h][0] <= len(us) for h in got)
 
 
-# --------------------------------------------- eval-metrics definitions
-# The classifier-evaluation family is classic both-engines-wrong
-# territory (AUC tie handling, decile remainder placement, F1 as a
-# harmonic mean vs a mean of ratios, KS sup over the merged support,
-# calibration bin edges) — recompute each from the textbook definition.
-
-STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
-
-
 def _scored_docs():
     """(doc_id, lang, pos, score_q) per non-empty doc — the shared
     definition: score_q = (stopword_hits * 10^9) // n_tokens."""
     out = []
-    for _, r in _tbl("documents").iterrows():
+    for _, r in sf_table("documents").iterrows():
         if len(r["text"]) == 0:
             continue
         toks = r["text"].split(" ")
@@ -358,20 +345,20 @@ def test_ml12_auc_is_pairwise_mann_whitney_with_midrank_ties(spark):
     docs = _scored_docs()
     langs = sorted({lang for _, lang, _, _ in docs})
     rows = REGISTRY["ml12_score_bias_auc"].spark(spark, SF_DIR).collect()
-    got = {r.lang: (r.n_pos, r.n_neg, r.auc) for r in rows}
+    got = {r.lang: (r.n_pos, r.n_neg, r.u2, r.auc) for r in rows}
     assert set(got) == set(langs)
     for lang in langs:
         pos = [q for _, l, _, q in docs if l == lang]
         neg = [q for _, l, _, q in docs if l != lang]
-        u = sum(
-            1.0 if p > n_ else (0.5 if p == n_ else 0.0)
+        # u2 = 2·U: 2 per won pair, 1 per tie — integer arithmetic until
+        # the final division, so the AUC must match exactly
+        u2 = sum(
+            2 if p > n_ else (1 if p == n_ else 0)
             for p in pos
             for n_ in neg
         )
-        auc = u / (len(pos) * len(neg))
-        g_np, g_nn, g_auc = got[lang]
-        assert (g_np, g_nn) == (len(pos), len(neg))
-        assert abs(g_auc - auc) < 1e-12, lang
+        auc = u2 / (2.0 * len(pos) * len(neg))
+        assert got[lang] == (len(pos), len(neg), u2, auc), lang
 
 
 def test_ml13_gain_lift_decile_law(spark):
@@ -402,21 +389,18 @@ def test_ml13_gain_lift_decile_law(spark):
         r.decile: (r.n_rows, r.n_pos, r.cum_rows, r.cum_pos, r.gain, r.lift)
         for r in rows
     }
-    assert set(got) == set(expect)
-    for d in expect:
-        assert got[d][:4] == expect[d][:4], d
-        assert abs(got[d][4] - expect[d][4]) < 1e-12
-        assert abs(got[d][5] - expect[d][5]) < 1e-12
-    # law: the last decile's gain is exactly 1 and overall lift is 1
+    assert got == expect
+    # law: the last decile's gain and overall lift are exactly 1
     last = max(expect)
-    assert got[last][4] == 1.0
-    assert abs(got[last][5] - 1.0) < 1e-12
+    assert got[last][4:] == (1.0, 1.0)
 
 
 def test_ml14_pr_curve_confusion_and_f1_law(spark):
     docs = _scored_docs()
     rows = REGISTRY["ml14_pr_curve"].spark(spark, SF_DIR).collect()
-    assert len(rows) == 5
+    assert sorted(r.thresh_ppb for r in rows) == [
+        20_000_000, 50_000_000, 100_000_000, 150_000_000, 200_000_000
+    ]
     for r in rows:
         tp = sum(1 for _, _, p, q in docs if q > r.thresh_ppb and p)
         fp = sum(1 for _, _, p, q in docs if q > r.thresh_ppb and not p)
@@ -434,7 +418,7 @@ def test_ml14_pr_curve_confusion_and_f1_law(spark):
 
 
 def test_q14_ks_statistic_is_sup_over_merged_support(spark):
-    ev = _tbl("events")
+    ev = sf_table("events")
     a = sorted(ev[ev["event_type"] == "click"]["value"])
     b = sorted(ev[ev["event_type"] == "purchase"]["value"])
     na, nb = len(a), len(b)
@@ -484,7 +468,7 @@ def test_ml16_calibration_bin_law(spark):
 
 
 def test_a16_gini_rank_formula_and_top_decile(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     rev = defaultdict(Decimal)
     for _, r in o.iterrows():
         rev[int(r["o_custkey"])] += Decimal(repr(round(float(r["o_totalprice"]), 2)))
@@ -503,7 +487,7 @@ def test_a16_gini_rank_formula_and_top_decile(spark):
 
 
 def test_q5_psi_terms_and_exclusion_convention(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     counts = defaultdict(lambda: [0, 0])
     for _, r in docs.iterrows():
         b = len(r["text"].split(" ")) // 10
@@ -529,7 +513,7 @@ def _lower_median(sorted_vals):
 
 
 def test_a20_mad_lower_median_convention(spark):
-    ev = _tbl("events")
+    ev = sf_table("events")
     rows = REGISTRY["a20_mad"].spark(spark, SF_DIR).collect()
     got = {r.event_type: (r.median_value, r.mad, r.n) for r in rows}
     for et, grp in ev.groupby("event_type"):
@@ -546,7 +530,7 @@ def test_a20_mad_lower_median_convention(spark):
 
 
 def test_a22_trim_winsorize_boundary_ranks(spark):
-    ev = _tbl("events")
+    ev = sf_table("events")
     rows = REGISTRY["a22_trimmed_mean"].spark(spark, SF_DIR).collect()
     got = {
         r.event_type: (r.n, r.k, r.mean, r.trimmed_mean, r.winsorized_mean)
@@ -570,7 +554,7 @@ def test_a22_trim_winsorize_boundary_ranks(spark):
 
 
 def test_q11_benford_digits_and_expected_shares(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     digits = defaultdict(int)
     for v in o["o_totalprice"]:
         if float(v) > 0:
@@ -589,10 +573,11 @@ def test_q11_benford_digits_and_expected_shares(spark):
         assert abs(r.expected_frac - exp) < 1e-6
         en = nd * exp
         assert abs(r.chi2_term - (cnt - en) ** 2 / en) < 1e-4
+        assert r.chi2_term >= 0
 
 
 def test_e19_acf_definition_with_zero_filled_calendar(spark):
-    ev = _tbl("events")
+    ev = sf_table("events")
     daily = defaultdict(int)
     for t in ev["ts"]:
         daily[(pd.Timestamp(t).date() - date(1970, 1, 1)).days] += 1
@@ -603,11 +588,12 @@ def test_e19_acf_definition_with_zero_filled_calendar(spark):
     den = sum((x - mu) ** 2 for x in xs)
     rows = REGISTRY["e19_autocorrelation"].spark(spark, SF_DIR).collect()
     got = {r.lag: (r.n_days, r.n_pairs, r.acf) for r in rows}
+    assert set(got) == {1, 2, 7, 14}
     for lag in (1, 2, 7, 14):
         num = sum((xs[t] - mu) * (xs[t + lag] - mu) for t in range(n - lag))
         nd_, np_, acf = got[lag]
         assert nd_ == n and np_ == max(0, n - lag)
-        assert abs(acf - num / den) < 1e-9, lag
+        assert abs(acf - num / den) < 1e-12, lag
 
 
 def _ols(xs, ys):
@@ -623,7 +609,7 @@ def _ols(xs, ys):
 
 
 def test_x23_zipf_fit_is_loglog_ols_over_term_frequencies(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     freq = defaultdict(int)
     for _, r in docs.iterrows():
         for t in r["text"].split(" "):
@@ -642,7 +628,7 @@ def test_x23_zipf_fit_is_loglog_ols_over_term_frequencies(spark):
 
 
 def test_x30_heaps_fit_is_loglog_ols_over_growth_curve(spark):
-    docs = _tbl("documents").sort_values("doc_id")
+    docs = sf_table("documents").sort_values("doc_id")
     seen = set()
     nd = vd = 0
     xs, ys = [], []
@@ -672,7 +658,7 @@ def test_x30_heaps_fit_is_loglog_ols_over_growth_curve(spark):
 
 
 def _events_sorted():
-    ev = _tbl("events")
+    ev = sf_table("events")
     recs = [
         (
             int(r["user_id"]),
@@ -689,7 +675,7 @@ def _events_sorted():
 
 
 def test_u4_scd2_intervals_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, _, v, ts in recs:
         by_user[u].append((ts, e, v))
@@ -715,7 +701,7 @@ def test_u4_scd2_intervals_law(spark):
 
 
 def test_u9_bitemporal_visibility_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     max_id = max(e for _, _, e, _, _, _ in recs)
     max_us = max(us for _, us, _, _, _, _ in recs)
     cells = {
@@ -745,7 +731,7 @@ def test_u9_bitemporal_visibility_law(spark):
 
 
 def test_u10_run_compaction_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, _, _ in recs:
         by_user[u].append((us, e, et))
@@ -768,10 +754,12 @@ def test_u10_run_compaction_law(spark):
     assert got == expect
     # compaction law: collapsed counts reconstruct the raw row count
     assert sum(t[4] for t in got) == len(recs)
+    # and the corpus actually compacts
+    assert any(t[4] > 1 for t in got)
 
 
 def test_u11_cdc_first_last_folding_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     op_of = lambda et: "I" if et == "signup" else ("D" if et == "error" else "U")
     by_user = defaultdict(list)
     for u, us, e, et, v, _ in recs:
@@ -798,7 +786,7 @@ def test_u11_cdc_first_last_folding_law(spark):
 
 
 def test_e15_entry_exit_bounce_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     sessions = defaultdict(list)
     for u, us, e, et, _, ts in recs:
         sessions[(u, ts.date())].append((ts, e, et))
@@ -824,7 +812,7 @@ def test_e15_entry_exit_bounce_law(spark):
 
 
 def test_e18_growth_accounting_state_machine(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     # weeks are epoch_day DIV 7 of the event DATE
     pairs = sorted(
         {(u, (ts.date() - date(1970, 1, 1)).days // 7)
@@ -865,8 +853,8 @@ def test_e18_growth_accounting_state_machine(spark):
 
 
 def test_r13_business_days_closed_form_vs_brute_count(spark):
-    li = _tbl("lineitem")
-    o = _tbl("orders")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
     ship = li.groupby("l_orderkey")["l_shipdate"].max()
     od = {int(r["o_orderkey"]): pd.Timestamp(r["o_orderdate"]).date()
           for _, r in o.iterrows()}
@@ -886,10 +874,14 @@ def test_r13_business_days_closed_form_vs_brute_count(spark):
     for k, ts in ship.items():
         d1, d2 = od[int(k)], pd.Timestamp(ts).date()
         assert got[int(k)] == ((d2 - d1).days, brute_busdays(d1, d2)), k
+    # the fixture ships on both sides of the order date, so the signed
+    # semantics is exercised for real
+    assert any(b < 0 for _, b in got.values())
+    assert any(b > 0 for _, b in got.values())
 
 
 def test_a23_rfm_quintiles_law(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     mxd = max(pd.Timestamp(t).date() for t in o["o_orderdate"])
     per = {}
     for ck, grp in o.groupby("o_custkey"):
@@ -939,7 +931,7 @@ def test_a23_rfm_quintiles_law(spark):
 def _part_revenue():
     """part -> exact Decimal revenue Σ price·(1−disc), the shared a27/a32
     revenue definition."""
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     rev = defaultdict(Decimal)
     for _, r in li.iterrows():
         p = Decimal(repr(round(float(r["l_extendedprice"]), 2)))
@@ -975,13 +967,15 @@ def test_a27_pareto_abc_boundaries_law(spark):
         assert got[c][0] == n
         assert abs(got[c][1] - float(s)) < 1e-6
         assert abs(got[c][2] - float(s) / float(total) * 100.0) < 1e-9
+    # the classes partition the dimension: shares add up to 100%
+    assert abs(sum(v[2] for v in got.values()) - 100.0) < 1e-9
     # Pareto law: A-class revenue share is <= 70% + one part's worth,
     # and A+B <= 90% + one part's worth (boundary parts stay in-class)
     assert got["A"][2] <= 70.0 + 100.0 * float(max(rev.values())) / float(total)
 
 
 def test_a32_abc_xyz_cv_classes_law(spark):
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     _, classes, _ = _abc_classes()
     monthly = defaultdict(lambda: defaultdict(int))
     months = set()
@@ -1017,7 +1011,7 @@ def test_a32_abc_xyz_cv_classes_law(spark):
 
 
 def test_a28_price_volume_bridge_telescopes(spark):
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     monthly = defaultdict(lambda: [Decimal(0), Decimal(0)])  # qty, revenue
     for _, r in li.iterrows():
         mid = int(pd.Timestamp(r["l_shipdate"]).strftime("%Y%m"))
@@ -1028,6 +1022,7 @@ def test_a28_price_volume_bridge_telescopes(spark):
         monthly[mid][1] += p * (1 - d)
     om = lambda mid: (mid // 100) * 12 + (mid % 100)
     mids = sorted(monthly)
+    n_bridged = 0
     rows = REGISTRY["a28_price_volume_mix"].spark(spark, SF_DIR).collect()
     got = {r.month_id: r for r in rows}
     assert set(got) == set(mids)
@@ -1039,16 +1034,18 @@ def test_a28_price_volume_bridge_telescopes(spark):
         if not contig:
             assert r.delta_revenue is None
             continue
+        n_bridged += 1
         pq, prv = (float(x) for x in monthly[mids[i - 1]])
         assert abs(r.delta_revenue - (rev - prv)) < 1e-6
         assert abs(r.volume_effect - (qty - pq) * (prv / pq)) < 1e-6
         assert abs(r.price_effect - (rev / qty - prv / pq) * qty) < 1e-6
         # bridge law: volume + price effects telescope to the delta
         assert abs(r.volume_effect + r.price_effect - r.delta_revenue) < 1e-6
+    assert n_bridged > 0
 
 
 def test_a25_yoy_lag12_alignment_law(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     monthly = defaultdict(Decimal)
     for _, r in o.iterrows():
         mid = int(pd.Timestamp(r["o_orderdate"]).strftime("%Y%m"))
@@ -1071,7 +1068,7 @@ def test_a25_yoy_lag12_alignment_law(spark):
 
 
 def test_a26_cohort_ltv_cumulative_law(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     per = []
     for _, r in o.iterrows():
         ts = pd.Timestamp(r["o_orderdate"])
@@ -1116,7 +1113,7 @@ def test_a26_cohort_ltv_cumulative_law(spark):
 
 
 def test_ml10_stump_exhaustive_threshold_search(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     pts = [(int(r["n_chars"]), r["lang"] == "en") for _, r in docs.iterrows()]
     thresholds = sorted({t for t, _ in pts})
     ttot = len(pts)
@@ -1140,7 +1137,7 @@ def test_ml10_stump_exhaustive_threshold_search(spark):
 
 
 def test_ml11_oner_majority_rule_error_law(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
 
     def rule(vals):
         cells = defaultdict(lambda: defaultdict(int))
@@ -1172,7 +1169,7 @@ def test_ml11_oner_majority_rule_error_law(spark):
 
 
 def _daily_user_values():
-    ev = _tbl("events")
+    ev = sf_table("events")
     daily = defaultdict(Decimal)
     for _, r in ev.iterrows():
         d = pd.Timestamp(r["ts"]).date()
@@ -1300,8 +1297,8 @@ def test_r11_nearest_asof_tie_and_tolerance_law(spark):
 
 
 def test_r12_calendarize_allocation_conserves_days(spark):
-    li = _tbl("lineitem")
-    o = _tbl("orders")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
     end = {
         int(k): pd.Timestamp(v).date()
         for k, v in li.groupby("l_orderkey")["l_shipdate"].max().items()
@@ -1373,13 +1370,13 @@ def test_r14_peak_window_intersection_law(spark):
         assert r.peak_window_sec == ov / 1e6
         if dur > 0:
             assert abs(r.peak_share - ov / dur) < 1e-15
-        # intersection law: the peak share can never exceed 1
-        assert r.peak_share is None or r.peak_share <= 1.0
+        # intersection law: the peak share is a fraction
+        assert r.peak_share is None or 0.0 <= r.peak_share <= 1.0
 
 
 def test_r15_interval_coalesce_touch_merges_law(spark):
-    li = _tbl("lineitem")
-    o = _tbl("orders")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
     end = {
         int(k): pd.Timestamp(v).date()
         for k, v in li.groupby("l_orderkey")["l_shipdate"].max().items()
@@ -1459,7 +1456,7 @@ def test_r16_pairwise_overlap_equals_quadratic_join(spark):
 
 
 def test_a13_histogram_bucket_edges(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     buckets = defaultdict(lambda: [0, Decimal(0)])
     for v in o["o_totalprice"]:
         b = math.floor(float(v) / 10000.0)
@@ -1476,7 +1473,7 @@ def test_a14_a19_percentile_conventions(spark):
     """a14 is the rank-discrete pick at ceil(q*n); a19 is the
     pandas/NumPy 'linear' convention h = (n-1)q between order stats —
     check both against literal sorted-list indexing."""
-    ev = _tbl("events")
+    ev = sf_table("events")
     disc = {r.event_type: r for r in
             REGISTRY["a14_percentiles_disc"].spark(spark, SF_DIR).collect()}
     cont = {r.event_type: r for r in
@@ -1500,14 +1497,13 @@ def test_a14_a19_percentile_conventions(spark):
 
 
 def test_ml6_pooled_two_proportion_z(spark):
-    """Also the audit's round-8 catch: the original name filter
-    (FRANCE/GERMANY) matched zero fixture rows, so the z-test had never
-    executed — a degenerate 0-row green on both engines. The contrast
-    is now data-derived (the two largest supplier nations by line-item
+    """A fixed name filter (FRANCE/GERMANY) matches zero fixture rows,
+    leaving the z-test unexecuted — a degenerate 0-row green on both
+    engines. The contrast is data-derived (the two largest supplier nations by line-item
     count, tie-break on the smaller key) and this test proves the
     arithmetic on real counts."""
-    li = _tbl("lineitem")
-    s = _tbl("supplier")[["s_suppkey", "s_nationkey"]]
+    li = sf_table("lineitem")
+    s = sf_table("supplier")[["s_suppkey", "s_nationkey"]]
     j = li.merge(s, left_on="l_suppkey", right_on="s_suppkey")
     per = sorted(
         (
@@ -1527,7 +1523,7 @@ def test_ml6_pooled_two_proportion_z(spark):
 
 
 def test_ml8_markov_temporal_holdout_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, _, _ in recs:
         by_user[u].append((us, e, et))
@@ -1563,7 +1559,7 @@ def test_ml8_markov_temporal_holdout_law(spark):
 
 
 def test_e10_last_touch_attribution_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, v, ts in recs:
         by_user[u].append((us, e, et, ts))
@@ -1589,7 +1585,7 @@ def test_e10_last_touch_attribution_law(spark):
 
 def test_x17_bm25_textbook_formula(spark):
     K1, B = 1.2, 0.75
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     tf = defaultdict(lambda: defaultdict(int))
     dl = defaultdict(int)
     for _, r in docs.iterrows():
@@ -1622,7 +1618,7 @@ def test_x17_bm25_textbook_formula(spark):
 
 
 def test_x28_kl_divergence_formula(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     sc = defaultdict(lambda: defaultdict(int))
     for _, r in docs.iterrows():
         for t in r["text"].split(" "):
@@ -1720,7 +1716,7 @@ def test_e5_e12_funnel_sequencing_law(spark):
     """Strict-progression funnel: first click strictly after signup,
     first purchase strictly after that click; e12's timings are exact
     µs lags over the same stages."""
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, _, _ in recs:
         by_user[u].append((us, et))
@@ -1775,7 +1771,7 @@ def _z_outliers(per_user_frames, min_n, cutoff):
 
 
 def test_e7_full_history_zscore_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, v, _ in recs:
         by_user[u].append((e, v))
@@ -1793,7 +1789,7 @@ def test_e7_full_history_zscore_law(spark):
 
 
 def test_e9_trailing_window_zscore_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, v, _ in recs:
         by_user[u].append((e, v))
@@ -1811,7 +1807,7 @@ def test_e9_trailing_window_zscore_law(spark):
 
 
 def test_e11_trailing_distinct_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     act = {(u, ts.date()) for u, _, _, _, _, ts in recs}
     days = sorted({d for _, d in act})
     d0, d1 = days[0], days[-1]
@@ -1832,7 +1828,7 @@ def test_e11_trailing_distinct_law(spark):
 
 
 def test_e14_top_paths_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     sessions = defaultdict(list)
     for u, us, e, et, _, ts in recs:
         sessions[(u, ts.date())].append((us, e, et))
@@ -1846,7 +1842,7 @@ def test_e14_top_paths_law(spark):
 
 
 def test_x16_entropy_definition(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["x16_doc_entropy"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.n_tokens, r.entropy_nats) for r in rows}
     for _, r in docs.iterrows():
@@ -1868,7 +1864,7 @@ def test_x16_entropy_definition(spark):
 
 
 def test_a17_cumulative_distinct_law(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     first = {}
     for u, us, e, et, _, ts in recs:
         if et == "purchase" and u not in first:
@@ -1888,7 +1884,7 @@ def test_a17_cumulative_distinct_law(spark):
 
 
 def test_a18_pearson_exact_moments(spark):
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     names = {
         "quantity": "l_quantity",
         "price": "l_extendedprice",
@@ -1918,10 +1914,10 @@ def test_a18_pearson_exact_moments(spark):
 
 
 def test_ml5_regional_trend_ols(spark):
-    o = _tbl("orders")
-    c = _tbl("customer")[["c_custkey", "c_nationkey"]]
-    nt = _tbl("nation")[["n_nationkey", "n_regionkey"]]
-    rg = _tbl("region")[["r_regionkey", "r_name"]]
+    o = sf_table("orders")
+    c = sf_table("customer")[["c_custkey", "c_nationkey"]]
+    nt = sf_table("nation")[["n_nationkey", "n_regionkey"]]
+    rg = sf_table("region")[["r_regionkey", "r_name"]]
     j = (
         o.merge(c, left_on="o_custkey", right_on="c_custkey")
         .merge(nt, left_on="c_nationkey", right_on="n_nationkey")
@@ -1953,7 +1949,7 @@ def test_ml5_regional_trend_ols(spark):
 
 
 def test_e8_transition_rows_normalize(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, _, _ in recs:
         by_user[u].append(et)
@@ -1977,7 +1973,7 @@ def test_e8_transition_rows_normalize(spark):
 
 
 def test_e13_interarrival_moments(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     gaps = defaultdict(list)
     by_key = defaultdict(list)
     for u, us, e, et, _, _ in recs:
@@ -2004,9 +2000,9 @@ def test_e13_interarrival_moments(spark):
 
 
 def test_q13_fanout_includes_zero_bucket(spark):
-    o = _tbl("orders")
-    cust = _tbl("customer")
-    li = _tbl("lineitem")
+    o = sf_table("orders")
+    cust = sf_table("customer")
+    li = sf_table("lineitem")
     opc = defaultdict(int)
     per_c = o.groupby("o_custkey").size()
     for ck in cust["c_custkey"]:
@@ -2025,10 +2021,13 @@ def test_q13_fanout_includes_zero_bucket(spark):
     # histogram totals to the parent-table row count either way
     assert sum(got["orders_per_customer"].values()) == len(cust)
     assert sum(got["items_per_order"].values()) == len(o)
+    # and Σ fanout·n_keys is the child-table row count
+    assert sum(f * n for f, n in got["orders_per_customer"].items()) == len(o)
+    assert sum(f * n for f, n in got["items_per_order"].items()) == len(li)
 
 
 def test_q16_sequence_gap_report(spark):
-    ev = _tbl("events")
+    ev = sf_table("events")
     ids = sorted(int(i) for i in ev["event_id"])
     glens = [b - a - 1 for a, b in zip(ids, ids[1:]) if b > a + 1]
     row = REGISTRY["q16_sequence_gaps"].spark(spark, SF_DIR).collect()[0]
@@ -2042,7 +2041,7 @@ def test_q16_sequence_gap_report(spark):
 
 
 def test_x22_temperature_mix_alpha_half(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     tok = defaultdict(int)
     for _, r in docs.iterrows():
         tok[r["source"]] += len(r["text"].split(" "))
@@ -2068,7 +2067,7 @@ def test_x22_temperature_mix_alpha_half(spark):
 
 
 def test_x29_oov_against_top50_vocab(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     cnt = defaultdict(int)
     for _, r in docs.iterrows():
         for t in r["text"].split(" "):
@@ -2079,6 +2078,7 @@ def test_x29_oov_against_top50_vocab(spark):
     }
     rows = REGISTRY["x29_oov_rate"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.n_tokens, r.n_oov, r.oov_rate) for r in rows}
+    assert len(rows) == len(got) == len(docs)
     for _, r in docs.iterrows():
         toks = [t for t in r["text"].split(" ") if t]
         oov = sum(1 for t in toks if t not in vocab)
@@ -2091,8 +2091,8 @@ def test_x29_oov_against_top50_vocab(spark):
 
 
 def test_ml15_two_feature_normal_equations(spark):
-    li = _tbl("lineitem")
-    o = _tbl("orders")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
     per = {
         int(k): (len(g), int(g["l_quantity"].sum()))
         for k, g in li.groupby("l_orderkey")
@@ -2139,7 +2139,7 @@ def test_ml15_two_feature_normal_equations(spark):
 
 
 def _vecs():
-    emb = _tbl("embeddings")
+    emb = sf_table("embeddings")
     return {
         int(r["vec_id"]): ([float(x) for x in r["embedding"]], int(r["label"]))
         for _, r in emb.iterrows()
@@ -2240,7 +2240,7 @@ def test_v2_ivf_probe_semantics_law(spark):
 
 
 def test_ml7_naive_bayes_nano_quantized(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     train = docs[docs["doc_id"] % 5 != 0]
     test = docs[docs["doc_id"] % 5 == 0]
     cls_docs = defaultdict(int)
@@ -2292,7 +2292,7 @@ def test_ml7_naive_bayes_nano_quantized(spark):
 
 def test_x26_rake_degree_over_frequency(spark):
     stops = set(STOPWORDS)
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     phrases = []
     for _, r in docs.iterrows():
         marked = " ".join(
@@ -2326,7 +2326,7 @@ def test_x26_rake_degree_over_frequency(spark):
 
 
 def test_x31_fertility_subword_rule(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     agg = defaultdict(lambda: [0, 0, 0, 0])  # docs, words, subwords, chars
     for _, r in docs.iterrows():
         toks = r["text"].split(" ")
@@ -2347,7 +2347,7 @@ def test_x31_fertility_subword_rule(spark):
 
 
 def test_ml9_also_bought_support_confidence(spark):
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     baskets = defaultdict(set)
     for _, r in li.iterrows():
         baskets[int(r["l_orderkey"])].add(int(r["l_partkey"]))
@@ -2379,7 +2379,7 @@ def test_ml9_also_bought_support_confidence(spark):
 
 
 def test_q6_profile_summary_law(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     rows = REGISTRY["q6_profile_summary"].spark(spark, SF_DIR).collect()
     got = {r.col_name: r for r in rows}
     numeric = {"o_orderkey", "o_custkey", "o_totalprice"}
@@ -2397,8 +2397,8 @@ def test_q6_profile_summary_law(spark):
 
 
 def test_q15_pk_uniqueness_law(spark):
-    li = _tbl("lineitem")
-    o = _tbl("orders")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
     rows = REGISTRY["q15_pk_uniqueness"].spark(spark, SF_DIR).collect()
     got = {r.table_name: r for r in rows}
     # lineitem's textbook composite key is genuinely violated by the
@@ -2417,7 +2417,7 @@ def test_q15_pk_uniqueness_law(spark):
 
 
 def test_t3_keyset_equals_offset_pagination(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     ordered = o.sort_values(["o_orderdate", "o_orderkey"])
     page = ordered.iloc[40:60]
     rows = REGISTRY["t3_keyset_page"].spark(spark, SF_DIR).collect()
@@ -2453,7 +2453,7 @@ def _lsh_cands(sigs, rows_per_band=3):
 
 
 def test_d14_minhash_estimate_vs_exact(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     toks = {
         int(r["doc_id"]): set(r["text"].split(" "))
         for _, r in docs.iterrows()
@@ -2477,7 +2477,7 @@ def test_d14_minhash_estimate_vs_exact(spark):
 
 
 def test_d17_s_curve_empirical_and_theory(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     toks = {
         int(r["doc_id"]): set(r["text"].split(" "))
         for _, r in docs.iterrows()
@@ -2511,10 +2511,15 @@ def test_d17_s_curve_empirical_and_theory(spark):
         # S-curve law: the theoretical pass rate is monotone in J
         assert r.theoretical_rate > prev_theory
         prev_theory = r.theoretical_rate
+    # and the empirical curve separates its ends on this corpus
+    lo = [got[b].empirical_rate for b in got if b <= 2]
+    hi = [got[b].empirical_rate for b in got if b >= 8]
+    if lo and hi:
+        assert max(lo) < min(hi)
 
 
 def test_x12_unigram_familiarity_law(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     corpus = defaultdict(int)
     per_doc = {}
     for _, r in docs.iterrows():
@@ -2539,7 +2544,7 @@ def test_x12_unigram_familiarity_law(spark):
 
 
 def test_x21_stupid_backoff_score(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     train = docs[docs["doc_id"] % 5 != 0]
     test = docs[docs["doc_id"] % 5 == 0]
     uni = defaultdict(int)
@@ -2658,7 +2663,7 @@ def test_u5_merged_partials_equal_direct_rollup(spark):
     """The mergeable-partials identity that justifies DECIMAL partial
     sums: base + tranche merged per day == one direct rollup of all
     events."""
-    recs = _events_sorted()
+    recs = events_sorted()
     direct = defaultdict(lambda: [0, Decimal(0)])
     for u, us, e, et, v, ts in recs:
         d = ts.date()
@@ -2676,7 +2681,7 @@ def test_u5_merged_partials_equal_direct_rollup(spark):
 
 
 def test_d2_bigram_jaccard_pairs(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     sh = {}
     for _, r in docs.iterrows():
         d = int(r["doc_id"])
@@ -2706,7 +2711,7 @@ def test_d2_bigram_jaccard_pairs(spark):
 
 
 def test_r4_gap_islands_sessionization(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, _, ts in recs:
         by_user[u].append((us, ts))
@@ -2737,7 +2742,7 @@ def test_r4_gap_islands_sessionization(spark):
 
 
 def test_p11_pack_concat_chunk_law(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     per = []
     for _, r in docs.iterrows():
         h = hashlib.md5(r["text"].encode()).hexdigest()
@@ -2764,7 +2769,7 @@ def test_p11_pack_concat_chunk_law(spark):
 
 
 def test_x13_token_budget_rule(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["x13_token_budget"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.n_tokens, r.est_subwords, r.chars_per_subword)
            for r in rows}
@@ -2785,7 +2790,7 @@ def test_e1_e2_window_assignment_laws(spark):
     """Tumbling windows partition events exactly once; 1h/30m sliding
     windows place every event in exactly TWO windows, so the sliding
     totals double-count the corpus by construction."""
-    recs = _events_sorted()
+    recs = events_sorted()
     tumb = defaultdict(lambda: [0, Decimal(0)])
     slide = defaultdict(lambda: [0, Decimal(0)])
     for u, us, e, et, v, ts in recs:
@@ -2815,7 +2820,7 @@ def test_e1_e2_window_assignment_laws(spark):
 
 
 def test_e3_session_window_end_is_last_plus_gap(spark):
-    recs = _events_sorted()
+    recs = events_sorted()
     by_user = defaultdict(list)
     for u, us, e, et, v, ts in recs:
         by_user[u].append((us, ts, Decimal(repr(round(v, 2)))))
@@ -2844,7 +2849,7 @@ def test_e3_session_window_end_is_last_plus_gap(spark):
 
 
 def test_u6_cdc_apply_with_tombstones(spark):
-    cust = _tbl("customer").sort_values("c_custkey")
+    cust = sf_table("customer").sort_values("c_custkey")
     base = {
         int(r["c_custkey"]): (
             r["c_name"], int(r["c_nationkey"]), float(r["c_acctbal"]),
@@ -2859,7 +2864,7 @@ def test_u6_cdc_apply_with_tombstones(spark):
             n, nk, bal, seg = base[k]
             target[k] = (n, nk, bal + 100.0, seg)
     # inserts: 3 smallest keys re-keyed to -(key)-1 (strictly negative;
-    # the round-8 audit caught bare negation colliding on key 0)
+    # a bare negation would collide on key 0)
     for k in sorted(base)[:3]:
         n, nk, bal, seg = base[k]
         target[-k - 1] = ("new_" + n, nk, bal, seg)
@@ -2905,7 +2910,7 @@ def _chunks(toks, n=8, stride=4):
 
 
 def test_d8_chunk_dedup_fractions(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     per_doc = {
         int(r["doc_id"]): _chunks(r["text"].split(" "))
         for _, r in docs.iterrows()
@@ -2924,7 +2929,7 @@ def test_d8_chunk_dedup_fractions(spark):
 
 
 def test_d10_cross_source_containment(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     ref = set()
     for _, r in docs.iterrows():
         if r["source"] != "src0":
@@ -2963,7 +2968,7 @@ def test_g1_rollup_levels_are_consistent(spark):
 
 
 def test_pv1_pivot_matches_contingency_table(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     cells = defaultdict(int)
     for _, r in o.iterrows():
         cells[(r["o_orderpriority"], r["o_orderstatus"])] += 1
@@ -2986,7 +2991,7 @@ def test_pv1_pivot_matches_contingency_table(spark):
 
 
 def test_h1_pricing_summary_brute_force(spark):
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     cells = defaultdict(lambda: [Decimal(0), Decimal(0), Decimal(0),
                                  Decimal(0), 0])
     cutoff = pd.Timestamp("2000-09-02")
@@ -3022,7 +3027,7 @@ def test_h1_pricing_summary_brute_force(spark):
 
 
 def test_x4_document_fingerprints(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["x4_fingerprint"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.md5_fp, r.shingle_fp) for r in rows}
     for _, r in docs.iterrows():
@@ -3040,7 +3045,7 @@ def test_x4_document_fingerprints(spark):
 
 def test_x15_winnowing_fingerprints(spark):
     K, W, MOD = 8, 4, 1_000_000_007
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     expect = set()
     for _, r in docs.iterrows():
         text = r["text"]
@@ -3068,7 +3073,7 @@ def test_x15_winnowing_fingerprints(spark):
 
 
 def _x7_signals():
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     out = {}
     for _, r in docs.iterrows():
         toks = r["text"].split(" ")
@@ -3099,7 +3104,7 @@ def test_x7_gopher_repetition_signals(spark):
 
 def test_x9_cascade_reason_bitmask(spark):
     rep = _x7_signals()
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["x9_quality_cascade"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: (r.reasons, r.keep) for r in rows}
     for _, r in docs.iterrows():
@@ -3119,7 +3124,7 @@ def test_x9_cascade_reason_bitmask(spark):
 
 
 def test_x10_x11_token_shares_and_equalizer(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     cells = defaultdict(lambda: [0, 0])
     for _, r in docs.iterrows():
         c = cells[(r["source"], r["lang"])]
@@ -3155,7 +3160,7 @@ def test_x10_x11_token_shares_and_equalizer(spark):
 
 
 def test_u2_u3_cdc_classification_and_compaction(spark):
-    cust = _tbl("customer")
+    cust = sf_table("customer")
     keys = set(int(k) for k in cust["c_custkey"])
     delta_keys = {k for k in keys if k % 10 == 0} | {
         -k - 1 for k in sorted(keys)[:3]
@@ -3167,7 +3172,7 @@ def test_u2_u3_cdc_classification_and_compaction(spark):
     assert (r.n_inserted, r.n_updated, r.n_unchanged) == (
         inserted, updated, unchanged)
     # u3: latest record per user under (ts DESC, event_id DESC)
-    recs = _events_sorted()
+    recs = events_sorted()
     latest = {}
     for u, us, e, et, v, ts in recs:  # sorted ascending; last one wins
         latest[u] = (e, ts, et, v)
@@ -3179,13 +3184,12 @@ def test_u2_u3_cdc_classification_and_compaction(spark):
 
 
 def test_u1_merge_output_keys_are_unique(spark):
-    """The MERGE law the round-8 audit caught being violated: the merged
-    dimension must carry each business key EXACTLY once (the fixture's
-    keys start at 0, and the old bare-negation insert keying collided
-    -0 == 0, emitting customer 0 twice on both engines)."""
+    """The merged dimension must carry each business key EXACTLY once
+    (the fixture's keys start at 0, so a bare-negation insert keying
+    would collide -0 == 0 and emit customer 0 twice on both engines)."""
     from collections import Counter as C
 
-    cust = _tbl("customer")
+    cust = sf_table("customer")
     rows = REGISTRY["u1_scd1_merge"].spark(spark, SF_DIR).collect()
     counts = C(r.c_custkey for r in rows)
     assert max(counts.values()) == 1
@@ -3206,7 +3210,7 @@ def test_r8_ohlc_bar_conventions(spark):
     """OHLC: open = value at the FIRST (ts, event_id) of the bar,
     close = at the LAST; high/low are plain extremes; bars are 15-min
     tumbling per event_type."""
-    recs = _events_sorted()
+    recs = events_sorted()
     bars = defaultdict(list)
     for u, us, e, et, v, ts in recs:
         bar = ts.replace(minute=(ts.minute // 15) * 15, second=0,
@@ -3240,7 +3244,7 @@ def _simhash60(text):
 
 
 def test_d4_simhash_bit_majority_law(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["d4_simhash"].spark(spark, SF_DIR).collect()
     got = {r.doc_id: r.simhash for r in rows}
     for _, r in docs.iterrows():
@@ -3251,7 +3255,7 @@ def test_d4b_simhash_pairs_exact_recall_at_3(spark):
     """15-bit-band blocking has EXACT recall at Hamming <= 3 over 4
     bands (pigeonhole: 4 bands, 3 differing bits, one band must be
     clean) — so the pair set equals the brute-force Hamming scan."""
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     fp = {
         int(r["doc_id"]): _simhash60(r["text"])
         for _, r in docs.iterrows()
@@ -3273,7 +3277,7 @@ def test_d4b_simhash_pairs_exact_recall_at_3(spark):
 def test_e4_json_extraction(spark):
     import json as _json
 
-    ev = _tbl("events")
+    ev = sf_table("events")
     rows = REGISTRY["e4_props_json"].spark(spark, SF_DIR).collect()
     got = {r.event_id: r.k for r in rows}
     for _, r in ev.iterrows():
@@ -3382,7 +3386,7 @@ def test_x20_chunk_split_coverage_law(spark):
     """RAG chunking (size 32, stride 24): starts run 0..n-overlap-1 by
     stride, every token is covered, and no chunk is fully contained in
     its predecessor (the trailing-duplicate guard)."""
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     rows = REGISTRY["x20_chunk_split"].spark(spark, SF_DIR).collect()
     got = defaultdict(dict)
     for r in rows:
@@ -3406,7 +3410,7 @@ def test_x20_chunk_split_coverage_law(spark):
 
 
 def test_x5_corpus_top_terms(spark):
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     cnt = defaultdict(int)
     for _, r in docs.iterrows():
         for t in r["text"].split(" "):
@@ -3418,8 +3422,8 @@ def test_x5_corpus_top_terms(spark):
 
 
 def test_v4_text_embedding_join_norms(spark):
-    docs = _tbl("documents")[["doc_id", "lang"]]
-    emb = _tbl("embeddings")
+    docs = sf_table("documents")[["doc_id", "lang"]]
+    emb = sf_table("embeddings")
     norm6 = {
         int(r["vec_id"]): Decimal(
             repr(round(math.sqrt(sum(float(x) * float(x)
@@ -3442,7 +3446,7 @@ def test_v4_text_embedding_join_norms(spark):
 
 
 def test_q12_expectation_rules(spark):
-    o = _tbl("orders")
+    o = sf_table("orders")
     n = len(o)
     viol = {
         "totalprice_positive": int((~(o["o_totalprice"] > 0)).sum()),
@@ -3468,7 +3472,7 @@ def test_d13_semantic_clusters_are_v3_components(spark):
         (r.vec_a, r.vec_b)
         for r in REGISTRY["v3_lsh_neardup"].spark(spark, SF_DIR).collect()
     ]
-    emb = _tbl("embeddings")
+    emb = sf_table("embeddings")
     parent = {int(v): int(v) for v in emb["vec_id"]}
 
     def find(x):
@@ -3498,9 +3502,9 @@ def _rev(row):
 
 
 def test_h3_shipping_priority_brute_force(spark):
-    li = _tbl("lineitem")
-    o = _tbl("orders")
-    c = _tbl("customer")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
+    c = sf_table("customer")
     bld = set(
         int(k) for k in c[c["c_mktsegment"] == "BUILDING"]["c_custkey"]
     )
@@ -3533,12 +3537,12 @@ def test_h3_shipping_priority_brute_force(spark):
 def test_h5_region_volume_local_supplier_rule(spark):
     """Q5's defining subtlety: revenue counts only when the SUPPLIER
     shares the customer's nation (local supply chain)."""
-    li = _tbl("lineitem")
-    o = _tbl("orders")
-    c = _tbl("customer")
-    s = _tbl("supplier")
-    n = _tbl("nation")
-    r = _tbl("region")
+    li = sf_table("lineitem")
+    o = sf_table("orders")
+    c = sf_table("customer")
+    s = sf_table("supplier")
+    n = sf_table("nation")
+    r = sf_table("region")
     asia = set(
         int(k) for k in r[r["r_name"] == "ASIA"]["r_regionkey"]
     )

@@ -24,18 +24,14 @@ import pandas as pd
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, STOPWORDS, doc_texts, sf_table
+from .test_round8_semantics import _chunks
 
-STOPWORDS = {"the", "a", "and", "of", "to", "in", "is"}
 EMAIL_RE = re.compile(r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}")
 
 
-def _docs() -> pd.DataFrame:
-    return pd.read_parquet(f"{SF_DIR}/documents.parquet")
-
-
 def _texts() -> dict[int, str]:
-    return {int(r["doc_id"]): r["text"] for _, r in _docs().iterrows()}
+    return {int(r["doc_id"]): r["text"] for _, r in sf_table("documents").iterrows()}
 
 
 def _union_find_clusters(edges, nodes):
@@ -71,16 +67,6 @@ def _d6_labels() -> dict[int, int]:
     return _union_find_clusters(edges, sorted(sets_))
 
 
-def _chunks(tokens: list[str]) -> set[str]:
-    """d8/d16 chunking: 8-token windows on a 4-token stride; full
-    windows only, except a single short chunk for sub-8-token docs."""
-    n = len(tokens)
-    out = set()
-    for i in range(0, max(n - 7, 1), 4):
-        out.add(" ".join(tokens[i:i + 8]))
-    return out
-
-
 # ------------------------------------------------------------ d-family
 
 
@@ -89,13 +75,13 @@ def test_d1b_prefix_key_groups_law(spark):
     keep the min doc_id, sizes sum to the corpus, and the fixture
     genuinely collides (some group_size >= 2)."""
     groups = defaultdict(list)
-    for d, t in _texts().items():
+    for d, t in doc_texts().items():
         key = hashlib.md5(" ".join(t.split(" ")[:2]).encode()).hexdigest()
         groups[key].append(d)
     rows = REGISTRY["d1b_dedup_prefix"].spark(spark, SF_DIR).collect()
     got = {r.prefix_key: (r.keep_doc_id, r.group_size) for r in rows}
     assert got == {k: (min(v), len(v)) for k, v in groups.items()}
-    assert sum(v[1] for v in got.values()) == len(_texts())
+    assert sum(v[1] for v in got.values()) == len(doc_texts())
     assert any(v[1] >= 2 for v in got.values())
 
 
@@ -151,7 +137,7 @@ def test_d9_contamination_shared_distinct_4grams(spark):
     corpus doc (id >= 20) and an eval doc (id < 20); zero-overlap pairs
     never appear."""
     grams = {}
-    for d, t in _texts().items():
+    for d, t in doc_texts().items():
         toks = t.split(" ")
         n = len(toks)
         grams[d] = {
@@ -189,7 +175,7 @@ def test_d12_blocked_levenshtein_law(spark):
     """d12 law: pairs share the first title token and a +-1 length band
     (length//8), a < b, and carry the exact edit distance <= 5."""
     titles = {
-        d: " ".join(t.split(" ")[:3]) for d, t in _texts().items()
+        d: " ".join(t.split(" ")[:3]) for d, t in doc_texts().items()
     }
     expect = {}
     by_tok = defaultdict(list)
@@ -214,7 +200,7 @@ def test_d15_keep_longest_policy_law(spark):
     keep flag fires exactly once per cluster."""
     labels = _d6_labels()
     n_chars = {
-        int(r["doc_id"]): int(r["n_chars"]) for _, r in _docs().iterrows()
+        int(r["doc_id"]): int(r["n_chars"]) for _, r in sf_table("documents").iterrows()
     }
     members = defaultdict(list)
     for d, c in labels.items():
@@ -239,7 +225,7 @@ def test_d16_containment_pairs_law(spark):
     (smaller, larger) pair — size tie broken by id — with
     2*|intersection| >= |small| appears with exact counts and both
     containment fractions."""
-    sets_ = {d: _chunks(t.split(" ")) for d, t in _texts().items()}
+    sets_ = {d: set(_chunks(t.split(" "))) for d, t in doc_texts().items()}
     expect = {}
     for a, b in combinations(sorted(sets_), 2):
         na, nb = len(sets_[a]), len(sets_[b])
@@ -274,8 +260,8 @@ def test_x3_stopword_language_heuristic(spark):
     """x3 law: lang_guess = 'en' iff stopword ratio (over raw
     single-space tokens, empties included in the denominator) > 0.05."""
     rows = REGISTRY["x3_lang_guess"].spark(spark, SF_DIR).collect()
-    texts = _texts()
-    langs = {int(r["doc_id"]): r["lang"] for _, r in _docs().iterrows()}
+    texts = doc_texts()
+    langs = {int(r["doc_id"]): r["lang"] for _, r in sf_table("documents").iterrows()}
     got = {r.doc_id: (r.lang, r.lang_guess) for r in rows}
     expect = {
         d: (langs[d], "en" if _stop_ratio(t) > 0.05 else "unknown")
@@ -288,8 +274,8 @@ def test_x3_stopword_language_heuristic(spark):
 def test_x19_confusion_matrix_law(spark):
     """x19 law: cells are exact (actual, predicted) counts and each
     cell's share divides by its ACTUAL-class row total."""
-    texts = _texts()
-    langs = {int(r["doc_id"]): r["lang"] for _, r in _docs().iterrows()}
+    texts = doc_texts()
+    langs = {int(r["doc_id"]): r["lang"] for _, r in sf_table("documents").iterrows()}
     cells = Counter(
         (langs[d], "en" if _stop_ratio(t) > 0.05 else "unknown")
         for d, t in texts.items()
@@ -309,7 +295,7 @@ def test_x6_tfidf_rational_idf_law(spark):
     """x6 law: score = (tf/doc_len) * (N/df) — rational IDF, doc_len
     from token multiplicity, df over documents — top-3 per doc with the
     term tiebreak."""
-    texts = _texts()
+    texts = doc_texts()
     n_docs = len(texts)
     tf = {}
     df = Counter()
@@ -340,7 +326,7 @@ def test_x8_email_scrub_law(spark):
     """x8 law: the raw corpus holds no emails; every 7th doc gets one
     injected; counts and scrubbed md5s match a reference regex pass."""
     expect = {}
-    for d, t in _texts().items():
+    for d, t in doc_texts().items():
         assert not EMAIL_RE.search(t)  # raw corpus is clean
         if d % 7 == 0:
             t = f"{t} contact user{d}@example.com now"
@@ -360,7 +346,7 @@ def test_x18_association_rules_law(spark):
     """x18 law: pair support counts DOCUMENTS containing both terms
     (multiplicity-free), support >= 25, confidence = c_xy/c_x, lift
     rounded at 9 dp, top-20 by (lift DESC, t1, t2)."""
-    texts = _texts()
+    texts = doc_texts()
     n_docs = len(texts)
     doc_terms = {
         d: sorted({x for x in t.split(" ") if x}) for d, t in texts.items()
@@ -393,7 +379,7 @@ def test_x25_first_introduction_novelty_law(spark):
     """x25 law: a distinct 5-gram is novel for exactly the MIN doc_id
     containing it; docs under 5 tokens vanish; zero-novel docs report 0,
     not NULL."""
-    texts = _texts()
+    texts = doc_texts()
     grams = {}
     for d, t in texts.items():
         toks = t.split(" ")

@@ -13,6 +13,7 @@ single IEEE ops replicated with identical association.
 
 from __future__ import annotations
 
+import os
 from collections import Counter, defaultdict
 from decimal import Decimal
 
@@ -20,22 +21,14 @@ import pandas as pd
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, sf_table
+from .test_round8_semantics import _rev
 
 # h7 and h20 are empty at sf0.001 (degeneracy-sweep finding: their
 # filters only produce live rows from sf0.01 up), so their laws run at
-# the driver's sf0.01 — a 60k-row brute force, still sub-second.
-SF01_DIR = "/root/testdata/sf0.01"
-
-
-def _tbl(name: str, sf_dir: str = SF_DIR) -> pd.DataFrame:
-    return pd.read_parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _rev(row) -> Decimal:
-    p = Decimal(repr(round(float(row["l_extendedprice"]), 2)))
-    d = Decimal(repr(round(float(row["l_discount"]), 4)))
-    return p * (1 - d)
+# the driver's sf0.01 (the sibling of the default fixture directory) — a
+# 60k-row brute force, still sub-second.
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 def _dec2(x) -> Decimal:
@@ -45,14 +38,14 @@ def _dec2(x) -> Decimal:
 def _nation_names() -> dict[int, str]:
     return {
         int(r["n_nationkey"]): r["n_name"]
-        for _, r in _tbl("nation").iterrows()
+        for _, r in sf_table("nation").iterrows()
     }
 
 
 def _region_of_nation() -> dict[int, int]:
     return {
         int(r["n_nationkey"]): int(r["n_regionkey"])
-        for _, r in _tbl("nation").iterrows()
+        for _, r in sf_table("nation").iterrows()
     }
 
 
@@ -63,7 +56,7 @@ def test_h2_min_cost_supplier_argmin_law(spark):
     """Q2 law: the kept (part, supplier) pairs are exactly the argmin set
     of observed unit price among ASIA suppliers, deduped, ordered by
     (acctbal DESC, nation, supplier, part), top-100."""
-    region = _tbl("region")
+    region = sf_table("region")
     asia = set(
         int(k) for k in region[region["r_name"] == "ASIA"]["r_regionkey"]
     )
@@ -72,17 +65,17 @@ def test_h2_min_cost_supplier_argmin_law(spark):
     supp = {
         int(r["s_suppkey"]): (r["s_name"], float(r["s_acctbal"]),
                               nat[int(r["s_nationkey"])])
-        for _, r in _tbl("supplier").iterrows()
+        for _, r in sf_table("supplier").iterrows()
         if reg[int(r["s_nationkey"])] in asia
     }
     part = {
         int(r["p_partkey"]): r["p_name"]
-        for _, r in _tbl("part").iterrows()
+        for _, r in sf_table("part").iterrows()
         if r["p_type"] == "LARGE"
     }
     # eligible: one row per qualifying lineitem, unit price as one IEEE divide
     eligible = []
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         pk, sk = int(r["l_partkey"]), int(r["l_suppkey"])
         q = float(r["l_quantity"])
         if pk in part and sk in supp and q > 0:
@@ -110,7 +103,7 @@ def test_h2_min_cost_supplier_argmin_law(spark):
 def test_h4_order_priority_exists_once_law(spark):
     """Q4 law: each 1997H1 order with >=1 line shipped after its order
     date counts EXACTLY ONCE regardless of how many such lines it has."""
-    o = _tbl("orders")
+    o = sf_table("orders")
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1997-07-01")
     window = {
         int(r["o_orderkey"]): (pd.Timestamp(r["o_orderdate"]),
@@ -119,7 +112,7 @@ def test_h4_order_priority_exists_once_law(spark):
         if lo <= pd.Timestamp(r["o_orderdate"]) < hi
     }
     qualifying: set[int] = set()
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         k = int(r["l_orderkey"])
         if k in window and pd.Timestamp(r["l_shipdate"]) > window[k][0]:
             qualifying.add(k)
@@ -134,7 +127,7 @@ def test_h6_forecast_revenue_filter_and_decimal_law(spark):
     1997 / discount-band / small-quantity slice, raw-float predicates."""
     total = Decimal(0)
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1998-01-01")
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         d = float(r["l_discount"])
         if not (lo <= pd.Timestamp(r["l_shipdate"]) < hi):
             continue
@@ -151,16 +144,16 @@ def test_h7_bilateral_pairs_law(spark):
     per-(pair, ship-year) revenue. Runs at sf0.01: the pair filter is
     empty at sf0.001 (degeneracy-sweep finding)."""
     nat = {int(r["n_nationkey"]): r["n_name"]
-           for _, r in _tbl("nation", SF01_DIR).iterrows()}
+           for _, r in sf_table("nation", SF01_DIR).iterrows()}
     supp_nat = {int(r["s_suppkey"]): nat[int(r["s_nationkey"])]
-                for _, r in _tbl("supplier", SF01_DIR).iterrows()}
+                for _, r in sf_table("supplier", SF01_DIR).iterrows()}
     cust_nat = {int(r["c_custkey"]): nat[int(r["c_nationkey"])]
-                for _, r in _tbl("customer", SF01_DIR).iterrows()}
+                for _, r in sf_table("customer", SF01_DIR).iterrows()}
     ord_cust = {int(r["o_orderkey"]): int(r["o_custkey"])
-                for _, r in _tbl("orders", SF01_DIR).iterrows()}
+                for _, r in sf_table("orders", SF01_DIR).iterrows()}
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1999-01-01")
     per = defaultdict(Decimal)
-    for _, r in _tbl("lineitem", SF01_DIR).iterrows():
+    for _, r in sf_table("lineitem", SF01_DIR).iterrows():
         sd = pd.Timestamp(r["l_shipdate"])
         if not (lo <= sd < hi):
             continue
@@ -179,21 +172,21 @@ def test_h8_market_share_is_supplier_nation_share_of_region_rev(spark):
     nation; the supplier side only picks the numerator)."""
     nat = _nation_names()
     reg = _region_of_nation()
-    region = _tbl("region")
+    region = sf_table("region")
     asia = set(
         int(k) for k in region[region["r_name"] == "ASIA"]["r_regionkey"]
     )
     cust_in_asia = {
         int(r["c_custkey"]): reg[int(r["c_nationkey"])] in asia
-        for _, r in _tbl("customer").iterrows()
+        for _, r in sf_table("customer").iterrows()
     }
     supp_nat = {int(r["s_suppkey"]): nat[int(r["s_nationkey"])]
-                for _, r in _tbl("supplier").iterrows()}
+                for _, r in sf_table("supplier").iterrows()}
     ords = {int(r["o_orderkey"]): (int(r["o_custkey"]),
                                    pd.Timestamp(r["o_orderdate"]).year)
-            for _, r in _tbl("orders").iterrows()}
+            for _, r in sf_table("orders").iterrows()}
     num, den = defaultdict(Decimal), defaultdict(Decimal)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         ck, yr = ords[int(r["l_orderkey"])]
         if not cust_in_asia[ck]:
             continue
@@ -215,15 +208,15 @@ def test_h9_profit_decomposition_law(spark):
     nat = _nation_names()
     widget = {
         int(r["p_partkey"]): _dec2(r["p_retailprice"])
-        for _, r in _tbl("part").iterrows()
+        for _, r in sf_table("part").iterrows()
         if "widget" in r["p_name"]
     }
     supp_nat = {int(r["s_suppkey"]): nat[int(r["s_nationkey"])]
-                for _, r in _tbl("supplier").iterrows()}
+                for _, r in sf_table("supplier").iterrows()}
     ord_year = {int(r["o_orderkey"]): pd.Timestamp(r["o_orderdate"]).year
-                for _, r in _tbl("orders").iterrows()}
+                for _, r in sf_table("orders").iterrows()}
     rev, cost = defaultdict(Decimal), defaultdict(Decimal)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         pk = int(r["l_partkey"])
         if pk not in widget:
             continue
@@ -242,17 +235,17 @@ def test_h10_returned_items_top20_law(spark):
     cust = {
         int(r["c_custkey"]): (r["c_name"], float(r["c_acctbal"]),
                               int(r["c_nationkey"]))
-        for _, r in _tbl("customer").iterrows()
+        for _, r in sf_table("customer").iterrows()
     }
     nat = _nation_names()
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1997-04-01")
     ord_cust = {
         int(r["o_orderkey"]): int(r["o_custkey"])
-        for _, r in _tbl("orders").iterrows()
+        for _, r in sf_table("orders").iterrows()
         if lo <= pd.Timestamp(r["o_orderdate"]) < hi
     }
     per = defaultdict(Decimal)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         k = int(r["l_orderkey"])
         if r["l_returnflag"] == "R" and k in ord_cust:
             per[ord_cust[k]] += _rev(r)
@@ -272,11 +265,11 @@ def test_h11_threshold_is_strict_and_over_same_slice(spark):
     nat = _nation_names()
     n3_supp = {
         int(r["s_suppkey"])
-        for _, r in _tbl("supplier").iterrows()
+        for _, r in sf_table("supplier").iterrows()
         if nat[int(r["s_nationkey"])] == "NATION_3"
     }
     per = defaultdict(Decimal)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         if int(r["l_suppkey"]) in n3_supp:
             per[int(r["l_partkey"])] += _rev(r)
     total = float(sum(per.values()))
@@ -293,10 +286,10 @@ def test_h12_counts_lines_not_orders(spark):
     order with 3 shipped lines contributes 3), and high+low covers the
     window exactly."""
     prio = {int(r["o_orderkey"]): r["o_orderpriority"]
-            for _, r in _tbl("orders").iterrows()}
+            for _, r in sf_table("orders").iterrows()}
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1998-01-01")
     high_c, low_c, n_window = Counter(), Counter(), 0
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         if not (lo <= pd.Timestamp(r["l_shipdate"]) < hi):
             continue
         n_window += 1
@@ -321,9 +314,9 @@ def test_h13_zero_order_customers_survive_the_outer_join(spark):
     """Q13 law: the predicate lives INSIDE the join, so customers whose
     every order is urgent land in the c_count=0 bucket, and custdist
     sums to the full customer count."""
-    n_cust = len(_tbl("customer"))
+    n_cust = len(sf_table("customer"))
     per = Counter()
-    for _, r in _tbl("orders").iterrows():
+    for _, r in sf_table("orders").iterrows():
         if r["o_orderpriority"] != "1-URGENT":
             per[int(r["o_custkey"])] += 1
     dist = Counter(per.values())
@@ -341,11 +334,11 @@ def test_h14_promo_ratio_association_law(spark):
     first — replicating the plan's IEEE association exactly."""
     promo = {
         int(r["p_partkey"])
-        for _, r in _tbl("part").iterrows() if r["p_type"] == "PROMO"
+        for _, r in sf_table("part").iterrows() if r["p_type"] == "PROMO"
     }
     lo, hi = pd.Timestamp("1997-03-01"), pd.Timestamp("1997-04-01")
     p_sum, t_sum = Decimal(0), Decimal(0)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         if not (lo <= pd.Timestamp(r["l_shipdate"]) < hi):
             continue
         v = _rev(r)
@@ -361,13 +354,13 @@ def test_h15_argmax_keeps_every_tied_supplier(spark):
     3-month revenue (ties all kept, never an arbitrary single row)."""
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1997-04-01")
     per = defaultdict(Decimal)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         if lo <= pd.Timestamp(r["l_shipdate"]) < hi:
             per[int(r["l_suppkey"])] += _rev(r)
     as_float = {k: float(v) for k, v in per.items()}
     mx = max(as_float.values())
     names = {int(r["s_suppkey"]): r["s_name"]
-             for _, r in _tbl("supplier").iterrows()}
+             for _, r in sf_table("supplier").iterrows()}
     expect = {(k, names[k], v) for k, v in as_float.items() if v == mx}
     rows = REGISTRY["h15_top_supplier"].spark(spark, SF_DIR).collect()
     got = {(r.s_suppkey, r.s_name, r.total_revenue) for r in rows}
@@ -380,14 +373,14 @@ def test_h16_distinct_suppliers_after_blacklist(spark):
     suppliers removed BEFORE counting."""
     bad = {
         int(r["s_suppkey"])
-        for _, r in _tbl("supplier").iterrows() if float(r["s_acctbal"]) < 0
+        for _, r in sf_table("supplier").iterrows() if float(r["s_acctbal"]) < 0
     }
     pmeta = {
         int(r["p_partkey"]): (r["p_brand"], int(r["p_size"]))
-        for _, r in _tbl("part").iterrows() if r["p_type"] != "STANDARD"
+        for _, r in sf_table("part").iterrows() if r["p_type"] != "STANDARD"
     }
     sets = defaultdict(set)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         pk, sk = int(r["l_partkey"]), int(r["l_suppkey"])
         if pk in pmeta and sk not in bad:
             sets[pmeta[pk]].add(sk)
@@ -401,13 +394,13 @@ def test_h17_threshold_avg_is_over_all_lines_of_the_part(spark):
     ALL its lineitems (not a filtered slice), avg = float(decimal sum) /
     count, and the final figure divides by 7.0 once."""
     qty_sum, qty_n = defaultdict(Decimal), Counter()
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         pk = int(r["l_partkey"])
         qty_sum[pk] += _dec2(r["l_quantity"])
         qty_n[pk] += 1
     avg = {pk: float(qty_sum[pk]) / qty_n[pk] for pk in qty_sum}
     price = Decimal(0)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         if float(r["l_quantity"]) < 0.2 * avg[int(r["l_partkey"])]:
             price += _dec2(r["l_extendedprice"])
     [row] = REGISTRY["h17_small_qty_revenue"].spark(spark, SF_DIR).collect()
@@ -419,12 +412,12 @@ def test_h18_having_threshold_and_top10(spark):
     double) > 150; top-10 by (total_qty DESC, orderkey) with header
     columns carried through unchanged."""
     tot = defaultdict(Decimal)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         tot[int(r["l_orderkey"])] += _dec2(r["l_quantity"])
     big = {k: float(v) for k, v in tot.items() if float(v) > 150.0}
-    ords = {int(r["o_orderkey"]): r for _, r in _tbl("orders").iterrows()}
+    ords = {int(r["o_orderkey"]): r for _, r in sf_table("orders").iterrows()}
     cust = {int(r["c_custkey"]): r["c_name"]
-            for _, r in _tbl("customer").iterrows()}
+            for _, r in sf_table("customer").iterrows()}
     ranked = sorted(big.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
     rows = REGISTRY["h18_large_volume"].spark(spark, SF_DIR).collect()
     assert [(r.o_orderkey, r.total_qty) for r in rows] == ranked
@@ -441,10 +434,10 @@ def test_h19_disjunction_of_conjunctions_law(spark):
     clause holds — revenue and line count over exactly that subset."""
     pmeta = {
         int(r["p_partkey"]): (r["p_brand"], int(r["p_size"]))
-        for _, r in _tbl("part").iterrows()
+        for _, r in sf_table("part").iterrows()
     }
     total, n = Decimal(0), 0
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         brand, size = pmeta[int(r["l_partkey"])]
         q = float(r["l_quantity"])
         ok = (
@@ -466,12 +459,12 @@ def test_h20_dominance_share_law(spark):
     sf0.01: empty at sf0.001 (degeneracy-sweep finding)."""
     b5 = {
         int(r["p_partkey"])
-        for _, r in _tbl("part", SF01_DIR).iterrows()
+        for _, r in sf_table("part", SF01_DIR).iterrows()
         if r["p_brand"] == "Brand#5"
     }
     lo, hi = pd.Timestamp("1997-01-01"), pd.Timestamp("1998-01-01")
     pair, part_tot = defaultdict(Decimal), defaultdict(Decimal)
-    for _, r in _tbl("lineitem", SF01_DIR).iterrows():
+    for _, r in sf_table("lineitem", SF01_DIR).iterrows():
         pk = int(r["l_partkey"])
         if pk not in b5 or not (lo <= pd.Timestamp(r["l_shipdate"]) < hi):
             continue
@@ -483,10 +476,10 @@ def test_h20_dominance_share_law(spark):
         if float(v) > float(part_tot[pk]) * 0.25
     }
     nat = {int(r["n_nationkey"]): r["n_name"]
-           for _, r in _tbl("nation", SF01_DIR).iterrows()}
+           for _, r in sf_table("nation", SF01_DIR).iterrows()}
     expect = sorted(
         (int(r["s_suppkey"]), r["s_name"])
-        for _, r in _tbl("supplier", SF01_DIR).iterrows()
+        for _, r in sf_table("supplier", SF01_DIR).iterrows()
         if nat[int(r["s_nationkey"])] == "NATION_5"
         and int(r["s_suppkey"]) in dominant
     )
@@ -502,11 +495,11 @@ def test_h21_alone_late_on_multisupplier_order(spark):
     multiplicity (two late lines by the same supplier count twice)."""
     finished = {
         int(r["o_orderkey"]): pd.Timestamp(r["o_orderdate"])
-        for _, r in _tbl("orders").iterrows() if r["o_orderstatus"] == "F"
+        for _, r in sf_table("orders").iterrows() if r["o_orderstatus"] == "F"
     }
     late_lines = []  # (orderkey, suppkey) with multiplicity
     order_supps = defaultdict(set)
-    for _, r in _tbl("lineitem").iterrows():
+    for _, r in sf_table("lineitem").iterrows():
         k, sk = int(r["l_orderkey"]), int(r["l_suppkey"])
         order_supps[k].add(sk)
         if k in finished and pd.Timestamp(r["l_shipdate"]) > (
@@ -517,7 +510,7 @@ def test_h21_alone_late_on_multisupplier_order(spark):
     for k, sk in late_lines:
         late_supp_sets[k].add(sk)
     names = {int(r["s_suppkey"]): r["s_name"]
-             for _, r in _tbl("supplier").iterrows()}
+             for _, r in sf_table("supplier").iterrows()}
     numwait = Counter()
     for k, sk in late_lines:
         if len(order_supps[k] - {sk}) == 0:
@@ -534,13 +527,13 @@ def test_h22_rich_and_recency_idle_law(spark):
     """Q22 law: kept customers have balance strictly above the global
     mean (float(decimal sum)/count) AND no order dated on/after
     2000-01-01; per-segment count + exact decimal balance total."""
-    cust = _tbl("customer")
+    cust = sf_table("customer")
     bal_sum = sum((_dec2(r["c_acctbal"]) for _, r in cust.iterrows()),
                   Decimal(0))
     avg = float(bal_sum) / len(cust)
     recent = {
         int(r["o_custkey"])
-        for _, r in _tbl("orders").iterrows()
+        for _, r in sf_table("orders").iterrows()
         if pd.Timestamp(r["o_orderdate"]).date() >= pd.Timestamp(
             "2000-01-01").date()
     }

@@ -25,19 +25,15 @@ import pandas as pd
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, sf_table
 
 MOD = 1_000_000_007
-
-
-def _tbl(name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{SF_DIR}/{name}.parquet")
 
 
 def _payloads() -> dict[int, bytes]:
     return {
         int(r["doc_id"]): r["text"].encode("utf-8")
-        for _, r in _tbl("documents").iterrows()
+        for _, r in sf_table("documents").iterrows()
         if r["text"] is not None
     }
 
@@ -83,7 +79,7 @@ def test_m3_centroid_is_per_dim_mean(spark):
     """m3 law: centroid_value[dim] is the arithmetic mean of that
     dimension over the label's vectors (to 6 dp), with every one of the
     64 dims present and the exact group size."""
-    emb = _tbl("embeddings")
+    emb = sf_table("embeddings")
     by_label = defaultdict(list)
     for _, r in emb.iterrows():
         by_label[int(r["label"])].append(
@@ -238,7 +234,7 @@ def test_sc4_skew_report_argmax_tiebreak_law(spark):
     """sc4 law: hottest_key is the SMALLEST key among count-argmaxes;
     skew_factor = max / (rows/keys) with the plan's IEEE association."""
     per = Counter(
-        int(r["l_suppkey"]) for _, r in _tbl("lineitem").iterrows()
+        int(r["l_suppkey"]) for _, r in sf_table("lineitem").iterrows()
     )
     mx = max(per.values())
     hottest = min(k for k, v in per.items() if v == mx)
@@ -256,7 +252,7 @@ def test_sc6_buckets_are_balanced_ordered_and_exact(spark):
     has floor/ceil(N/32) rows and key ranges are non-overlapping and
     ordered. Duplicate sort keys make rank assignment ambiguous only
     WITHIN a key, which cannot change per-bucket counts or boundaries."""
-    li = _tbl("lineitem")[["l_orderkey", "l_linenumber"]].copy()
+    li = sf_table("lineitem")[["l_orderkey", "l_linenumber"]].copy()
     li = li.sort_values(["l_orderkey", "l_linenumber"], kind="mergesort")
     n = len(li)
     per = defaultdict(lambda: [0, None, None])  # n_rows, lo, hi
@@ -286,9 +282,9 @@ def test_sc7_zone_map_skip_decisions_law(spark):
     n_match totals agree (the layouts file the same rows); and the
     ship-clustered layout has no zone false positives while skipping
     every strictly-pre-cutoff month."""
-    li = _tbl("lineitem")[["l_orderkey", "l_shipdate"]]
+    li = sf_table("lineitem")[["l_orderkey", "l_shipdate"]]
     o = {int(r["o_orderkey"]): pd.Timestamp(r["o_orderdate"])
-         for _, r in _tbl("orders").iterrows()}
+         for _, r in sf_table("orders").iterrows()}
     cutoff = (pd.Timestamp("1997-01-01") - pd.Timestamp("1970-01-01")).days
     per = {"by_order_month": defaultdict(lambda: [0, None, None, 0]),
            "by_ship_month": defaultdict(lambda: [0, None, None, 0])}
@@ -335,3 +331,7 @@ def test_sc7_zone_map_skip_decisions_law(spark):
     assert all(not v[5] for v in ship_rows.values())
     assert all(v[4] == (fid < 199701) for fid, v in ship_rows.items())
     assert any(v[4] for v in ship_rows.values())
+    # while the uncorrelated order-month layout can skip nothing
+    assert not any(
+        v[4] for (lay, _), v in got.items() if lay == "by_order_month"
+    )

@@ -16,23 +16,15 @@ from __future__ import annotations
 import hashlib
 import math
 from collections import Counter, defaultdict
-from decimal import ROUND_HALF_UP, Decimal
+from decimal import Decimal
 
 import pandas as pd
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, sf_table, spark_decimal
+from .test_round8_semantics import _cos, _vecs
 from .test_round8_semantics_dx import _d6_labels
-
-
-def _tbl(name: str) -> pd.DataFrame:
-    return pd.read_parquet(f"{SF_DIR}/{name}.parquet")
-
-
-def _dec(x, places: str) -> Decimal:
-    """Replicate Spark's CAST(double AS DECIMAL(p,s)): HALF_UP at s."""
-    return Decimal(repr(float(x))).quantize(Decimal(places), ROUND_HALF_UP)
 
 
 def _srem(a: int, b: int) -> int:
@@ -49,7 +41,7 @@ def test_a15_mode_tiebreak_law(spark):
     SMALLEST priority string on count ties."""
     cells = Counter(
         (r["o_orderstatus"], r["o_orderpriority"])
-        for _, r in _tbl("orders").iterrows()
+        for _, r in sf_table("orders").iterrows()
     )
     per_status = defaultdict(list)
     for (s, p), n in cells.items():
@@ -67,13 +59,13 @@ def test_a31_weekday_origin_is_monday0(spark):
     """a31 law: dow_mon0 equals the civil Monday=0 weekday of the event
     date (the (epoch_day+3)%7 trick vs Python's calendar), with exact
     counts and DECIMAL(18,6) value sums per (dow, hour) cell."""
-    ev = _tbl("events")
+    ev = sf_table("events")
     cells = defaultdict(lambda: [0, Decimal(0)])
     for _, r in ev.iterrows():
         ts = pd.Timestamp(r["ts"])
         c = cells[(ts.weekday(), ts.hour)]
         c[0] += 1
-        c[1] += _dec(r["value"], "0.000001")
+        c[1] += spark_decimal(r["value"], "0.000001")
     rows = REGISTRY["a31_dow_hour_heatmap"].spark(spark, SF_DIR).collect()
     got = {
         (r.dow_mon0, r.hour): (r.n_events, r.total_value, r.mean_value)
@@ -92,7 +84,7 @@ def test_a31_weekday_origin_is_monday0(spark):
 def test_g2_cube_level_consistency(spark):
     """g2 law: the CUBE emits all four grouping combinations, each
     internally consistent with the detail cells (NULL = rolled-up)."""
-    orders = _tbl("orders")
+    orders = sf_table("orders")
     detail = Counter(
         (r["o_orderstatus"], r["o_orderpriority"])
         for _, r in orders.iterrows()
@@ -113,7 +105,7 @@ def test_g2_cube_level_consistency(spark):
 def test_g3_grouping_sets_exact_sets(spark):
     """g3 law: exactly the (status), (priority), () sets — no detail
     cells — with the same totals g2's rollup levels carry."""
-    orders = _tbl("orders")
+    orders = sf_table("orders")
     by_s = Counter(r["o_orderstatus"] for _, r in orders.iterrows())
     by_p = Counter(r["o_orderpriority"] for _, r in orders.iterrows())
     expect = {(s, None): n for s, n in by_s.items()}
@@ -131,7 +123,7 @@ def test_pv2_unpivot_is_lossless_melt(spark):
     """pv2 law: each source row yields exactly one (measure, value) row
     per measure column, values carried verbatim (multiset — the fixture
     contains duplicate composite keys and they must all survive)."""
-    li = _tbl("lineitem")
+    li = sf_table("lineitem")
     li = li[li["l_orderkey"] < 100]
     expect = Counter()
     for _, r in li.iterrows():
@@ -149,10 +141,10 @@ def test_q3_reconciliation_is_exact_zero(spark):
     """q3 law: the fact-grain DECIMAL total equals the daily-aggregate
     re-sum EXACTLY (abs_diff == 0.0, not merely small), and both equal
     the brute-force decimal sum of joined line prices."""
-    li = _tbl("lineitem")[["l_orderkey", "l_extendedprice"]]
-    keys = set(int(k) for k in _tbl("orders")["o_orderkey"])
+    li = sf_table("lineitem")[["l_orderkey", "l_extendedprice"]]
+    keys = set(int(k) for k in sf_table("orders")["o_orderkey"])
     total = sum(
-        (_dec(r["l_extendedprice"], "0.01")
+        (spark_decimal(r["l_extendedprice"], "0.01")
          for _, r in li.iterrows() if int(r["l_orderkey"]) in keys),
         Decimal(0),
     )
@@ -167,13 +159,13 @@ def test_q3_reconciliation_is_exact_zero(spark):
 def test_r3_rollup_equals_direct_daily(spark):
     """r3 law: the hourly-partials daily rollup equals the direct
     per-day count + DECIMAL(18,2) value sum."""
-    ev = _tbl("events")
+    ev = sf_table("events")
     per = defaultdict(lambda: [0, Decimal(0)])
     for _, r in ev.iterrows():
         day = pd.Timestamp(r["ts"]).normalize()
         c = per[day]
         c[0] += 1
-        c[1] += _dec(r["value"], "0.01")
+        c[1] += spark_decimal(r["value"], "0.01")
     rows = REGISTRY["r3_hierarchical_rollup"].spark(spark, SF_DIR).collect()
     got = {pd.Timestamp(r.bucket_day): (r.n_events, r.total_value)
            for r in rows}
@@ -187,7 +179,7 @@ def test_u7_snapshot_diff_classification_law(spark):
     three negative insert keys; removed: the %97==3 keys; changed: the
     %10==0 survivors with changed_cols == 'c_acctbal' (only the balance
     moves); everything else absent."""
-    cust = _tbl("customer")
+    cust = sf_table("customer")
     keys = sorted(int(k) for k in cust["c_custkey"])
     insert_keys = [-k - 1 for k in keys[:3]]
     expect = {}
@@ -215,7 +207,7 @@ def test_p13_interleaved_quantile_buckets(spark):
     doc_id) total order — every bucket holds floor/ceil(n/8) docs (the
     interleaved remainder, NOT NTILE's front-loading) with the right
     token ranges and sums."""
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     recs = sorted(
         (len(r["text"].split(" ")), int(r["doc_id"]))
         for _, r in docs.iterrows()
@@ -243,7 +235,7 @@ def test_p15_same_cluster_same_split_and_hash_buckets(spark):
     never straddle train/test), with the 80/10/10 bucket map."""
     labels = _d6_labels()
     texts = {
-        int(r["doc_id"]): r["text"] for _, r in _tbl("documents").iterrows()
+        int(r["doc_id"]): r["text"] for _, r in sf_table("documents").iterrows()
     }
 
     def split_of(rep_text: str) -> str:
@@ -269,7 +261,7 @@ def test_p16_cap_keeps_lowest_hash_ranks(spark):
     keeps min(n, cap) docs — specifically the lowest (hash, doc_id)
     ranked ones, committed via kept_id_sum — and cap_applied fires only
     for over-cap languages."""
-    docs = _tbl("documents")
+    docs = sf_table("documents")
     per_lang = defaultdict(list)
     for _, r in docs.iterrows():
         h = int(hashlib.md5(r["text"].encode()).hexdigest()[:12], 16)
@@ -293,30 +285,6 @@ def test_p16_cap_keeps_lowest_hash_ranks(spark):
     assert any(not v[3] for v in got.values())
 
 
-# ------------------------------------------------------------ v6 / v9
-
-
-def _fold_dot(a, b):
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
-
-
-def _cos(a, b):
-    return _fold_dot(a, b) / (
-        math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
-    )
-
-
-def _vecs() -> dict[int, list[float]]:
-    emb = pd.read_parquet(f"{SF_DIR}/embeddings.parquet")
-    return {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for _, r in emb.iterrows()
-    }
-
-
 def _top5(vecs: dict[int, list]) -> dict[int, list[int]]:
     out = {}
     for q in sorted(vecs):
@@ -335,7 +303,7 @@ def test_v6_quantization_and_recall_law(spark):
     max(|x|, 1e-30)/127 (all in [-127, 127]); recall@5 is the overlap
     of the quantized top-5 with the exact top-5 under the same
     (cosine@6dp DESC, id) ranking."""
-    vecs = _vecs()
+    vecs = {k: v for k, (v, _) in _vecs().items()}
     qvecs = {}
     for k, v in vecs.items():
         scale = max(max(abs(x) for x in v), 1e-30) / 127.0
@@ -353,6 +321,8 @@ def test_v6_quantization_and_recall_law(spark):
         for q in exact
     }
     assert got == expect and len(got) == 10
+    # faithful int8 keeps some of the float space's neighbours
+    assert max(recall for _, recall in got.values()) > 0.0
 
 
 def test_v9_mmr_greedy_unroll_law(spark):
@@ -360,7 +330,7 @@ def test_v9_mmr_greedy_unroll_law(spark):
     id tie-breaks), the three picks maximize 7*rel, then
     7*rel - 3*sim(., p1), then 7*rel - 3*max(sim(., p1), sim(., p2)) —
     the literal greedy MMR with lambda = 0.7 in integer arithmetic."""
-    vecs = _vecs()
+    vecs = {k: v for k, (v, _) in _vecs().items()}
 
     def micro(x: float) -> int:
         return math.floor(x * 1e6 + 0.5)

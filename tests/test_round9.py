@@ -4,16 +4,19 @@ empty-input behavior) and the round's regression guards.
 
 import os
 from unittest import mock
+import math
 
 from etl_power_bi_dashboard_spark.session import aqe_enabled
 
+from .conftest import SF_DIR
+
 
 class TestAqeKnobNormalization:
-    """ADVICE r8: SPARK_GRAFT_AQE was passed verbatim to
-    spark.sql.adaptive.enabled, so '0'/'off' produced an invalid boolean
-    conf failing at session use, and the test skip guards only
-    recognized the literal 'false'. One strict-boolean helper now feeds
-    both the session conf and the skip guards."""
+    """SPARK_GRAFT_AQE goes through one strict-boolean helper that feeds
+    both the session conf and the test skip guards: passed verbatim,
+    '0'/'off' would make spark.sql.adaptive.enabled an invalid boolean
+    conf failing at session use, and a guard that recognizes only the
+    literal 'false' would disagree with the session."""
 
     def test_falsy_spellings_disable(self):
         for v in ("false", "FALSE", "False", "0", "off", "OFF", "no"):
@@ -39,11 +42,10 @@ class TestAqeKnobNormalization:
 class TestFkAuditEmptyInputs:
     """q9_fk_audit law (crafted-data, hand-computed): the per-edge
     helper must report exact parent/referenced/orphan counts on inputs
-    where the truth is enumerable, including the empty-input corner
-    ADVICE r8 flagged — after the round-8 full-outer rework, F.sum over
-    an empty join output yielded NULL n_parent/n_referenced/n_orphans
-    where the old count(*) shape returned 0s. The helper now coalesces
-    to 0; this pins the contract on every empty/non-empty combination."""
+    where the truth is enumerable, including the empty-input corner:
+    F.sum over an empty full-outer join output is NULL, so the helper
+    coalesces n_parent/n_referenced/n_orphans to 0; this pins the
+    contract on every empty/non-empty combination."""
 
     def _frames(self, spark):
         child = spark.createDataFrame([(1, 10), (2, 10), (3, 99)], "id int, fk int")
@@ -102,16 +104,13 @@ def test_a12_stats_exact_matches_statistics_module(spark):
     must equal the textbook sample moments computed by Python's
     statistics module over the same values (brute force, independent of
     both engines' aggregation machinery)."""
-    import math
     import statistics
 
     from etl_power_bi_dashboard_spark.plans.tpch_more import q_a12_stats_exact
 
-    from .conftest import SF_DIR as sf_dir
-
-    got = {r.l_returnflag: r for r in q_a12_stats_exact(spark, sf_dir).collect()}
+    got = {r.l_returnflag: r for r in q_a12_stats_exact(spark, SF_DIR).collect()}
     raw = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
         .select("l_returnflag", "l_quantity")
         .collect()
     )

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -107,7 +108,6 @@ def test_ivf_probe_is_partition_pruned(spark, tmp_path):
 def test_partitioned_fact_sink(spark, olist_raw, tmp_path):
     """export_star(partition_fact=True) writes fact_sales hive-partitioned
     by date_id (the 100 TB layout: date-pruned scans for period slices)."""
-    import os
 
     from etl_power_bi_dashboard_spark import sinks
     from etl_power_bi_dashboard_spark.pipeline import run_pipeline
@@ -140,7 +140,6 @@ def test_aqe_skew_join_engages_and_preserves_results(spark):
     (SortMergeJoin(skew=true) over a skewed AQEShuffleRead), and the
     aggregate over the skew-split join must equal the broadcast-join
     reference answer."""
-    from pyspark.sql import functions as F
 
     knobs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -259,7 +258,6 @@ def test_bloom_prune_rejects_mismatched_parameters(spark):
     """The sketch row carries its build parameters; probing with
     different ones must raise instead of silently dropping present keys
     (a false negative breaks the soundness contract)."""
-    import pytest
 
     keys = spark.createDataFrame([(i,) for i in range(50)], "k long")
     big = spark.createDataFrame([(i, i) for i in range(100)], "k long, x long")

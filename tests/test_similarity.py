@@ -3,10 +3,14 @@ native expression path, and IVF recall is sane vs brute force."""
 
 from __future__ import annotations
 
+import math
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.operators import similarity
+from etl_power_bi_dashboard_spark.plans import REGISTRY
 
 from .conftest import SF_DIR
 
@@ -81,7 +85,6 @@ def test_lsh_multi_table_monotone_recall(spark):
 
 def test_lsh_rejects_nonpositive_tables(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    import pytest
 
     with pytest.raises(ValueError, match="n_tables"):
         similarity.lsh_neardup_pairs(emb, n_tables=0)
@@ -149,11 +152,8 @@ def test_v5_gram_identity_matches_bruteforce_pairwise(spark, tmp_path):
     brute-force mean pairwise cosine (up to the 6-dp component
     quantization it documents)."""
     import itertools
-    import math
 
     import numpy as np
-
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     rng = np.random.RandomState(7)
     rows = []
@@ -215,7 +215,6 @@ def test_ivf_probe_candidates_subset_law(spark):
         ).collect()
     }
     # recompute top-3 from the pr<=2 slice of the shared candidates
-    from collections import defaultdict
 
     per_q = defaultdict(list)
     for (q, v), (cos, _pr) in at2.items():

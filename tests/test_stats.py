@@ -107,7 +107,6 @@ def test_hll_merge_union_matches_direct_and_exact(spark):
     the exact distinct count; (b) the __all__ row (union of per-source
     sketches) equals the estimate of ONE sketch built over the whole
     corpus — sketch merge must be lossless vs direct construction."""
-    from etl_power_bi_dashboard_spark.plans import REGISTRY
 
     out = {
         r.source: r.est_distinct_terms

@@ -1,11 +1,17 @@
 """Replay the driver's correctness gate locally.
 
-The per-round driver runs each ``queries()[name]`` at sf=0.01 and
-compares row-count + schema + order-insensitive values against
-``oracle_sql()[name]`` via DuckDB. Local tests run the same comparison
-at sf0.001 (tests/test_oracle_parity.py); this tool runs it at the
-driver's scale so sf-dependent divergence (empty-at-small-sf results,
-overflow, skew-triggered plan changes) surfaces before the driver does.
+The driver imports ``__spark_entry__`` into its OWN plain SparkSession
+(Spark 4 defaults, so ANSI mode is on), runs ``entry(spark)`` as a smoke
+check, then runs each ``queries()[name]`` at sf=0.01 and compares
+row-count + schema + order-insensitive values against
+``oracle_sql()[name]`` via DuckDB. This tool does exactly that, with the
+comparison of ``tests/parity.compare`` (stricter than the driver: values
+must match bit-for-bit after canonicalization). Queries without an
+oracle get the driver's rows-only check. Local tests run the same
+comparison at sf0.001 on a tuned session (tests/test_oracle_parity.py);
+this run surfaces sf-dependent and session-default divergence
+(empty-at-small-sf results, overflow, ANSI errors) before the driver
+does.
 
 Usage:
     python tools/driver_sim.py [--sf-dir /root/testdata/sf0.01] [--window 50]
@@ -24,10 +30,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
-from etl_power_bi_dashboard_spark.plans import REGISTRY  # noqa: E402
-from etl_power_bi_dashboard_spark.session import get_spark  # noqa: E402
-from tests.parity import canonicalize  # noqa: E402
+import __spark_entry__ as E  # noqa: E402
+from tests.parity import compare  # noqa: E402
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -44,10 +50,11 @@ def main() -> int:
                     help="comma-separated subset instead of the window")
     args = ap.parse_args()
 
+    qs, osql = E.queries(), E.oracle_sql()
     if args.names:
         names = [n.strip() for n in args.names.split(",") if n.strip()]
     else:
-        names = list(REGISTRY)[: args.window]
+        names = list(qs)[: args.window]
 
     con = duckdb.connect()
     for t in TABLES:
@@ -55,41 +62,28 @@ def main() -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    spark = get_spark(shuffle_partitions=32)
-    results: dict[str, dict] = {}
+    spark = SparkSession.builder.master(f"local[{os.cpu_count()}]").getOrCreate()
+    print("entry rows:", len(E.entry(spark).collect()), flush=True)
     n_fail = 0
     for name in names:
         t0 = time.time()
-        row: dict = {}
         try:
             # inside the try: a typo'd --names entry records an ERROR
             # row and the run continues — mirrors the driver
-            q = REGISTRY[name]
-            pdf_s = q.spark(spark, args.sf_dir).toPandas()
-            if q.oracle is None:
-                row = {"status": "rows_only", "spark_rows": len(pdf_s)}
+            df = qs[name](spark, args.sf_dir)
+            if name in osql:
+                compare(df, con, osql[name], name)
+                status = "ok"
             else:
-                pdf_o = con.execute(q.oracle).fetchdf()
-                cols_ok = sorted(pdf_s.columns) == sorted(pdf_o.columns)
-                rows_ok = len(pdf_s) == len(pdf_o)
-                vals_ok = cols_ok and canonicalize(pdf_s) == canonicalize(pdf_o)
-                ok = cols_ok and rows_ok and vals_ok
-                row = {
-                    "status": "ok" if ok else "MISMATCH",
-                    "schema_match": cols_ok,
-                    "rows_match": rows_ok,
-                    "hash_match": vals_ok,
-                    "spark_rows": len(pdf_s),
-                    "oracle_rows": len(pdf_o),
-                }
-                if not ok:
-                    n_fail += 1
+                status = "rows_only"
+                assert df.count() >= 0
+            detail = ""
         except Exception as exc:  # record, keep going — mirrors the driver
-            row = {"status": "ERROR", "err": f"{type(exc).__name__}: {exc}"[:300]}
+            status = "FAIL"
+            detail = f"  {type(exc).__name__}: {exc}"[:300]
             n_fail += 1
-        row["sec"] = round(time.time() - t0, 2)
-        results[name] = row
-        print(f"{row['status']:>8}  {name}  ({row['sec']}s)", flush=True)
+        print(f"{status:>9}  {name}  ({time.time() - t0:.2f}s){detail}",
+              flush=True)
 
     spark.stop()
     con.close()
