@@ -53,6 +53,12 @@ def spark_decimal(x, places: str) -> Decimal:
     return Decimal(repr(float(x))).quantize(Decimal(places), ROUND_HALF_UP)
 
 
+def spark_round(x: float, scale: int) -> float:
+    """Replicate Spark's round(double, scale): BigDecimal.valueOf takes the
+    shortest decimal repr (Python's repr), rounded HALF_UP at scale."""
+    return float(spark_decimal(x, f"1e-{scale}"))
+
+
 TABLES = (
     "region",
     "nation",

@@ -4,8 +4,6 @@ assigned exactly once, and seeding is deterministic."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from etl_power_bi_dashboard_spark.operators.clustering import (
     init_centroids,
     kmeans,

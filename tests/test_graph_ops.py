@@ -5,7 +5,6 @@ handling, and partitioning invariance."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _rank_map(df):

@@ -26,20 +26,12 @@ not just against structural invariants.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 from etl_power_bi_dashboard_spark.plans.base import load
 
-from .conftest import SF_DIR
-
-
-def _round6(x: float) -> float:
-    # Spark's round() is HALF_UP on the decimal representation; for the
-    # magnitudes here floor(x*1e6 + 0.5)/1e6 is the same function
-    return math.floor(x * 1e6 + 0.5) / 1e6
+from .conftest import SF_DIR, spark_round
 
 
 def test_ml1_kmeans_matches_pure_python_lloyds(spark):
@@ -65,7 +57,7 @@ def test_ml1_kmeans_matches_pure_python_lloyds(spark):
                 acc = 0.0  # sequential left fold == F.aggregate
                 for a, b in zip(v, c):
                     acc = acc + (a - b) * (a - b)
-                d2 = _round6(acc)
+                d2 = spark_round(acc, 6)
                 if best is None or (d2, cid) < best:
                     best = (d2, cid)
             exp_assign[vid] = best[1]

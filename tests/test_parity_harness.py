@@ -10,10 +10,7 @@ driver failed them. These tests replay the judge's demo frames and fail
 if the harness ever regresses to row-coercing iteration.
 """
 
-import math
-
 import pandas as pd
-import pytest
 
 from tests.parity import canonicalize
 

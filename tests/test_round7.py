@@ -6,21 +6,12 @@ all three — they are fully oracle-backed)."""
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
-
 from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
 from etl_power_bi_dashboard_spark.plans.base import load, load_events
 
-from .conftest import SF_DIR
-
-
-def _round6(x: float) -> float:
-    # Spark round() routes through BigDecimal.valueOf(double) (shortest
-    # decimal repr — same as Python repr) with HALF_UP
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
-                                           ROUND_HALF_UP))
+from .conftest import SF_DIR, spark_round
 
 
 def test_v10_filtered_ann_matches_brute_force(spark):
@@ -43,7 +34,7 @@ def test_v10_filtered_ann_matches_brute_force(spark):
                 n1 += a * a
             for b in cv:
                 n2 += b * b
-            cos = _round6(dot / ((n1 ** 0.5) * (n2 ** 0.5)))
+            cos = spark_round(dot / ((n1 ** 0.5) * (n2 ** 0.5)), 6)
             scored.append((-cos, vid, lab, cos))
         scored.sort()
         for rank, (_, vid, lab, cos) in enumerate(scored[:3], start=1):

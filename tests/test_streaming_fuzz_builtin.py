@@ -24,7 +24,6 @@ import datetime as dt
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.streaming import events as se
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.plans.base import load_events
 from etl_power_bi_dashboard_spark.streaming import events as se

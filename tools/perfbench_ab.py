@@ -19,7 +19,8 @@ METRICS = ("pass_s", "cpu_s", "query_p50_s", "query_p90_s", "setup_s")
 
 
 def run(checkout: str, workload: str, seed: int, seconds: float) -> dict:
-    """One perfbench run in ``checkout``: its result line plus its steal."""
+    """One perfbench run in ``checkout``: its result line plus its steal
+    and peak RSS from the diagnostics line."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -32,6 +33,7 @@ def run(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     diag = next((json.loads(ln.split(" ", 1)[1]) for ln in lines
                  if ln.startswith("perfbench-diag ")), {})
     result["steal_s"] = diag.get("steal_s", float("nan"))
+    result["peak_rss_mb"] = diag.get("peak_rss_mb", float("nan"))
     return result
 
 
@@ -83,6 +85,11 @@ def main(argv: list[str]) -> int:
               f"  B/A {mb / ma if ma else float('nan'):.3f}"
               f"  B lower in {wins}/{len(pairs)}"
               f"  |B-A| {'>' if abs(mb - ma) > qa3 - qa1 else '<='} A's IQR")
+    # not gated: memory is what a speed lever most often trades
+    (qa1, ma, qa3), (qb1, mb, qb3) = (
+        quartiles([p[s]["peak_rss_mb"] for p in pairs]) for s in "AB")
+    print(f"  {'peak_rss_mb':12s} A {ma:.1f} [{qa1:.1f}, {qa3:.1f}]"
+          f"  B {mb:.1f} [{qb1:.1f}, {qb3:.1f}]")
     return 0 if ok else 1
 
 
