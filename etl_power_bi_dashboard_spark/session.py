@@ -26,12 +26,12 @@ SparkSession tuned for correctness parity and for scale:
   Local shuffles here are small, so every partition past one per core is
   a task that pays scheduling and a file that pays a write: on 4 cores
   the 32-partition default made a warm ``run_pipeline`` pass 464 tasks
-  and 105 files, against 121 and 43 at 4. At cluster scale AQE
+  and 105 files, against 124 and 43 at 4. At cluster scale AQE
   coalesces or splits as needed,
 - a generated-code cache of 1024 classes instead of Spark's 100: one cold
   pass of the benchmark workloads compiles 124-257 classes, so at 100 the
   cache evicts what the next pass needs and every warm pass compiles its
-  code again (107-223 compiles a pass, against 6-12 at 1024). The cost
+  code again (125-198 compiles a traced warm pass, 8 at 1024). The cost
   is a few MB of metaspace and code heap.
 """
 
@@ -85,7 +85,8 @@ def get_spark(
     )
     # `is None`, not truthiness: an explicit shuffle_partitions=0 must
     # surface as the (invalid) value the caller passed, not silently
-    # become a default
+    # become a default. A local master's default parallelism is its core
+    # count, as the JVM resolved it for local[*].
     if shuffle_partitions is None:
         env = os.environ.get("SPARK_SHUFFLE_PARTITIONS")
         shuffle_partitions = (

@@ -23,18 +23,16 @@ WARM_SET = (
 )
 
 
-def _compiles(spark) -> int:
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()
-
-
 def test_codegen_cache_holds_a_warm_working_set(spark):
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+
     def run_set() -> int:
-        before = _compiles(spark)
+        before = compiles.getCount()
         for name in WARM_SET:
             REGISTRY[name].spark(spark, SF_DIR).write.format("noop").mode(
                 "overwrite").save()
-        return _compiles(spark) - before
+        return compiles.getCount() - before
 
     run_set()
     # at 100 entries the second run recompiles ~120 of the set's classes
