@@ -28,6 +28,8 @@ drop in by replacing the corpus scan with `p9`-style stratified samples.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -49,20 +51,26 @@ def init_centroids(
     )
 
 
+def _double_sql(x: float) -> str:
+    """A double as a Spark SQL literal: ``repr`` round-trips exactly
+    through Spark's ``<digits>D`` literal; non-finite values go through
+    a string cast."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
 def _centroid_literal(cent_rows: list[Row]) -> Column:
     """K centroids as a literal ``array<struct<cid, zv>>`` expression —
     the between-iteration centroid state is K·dim doubles on the driver,
     so embedding it in the plan costs nothing and buys a shuffle-free
-    assignment pass."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(int(r["centroid_id"])).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in r["embedding"]]).alias("zv"),
-            )
-            for r in sorted(cent_rows, key=lambda r: r["centroid_id"])
-        ]
+    assignment pass. Built as one SQL expression: one ``F.lit`` per
+    double would cost a py4j call each."""
+    structs = ", ".join(
+        f"named_struct('cid', {int(r['centroid_id'])}, 'zv', "
+        f"array({', '.join(_double_sql(x) for x in r['embedding'])}))"
+        for r in sorted(cent_rows, key=lambda r: r["centroid_id"])
     )
+    return F.expr(f"array({structs})")
 
 
 def assign_clusters_literal(

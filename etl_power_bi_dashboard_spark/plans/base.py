@@ -26,11 +26,13 @@ dim_customer/dim_product/dim_seller, ``o_orderdate`` ↔ purchase timestamp,
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -42,8 +44,69 @@ class Query:
     tags: tuple[str, ...] = field(default_factory=tuple)
 
 
+# (path, Parquet confs) -> (file stats at inference, inferred schema).
+# Process-wide: the key holds everything inference reads, so an entry
+# holds for any session. Two threads that miss at once both infer and
+# store equal entries.
+_SCHEMAS: dict[tuple[str, tuple[str, ...]], tuple[tuple, StructType]] = {}
+
+
+def _file_stats(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(relative name, size, mtime_ns) of every file under a local
+    ``path``, sorted; empty when the path is a URI or does not exist."""
+    if "://" in path or not os.path.exists(path):
+        return ()
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    stats = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            stats.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stats))
+
+
+def _parquet_confs(spark: SparkSession) -> tuple[str, ...]:
+    """Every set session conf whose key names Parquet, as sorted
+    ``key -> value`` entries (``nanosAsLong``, ``inferTimestampNTZ``,
+    ``binaryAsString``, ``int96AsTimestamp``, ``mergeSchema``, ...): the
+    confs that decide what schema inference returns. One JVM string, so
+    the lookup costs two py4j calls however many confs are set."""
+    entries = spark.conf._jconf.getAll().mkString("\0").split("\0")
+    return tuple(sorted(e for e in entries if "parquet" in e.split(" -> ", 1)[0]))
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """``{sf_dir}/{name}.parquet``, inferring its schema once per table.
+
+    Schema inference runs a Spark job over the Parquet footers on every
+    read (about 130 ms warm on 4 cores, against about 23 ms for a load
+    given its schema), and a registry query reads several tables. So the
+    first load of a table infers; later loads pass the inferred
+    ``StructType`` back.
+    The cache is sound because its key holds everything inference
+    depends on: the path, the (relative name, size, mtime_ns) of every
+    file under it, and every set conf whose key names Parquet. A rewrite
+    or a flipped ``nanosAsLong`` re-infers. A path that cannot be
+    stat-ed locally (a URI) always infers.
+
+    Only the schema is cached, never the DataFrame: each load is a fresh
+    read with fresh attribute ids, which self-joins need, and a fresh
+    file listing.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    files = _file_stats(path)
+    if not files:
+        return spark.read.parquet(path)
+    key = (path, _parquet_confs(spark))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == files:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (files, df.schema)
+    return df
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,11 +126,12 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     grading driver (and any external embedder) builds its OWN session
     that never goes through ``get_spark`` — this loader is the only
     code of ours guaranteed to run before event timestamps materialize.
+    The read goes through ``load`` after both pins, so its cached schema
+    is keyed on ``nanosAsLong=true``.
     """
-    path = f"{sf_dir}/events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(path)
+    df = load(spark, sf_dir, "events")
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

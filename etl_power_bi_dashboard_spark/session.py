@@ -32,7 +32,14 @@ SparkSession tuned for correctness parity and for scale:
   pass of the benchmark workloads compiles 124-257 classes, so at 100 the
   cache evicts what the next pass needs and every warm pass compiles its
   code again (125-198 compiles a traced warm pass, 8 at 1024). The cost
-  is a few MB of metaspace and code heap.
+  is a few MB of metaspace and code heap,
+- no Python call-site capture (``spark.python.sql.dataFrameDebugging
+  .enabled=false``): with it on, every ``Column`` operator and ``F``
+  function call makes about 7 extra py4j round trips to record where in
+  Python it was called, and a registry query builds its plan from
+  thousands of such calls. What this loses: an AnalysisException no
+  longer names the Python line that built the failing expression.
+  Results do not change.
 """
 
 from __future__ import annotations
@@ -76,6 +83,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

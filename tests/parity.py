@@ -38,8 +38,8 @@ def _canon_cell(v):
 
 def canonicalize(df: pd.DataFrame) -> list[tuple]:
     # Column-wise conversion: iterrows() coerces mixed int/float rows to
-    # float64, which masked the sc4 (r5) and ml6 (r8) driver hash
-    # mismatches — the driver's typed value-hash distinguishes int64
+    # float64, which hides int/float mismatches from the check — the
+    # driver's typed value-hash distinguishes int64
     # `1985` from float64 `1985.0`. Series.tolist() preserves each
     # column's dtype (int64 -> int, float64 -> float), so this harness
     # is at least as strict as the driver gate.

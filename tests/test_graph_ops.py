@@ -81,7 +81,7 @@ def test_pagerank_partitioning_invariant(spark):
 
 
 def test_pagerank_broadcast_and_shuffle_paths_agree(spark):
-    """The round-12 rank-side broadcast (elides the per-iteration edge
+    """The rank-side broadcast (elides the per-iteration edge
     shuffle when the node count fits) is a physical knob only: forcing
     the broadcast plan and forcing the keyed-shuffle plan must yield
     the same fixpoint to float tolerance, and the small-graph default
@@ -163,8 +163,8 @@ def test_triangle_two_sharing_an_edge(spark):
 
 
 def test_star_and_minlabel_components_agree(spark):
-    """r12: the star rewrite (new default) and min-label propagation
-    (kept baseline) are independent formulations of the same unique
+    """The star rewrite (the default) and min-label propagation
+    (the baseline) are independent formulations of the same unique
     min-of-component fixpoint — they must agree on a graph with a
     chain (diameter > log rounds), a cycle, a dense clique, isolates,
     and a self-loop."""

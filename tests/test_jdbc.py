@@ -183,7 +183,7 @@ def test_jdbc_exactly_once_sink_end_to_end_and_replay(spark, derby_url, tmp_path
 
 
 def test_exactly_once_sink_rejects_non_identifier_table(spark, tmp_path):
-    """Round-7 hardening (ADVICE r6): the sink interpolates the table
+    """The sink interpolates the table
     name unquoted into DDL/DML, so anything that is not a plain
     identifier must be rejected up front — not fail per-batch or worse."""
     import pytest

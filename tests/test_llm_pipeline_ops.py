@@ -1,4 +1,4 @@
-"""Behavioral tests for the round-3 LLM-pipeline additions beyond oracle
+"""Behavioral tests for the LLM-pipeline operators beyond oracle
 parity: chunk-level dedup detects partial span copies that whole-document
 signatures dilute away (d8), the cohort-retention matrix obeys its
 structural invariants (e6), and the quality-cascade bitmask decodes to

@@ -1,5 +1,5 @@
-"""Round-12 verdict item 7: make the multimodal capability-gate status
-visible in every suite run. The decode/resize/frame-sample stubs
+"""The multimodal capability-gate status is visible in every suite
+run. The decode/resize/frame-sample stubs
 (operators/multimodal.py) raise NotImplementedError for the real codec
 because no imaging/av library ships in this container; if the
 environment ever gains one, this test's skip reason / pass output says

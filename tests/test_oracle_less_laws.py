@@ -1,5 +1,5 @@
-"""Round-7 strengthening of the permanently oracle-less entries
-(VERDICT r6 item 6): each law test here RECOMPUTES the expected answer
+"""Laws for the iterative / sequential entries that no SQL oracle
+checks in full: each law test here RECOMPUTES the expected answer
 brute-force in pure Python from the same inputs, so the iterative /
 sequential operators are proven against an independent reimplementation,
 not just against structural invariants.
@@ -17,11 +17,10 @@ not just against structural invariants.
   (rank DESC, node ASC) order.
 - p12: first-fit greedy packing — the per-bucket sequential bin state
   replicated in Python from the same (h, doc_id)-ordered inputs; bin
-  assignments must match EXACTLY. (Since round 11 p12 is no longer
-  oracle-less — SQL_P12 replays the same recurrence as a DuckDB
-  recursive CTE — but this law stays: it checks the full per-document
-  bin ASSIGNMENT, which the driver's aggregated efficiency report
-  can't see.)
+  assignments must match EXACTLY. SQL_P12 replays the same recurrence
+  as a DuckDB recursive CTE, but the driver compares only the
+  aggregated efficiency report; this law checks the full per-document
+  bin ASSIGNMENT.
 """
 
 from __future__ import annotations

@@ -129,7 +129,7 @@ def test_packers_drop_null_text_rows(spark):
     assert all(r.bucket is not None for r in c)
 
 
-# --- round 11: differential fuzz for the p12 replay oracle -----------
+# --- differential fuzz for the p12 replay oracle -------------------------
 # The driver compares q_p12 against SQL_P12 on the fixture corpus,
 # whose longest document is ~100 tokens — the OVERSIZE branch (a doc
 # longer than ctx_len gets a bin of its own, fill > ctx_len) never

@@ -1,12 +1,11 @@
 """Pins the parity harness itself — the in-repo oracle gate must be at
 least as strict as the driver's typed value-hash.
 
-History: the driver compares Spark vs DuckDB results with a TYPED hash,
-so an int64 `1985` and a float64 `1985.0` mismatch. The old
-`canonicalize` used `DataFrame.iterrows()`, which coerces every mixed
-int/float row to float64 — so `tools/driver_sim.py` and the end-of-round
-registry sweeps passed sc4 (round 5) and ml6 (round 8) while the real
-driver failed them. These tests replay the judge's demo frames and fail
+The driver compares Spark vs DuckDB results with a TYPED hash, so an
+int64 `1985` and a float64 `1985.0` mismatch. A `canonicalize` built
+on `DataFrame.iterrows()` coerces every mixed int/float row to float64,
+so `tools/driver_sim.py` and the registry sweeps would pass queries the
+real driver fails. These tests replay the driver's demo frames and fail
 if the harness ever regresses to row-coercing iteration.
 """
 

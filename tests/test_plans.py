@@ -6,11 +6,17 @@ exception)."""
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+from pathlib import Path
+
 import pytest
+from pyspark.sql import functions as F
 
 from etl_power_bi_dashboard_spark.plans import REGISTRY
+from etl_power_bi_dashboard_spark.plans.base import load
 
-from .conftest import SF_DIR
+from .conftest import REPO, SF_DIR
 
 
 def plan_of(spark, name: str) -> str:
@@ -194,8 +200,6 @@ def test_sc5_big_window_is_partitioned(spark):
 
 def test_sc5_seq_is_dense_permutation(spark):
     """seq must be exactly 1..N with no gaps or duplicates."""
-    from pyspark.sql import functions as F
-
     df = REGISTRY["sc5_distributed_row_number"].spark(spark, SF_DIR)
     agg = df.agg(
         F.count("*").alias("n"),
@@ -216,7 +220,7 @@ def test_x21_count_tables_broadcast(spark):
 
 
 def test_d8_single_chunk_pass(spark):
-    """Round-12 rewrite: chunk duplication frequency (nd) comes from a
+    """Chunk duplication frequency (nd) comes from a
     count(*) window over chunk_h on the (chunk_h, doc_id) pair table —
     the md5 chunk expansion is built ONCE and never joined back to
     itself (the old freq-join shape executed it once per join side)."""
@@ -355,3 +359,94 @@ def test_no_unlisted_single_partition_windows(spark):
                         bad.append(name)
                     break
     assert not bad, f"unjustified single-partition windows: {sorted(set(bad))}"
+
+
+# --- plans.base.load: one schema inference per table file --------------------
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """``fn()`` run under its own job group: (its result, the number of
+    Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, None)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_cached_schema_reads_like_inference(spark):
+    """Every driver table reads the same through the cached schema as
+    through a fresh inference: same schema JSON, same row multiset."""
+    names = sorted(f[: -len(".parquet")] for f in os.listdir(SF_DIR)
+                   if f.endswith(".parquet"))
+    assert names
+    for name in names:
+        load(spark, SF_DIR, name)
+        cached = load(spark, SF_DIR, name)
+        fresh = spark.read.parquet(f"{SF_DIR}/{name}.parquet")
+        assert cached.schema.json() == fresh.schema.json(), name
+        # one action per table: both reads, tagged, in one union
+        rows = cached.withColumn("_fresh", F.lit(0)).union(
+            fresh.withColumn("_fresh", F.lit(1))).collect()
+        sides = [Counter(repr(r[:-1]) for r in rows if r[-1] == f) for f in (0, 1)]
+        assert sides[0] == sides[1], name
+
+
+def test_second_load_runs_no_job(spark, tmp_path):
+    spark.range(5).write.parquet(f"{tmp_path}/t.parquet")
+    _, first = _jobs_in_group(spark, "load-infers", lambda: load(spark, str(tmp_path), "t"))
+    df, second = _jobs_in_group(spark, "load-reuses", lambda: load(spark, str(tmp_path), "t"))
+    assert first >= 1
+    assert second == 0
+    assert df.count() == 5
+
+
+def test_load_sees_a_rewritten_file(spark, tmp_path):
+    """The cache key holds every file's name, size and mtime, so a file
+    rewritten in place with another schema is inferred again."""
+    d = str(tmp_path)
+    spark.range(3).write.parquet(f"{d}/t.parquet")
+    assert load(spark, d, "t").dtypes == [("id", "bigint")]
+    spark.range(3).selectExpr("CAST(id AS STRING) AS s").write.mode(
+        "overwrite").parquet(f"{d}/t.parquet")
+    df = load(spark, d, "t")
+    assert df.dtypes == [("s", "string")]
+    assert sorted(r.s for r in df.collect()) == ["0", "1", "2"]
+
+
+def test_load_reinfers_when_nanos_conf_flips(spark, tmp_path):
+    """The cache key holds the session's Parquet confs: a TIMESTAMP(NANOS)
+    column reads as bigint under ``nanosAsLong`` and is refused without
+    it, whatever an earlier load of the same file inferred."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(f"{tmp_path}/t.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_500, 2_000_000_000], pa.timestamp("ns"))}),
+        f"{tmp_path}/t.parquet/part-0.parquet", version="2.6",
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert load(spark, str(tmp_path), "t").dtypes == [("ts", "bigint")]
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            load(spark, str(tmp_path), "t")
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_registry_plans_read_parquet_only_through_load():
+    """Every plan reads its tables through ``base.load`` (or
+    ``load_events``), so every plan gets the schema reuse."""
+    plans = Path(REPO, "etl_power_bi_dashboard_spark", "plans")
+    readers = sorted(
+        str(f.relative_to(plans)) for f in plans.rglob("*.py")
+        if "spark.read.parquet(" in f.read_text()
+    )
+    assert readers == ["base.py"]

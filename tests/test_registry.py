@@ -27,8 +27,8 @@ def test_all_queries_have_docs():
 
 def test_bench_last_line_fits_tail():
     """The driver parses the LAST stdout line of bench.py from a ~2 KB
-    tail capture; round 5 lost its bench record when the detail line
-    outgrew it. The final record must stay compact and parseable no
+    tail capture, and a last line that outgrows it loses the whole
+    bench record. The final record must stay compact and parseable no
     matter how many queries the registry grows to."""
     import json
     import sys
@@ -53,8 +53,7 @@ def test_oracle_outputs_only_native_types(oracle):
     """No oracle may emit HUGEINT / DECIMAL / unsigned output columns:
     DuckDB's fetchdf materializes those as float64 (or objects), which
     the driver's TYPED value-hash distinguishes from Spark's int64 /
-    double even when values agree — the sc4 (r5) and ml6 (r8) driver
-    reds were exactly this class. Type-check is plan-time only (no
+    double even when values agree. Type-check is plan-time only (no
     query executes), so this pins the whole registry cheaply. Uses the
     shared conftest oracle fixture so the registered views can never
     drift from the parity suite's."""

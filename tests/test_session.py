@@ -1,7 +1,7 @@
 """``get_spark`` sizing rules: the shuffle partition count follows the
 caller, then ``$SPARK_SHUFFLE_PARTITIONS``, then the local master's core
-count; and the generated-code cache holds a warm working set larger than
-Spark's 100-class default."""
+count; the generated-code cache holds a warm working set larger than
+Spark's 100-class default; and PySpark's per-call origin capture is off."""
 
 from __future__ import annotations
 
@@ -58,3 +58,11 @@ def test_shuffle_partitions_precedence(spark, monkeypatch):
         assert spark.conf.get(key) == str(cores)
     finally:
         spark.conf.set(key, before)
+
+
+def test_call_site_capture_is_off(spark):
+    # the conf itself: pyspark's is_debugging_enabled() caches its first
+    # answer for the whole process, whichever session was active then
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert get_spark(shuffle_partitions=partitions) is spark
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -224,8 +224,8 @@ def test_upsert_sink_recovers_from_crashed_republish(
     """Simulate a crash mid-republish: the stage directory holds the
     complete previous merge (with _SUCCESS) while the target is gone.
     The next run must restore the target from the stage FIRST, so keys
-    absent from the replayed batch survive — the round-4 recovery bug
-    rebuilt the table from the new batch alone."""
+    absent from the replayed batch survive; rebuilding the table from
+    the new batch alone would drop them."""
     import os
     import shutil
 
@@ -401,16 +401,16 @@ def test_streaming_dau_matches_batch(spark, event_dir):
 
 @pytest.mark.slow
 def test_streaming_dau_pinned_cross_batch_duplicates(spark, tmp_path):
-    """Pinned (non-hypothesis) regression for the round-10 fuzz find:
-    a user-day whose FIRST event arrives in one micro-batch and whose
-    duplicates arrive in a LATER micro-batch must count once.
+    """A user-day whose FIRST event arrives in one micro-batch and whose
+    duplicates arrive in a LATER micro-batch counts once (a fixed
+    tranching of the DAU fuzz law).
 
-    The falsifying tranching (hypothesis, round 10): user 2's first
-    day-2 event (day2 00:00) lands in micro-batch 2; duplicates (day2
-    02:00, day2 11:00) land in batch 3, 2-11 h later — well inside the
-    1-day watermark — yet dropDuplicatesWithinWatermark re-emitted the
-    user-day and DAU read 3 where the batch truth is 2. Fixed by plain
-    dropDuplicates on the watermarked (user_id, window) key."""
+    The tranching: user 2's first day-2 event (day2 00:00) lands in
+    micro-batch 2; duplicates (day2 02:00, day2 11:00) land in batch 3,
+    2-11 h later — well inside the 1-day watermark. Under
+    dropDuplicatesWithinWatermark the user-day is emitted again and DAU
+    reads 3 where the batch truth is 2; plain dropDuplicates on the
+    watermarked (user_id, window) key keeps it at 2."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -450,7 +450,7 @@ def test_streaming_dau_pinned_cross_batch_duplicates(spark, tmp_path):
 
 @pytest.mark.slow
 def test_enrich_refreshing_sink_picks_up_dim_overwrites(spark, tmp_path):
-    """Round-11 pin for the dim-refresh semantics: the plain
+    """Dim-refresh semantics: the plain
     stream-static join CANNOT pick up a parquet dim overwritten
     mid-query (its file listing is snapshotted at DataFrame creation —
     probed empirically; the docstring now says so), so
@@ -577,9 +577,8 @@ def test_streaming_dau_state_survives_checkpoint_restart(spark, tmp_path):
 def test_streaming_dau_equals_e11_dau_differential(spark, event_dir):
     """Differential pin: the streaming DAU surface and its batch twin
     (the dau column of e11_rolling_active_users) must agree on the SAME
-    corpus, so the two surfaces can't drift apart silently again
-    (round-10 fuzz found the streaming side double-counting while the
-    batch side stayed green). Complete mode emits every window's final
+    corpus, so the streaming side cannot double-count while the batch
+    side stays green. Complete mode emits every window's final
     count; e11 reports a row per day in the observed span, with dau=0
     on gap days the stream (correctly) never emits."""
     from etl_power_bi_dashboard_spark.plans.events_plans import (
@@ -1289,7 +1288,7 @@ def _seam_total(spark, state_path):
 def test_enrich_versioned_sink_pins_dim_version_across_replay(
     spark, tmp_path
 ):
-    """Round-12 verdict item 5: the versioned sink's crash-replayed
+    """The versioned sink's crash-replayed
     batch re-joins against the version PINNED at its first attempt —
     not the version published during the outage — so replays are
     bit-identical; fresh batches still pick up new versions."""

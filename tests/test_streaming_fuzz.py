@@ -34,7 +34,7 @@ _records = st.lists(
 
 import pytest
 
-pytestmark = pytest.mark.slow  # long-form tranching fuzz (VERDICT r12 #1): opt-in via -m slow
+pytestmark = pytest.mark.slow  # long-form tranching fuzz: opt-in via -m slow
 
 @pytest.mark.parametrize("bucketed", [False, True], ids=["plain", "bucketed"])
 @given(

@@ -1,11 +1,10 @@
 """Hypothesis fuzz for the BUILT-IN-operator streaming twins —
 dedup_stream, daily_active_users, click_purchase_join — under arbitrary
-corpora cut into event-time-ordered micro-batch tranches (round-10
-semantic-audit batch: the last streaming surfaces whose batch agreement
-was pinned only on the single-corpus fixture tests, which drain in ONE
-micro-batch and so never exercise cross-batch state: dedup keys
-surviving tranche boundaries, join state kept alive until the matching
-side arrives batches later, watermark advancement between tranches).
+corpora cut into event-time-ordered micro-batch tranches. The
+single-corpus fixture tests drain in ONE micro-batch and so never
+exercise cross-batch state; these laws do: dedup keys surviving
+tranche boundaries, join state kept alive until the matching side
+arrives batches later, watermark advancement between tranches.
 
 Preconditions the laws encode (and the operators document):
 - tranches are contiguous segments of the global (ts, event_id) order —
@@ -41,7 +40,7 @@ _seq = iter(range(10**6))
 
 
 
-pytestmark = pytest.mark.slow  # long-form tranching fuzz (VERDICT r12 #1): opt-in via -m slow
+pytestmark = pytest.mark.slow  # long-form tranching fuzz: opt-in via -m slow
 
 def _tranche_and_write(spark, rows, cuts, src):
     """Order rows globally by (ts, event_id), cut into contiguous
@@ -454,8 +453,7 @@ def test_tumbling_counts_equals_bruteforce_under_any_tranching(
 def test_sliding_counts_equals_bruteforce_under_any_tranching(
     spark, tmp_path_factory, records, cuts
 ):
-    """sliding_counts law (round-11, closing the last unfuzzed
-    built-in streaming surface): final per-window counts and sums
+    """sliding_counts law: final per-window counts and sums
     (complete mode) equal a pure-Python fold for ANY corpus and
     tranching. With window=1h, slide=30min every event belongs to
     EXACTLY two overlapping windows (starts at floor30(ts) and

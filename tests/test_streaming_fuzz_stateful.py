@@ -2,8 +2,7 @@
 (applyInPandasWithState): attribution_stream and funnel_stream under
 ARBITRARY event sets cut into event-time-ordered micro-batch tranches
 must emit exactly what an independent pure-Python brute force computes
-over everything seen — the cross-batch-law treatment the round-8
-verdict assigned (the fixture tests pin one crafted early/late split;
+over everything seen (the fixture tests pin one crafted early/late split;
 random corpora exercise what a crafted split can't: exact-ts ties cut
 at tranche boundaries, lookback expiry across tranches, users whose
 whole journey lands in one batch vs one event per batch, purchases
@@ -54,7 +53,7 @@ _cuts = st.tuples(st.integers(0, 12), st.integers(0, 12))
 
 
 
-pytestmark = pytest.mark.slow  # long-form tranching fuzz (VERDICT r12 #1): opt-in via -m slow
+pytestmark = pytest.mark.slow  # long-form tranching fuzz: opt-in via -m slow
 
 def _mk_rows(records):
     """(event_id, ts, user_id, event_type, value, props) rows, ids
@@ -338,8 +337,7 @@ _total_records = st.lists(
 def test_running_user_totals_matches_bruteforce_under_any_tranching(
     spark, tmp_path_factory, records, cuts
 ):
-    """running_user_totals law (round-10: the last stateful operator
-    without the fuzz treatment): for ANY event corpus under ANY
+    """running_user_totals law: for ANY event corpus under ANY
     tranching — count/sum are commutative, so unlike attribution/funnel
     this operator needs NO event-time ordering precondition, and the
     law deliberately doesn't impose one — every micro-batch emits one

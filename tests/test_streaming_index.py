@@ -249,8 +249,7 @@ def test_ivf_compact_index_preserves_probes_and_bounds_epochs(
 def test_fold_is_transparent_to_a_resumed_pre_fold_checkpoint(
     spark, emb_parts, tmp_path
 ):
-    """The data-loss hole the round-9 review caught in the first fold
-    design: ingest through checkpoint CK, terminate, fold, then resume
+    """A fold must not lose rows of a resumed checkpoint: ingest through checkpoint CK, terminate, fold, then resume
     the SAME CK with new data. The resumed run keeps its original
     (lower) run base, so under directory-epoch ordering the fold's
     fresh-stride rows would shadow everything it writes from then on.
@@ -311,7 +310,7 @@ def test_fold_is_transparent_to_a_resumed_pre_fold_checkpoint(
 
 
 def test_fold_degenerate_roots_never_burn_a_stride(spark, tmp_path):
-    """Round-10 advisor items: a fold pointed at a MISSING root must
+    """A fold pointed at a MISSING root must
     raise (wrong path, loudly) and a fold on an existing but epoch-less
     root must return None — in BOTH cases before any _runbase_ sentinel
     is claimed, so a scheduled no-op fold never permanently advances
@@ -394,7 +393,7 @@ def test_latest_per_key_tie_break_is_stable(spark):
 
 
 def test_debug_tie_payload_assertion(spark):
-    """DEBUG_ASSERT_TIE_PAYLOADS (round-11, advisor): with the flag on,
+    """DEBUG_ASSERT_TIE_PAYLOADS: with the flag on,
     a recency tie whose payloads DIFFER (an upstream violating
     bit-identical replay) raises instead of silently shadowing the
     fresher write; identical-payload ties (the invariant holding) pass

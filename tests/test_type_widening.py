@@ -1,4 +1,4 @@
-"""Round-11 type-widening reader: mergeSchema refuses int→bigint /
+"""Type-widening reader: mergeSchema refuses int→bigint /
 float→double drift across snapshots (probed: CANNOT_MERGE_SCHEMAS), so
 read_with_type_widening conforms each snapshot to the widened union
 schema and unions by name. These tests pin the widening lattice, the
@@ -173,7 +173,7 @@ _SCALARS = [
     StringType(), TimestampType(),
 ]
 # one nesting level of each container so the recursive widening joins
-# participate in the order-insensitivity / idempotence laws (round 12)
+# participate in the order-insensitivity / idempotence laws
 _TYPES = (
     _SCALARS
     + [ArrayType(t, True) for t in (IntegerType(), LongType(), StringType())]
@@ -232,7 +232,7 @@ def test_widened_union_is_idempotent_and_absorbing(schemas):
 
 
 def test_case_colliding_drift_widens_into_one_column(spark, tmp_path):
-    """r11 ADVICE: a producer drifting ``lang`` → ``LANG`` must yield
+    """A producer drifting ``lang`` → ``LANG`` must yield
     ONE widened column under the first-seen spelling (matching
     conform_to_schema's case-insensitive resolution), not two
     same-named-modulo-case columns that make every downstream
@@ -260,7 +260,7 @@ def test_widened_union_schema_case_sensitive_mode_keeps_both(spark):
 
 
 def test_singleton_snapshot_roots_probed_once(spark, lake, monkeypatch):
-    """r11 ADVICE: the per-path schema probe DataFrame is reused for
+    """The per-path schema probe DataFrame is reused for
     singleton schema-version groups, so N drifted roots cost N reads,
     not 2N. The lake has 2 singleton groups (v1; —) and one pair
     (v2+v3): 3 probes + 1 group re-read = 4 parquet reads total."""
@@ -280,7 +280,7 @@ def test_singleton_snapshot_roots_probed_once(spark, lake, monkeypatch):
 
 
 def test_nested_struct_drift_widens_and_backfills(spark, tmp_path):
-    """Round 12: nested producer drift — props gains a field and
+    """Nested producer drift — props gains a field and
     widens an inner counter (struct<n:int> -> struct<n:bigint,
     lang:string>). Spark refuses struct casts of different arity, so
     conformance rebuilds the struct field-by-field; v1 rows surface
